@@ -273,10 +273,12 @@ def _compile_enc(sch: Any):
     if t in ("int", "long"):
         return lambda out, val: _append_varint(out, int(val))
     if t in ("float", "double"):
-        pack = struct.Struct("<f" if t == "float" else "<d").pack
+        # the format string, not a struct.Struct: compiled codecs ship
+        # to Python workers, and cloudpickle cannot pickle a Struct
+        fmt = "<f" if t == "float" else "<d"
 
-        def enc_fp(out, val, _pack=pack):
-            out += _pack(float(val))
+        def enc_fp(out, val, _fmt=fmt):
+            out += struct.pack(_fmt, float(val))
 
         return enc_fp
     if t in ("bytes", "string"):
@@ -461,12 +463,12 @@ def _compile(sch: Any):
         return _read_long_at
     if t in ("float", "double"):
         width = 4 if t == "float" else 8
-        unpack = struct.Struct("<f" if t == "float" else "<d").unpack_from
+        fmt = "<f" if t == "float" else "<d"  # picklable, unlike a Struct
 
-        def dec_fp(data, pos, _w=width, _unpack=unpack, _t=t):
+        def dec_fp(data, pos, _w=width, _fmt=fmt, _t=t):
             if pos + _w > len(data):
                 raise AvroDecodeError(f"truncated {_t}")
-            return _unpack(data, pos)[0], pos + _w
+            return struct.unpack_from(_fmt, data, pos)[0], pos + _w
 
         return dec_fp
     if t in ("bytes", "string"):

@@ -17,10 +17,14 @@ Three implementations, fastest first:
    equality, so the accepted chain and the seen chain coincide).
    This is the 100 TB plan: one shuffle on the key, whole-stage
    codegen, no Python.
-2. ``delta_dedup_fold`` — batch, arbitrary Python predicate via
-   Arrow-batched ``applyInPandas`` ordered fold per key. This is
-   the reference implementation of the general semantics (and the
-   oracle for the streaming path).
+2. ``delta_dedup_fold`` — batch, arbitrary Python predicate. One
+   exchange on the key into as many partitions as there are cores,
+   a sort by (key, order), then ``mapInPandas`` folds each partition
+   in one linear pass over its Arrow batches: key-run boundaries are
+   found column-wise, and ``is_updated`` runs only on the second and
+   later rows of a run. This is the reference implementation of the
+   general semantics (and the oracle for the streaming path);
+   ``delta_topology`` runs it on every micro-batch.
 3. ``delta_dedup_stream`` — streaming, per-key state via
    ``applyInPandasWithState`` (GroupState holds the last accepted
    record, checkpointed; use the RocksDB state-store provider at
@@ -36,6 +40,7 @@ from __future__ import annotations
 
 from typing import Callable, Sequence
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F, Window
@@ -65,72 +70,80 @@ def delta_dedup_expr(
     return df.withColumn(_MARK, first | changed).filter(F.col(_MARK)).drop(_MARK)
 
 
+def _run_starts(pdf: pd.DataFrame, key_list: list[str], prev_key) -> np.ndarray:
+    """``starts[i]`` is true where row ``i`` opens a new key run.
+
+    Column-wise and null-safe: two nulls are the same key (Spark sorts
+    a key's nulls together, and the fold treats null as one key).
+    ``prev_key`` holds the key values of the row before ``pdf`` — the
+    last row of the previous Arrow batch — or None at the partition
+    start, where row 0 always opens a run.
+    """
+    n = len(pdf)
+    same = np.ones(n, dtype=bool)
+    same[0] = prev_key is not None
+    for j, k in enumerate(key_list):
+        v = pdf[k].to_numpy()
+        na = pd.isna(v)
+        same[1:] &= np.where(na[1:] | na[:-1], na[1:] & na[:-1], v[1:] == v[:-1])
+        if prev_key is not None:
+            p, p_na = prev_key[j], pd.isna(prev_key[j])
+            same[0] &= bool(na[0] and p_na) or bool(not (na[0] or p_na) and v[0] == p)
+    return ~same
+
+
 def delta_dedup_fold(
     df: DataFrame,
     key_cols: Sequence[str],
     order_cols: Sequence[str],
     is_updated: Callable[[dict, dict], bool],
 ) -> DataFrame:
-    """General-predicate delta via per-key ordered fold.
+    """General-predicate delta via an ordered fold per key.
 
-    ``is_updated(old, new)`` receives plain dicts of the row values.
-    Rows are sorted by ``order_cols`` inside each key group (the
-    batch analogue of Kafka offset order). Arrow-batched; state is
-    one row per key, held in memory only for the span of the group.
+    ``is_updated(old, new)`` receives plain dicts of the row values:
+    ``old`` is the last *accepted* record of the key, ``new`` the
+    candidate. Rows are sorted by ``order_cols`` inside each key
+    group (the batch analogue of Kafka offset order).
+
+    One exchange on the key into ``defaultParallelism`` (= the cores)
+    partitions, a sort within partitions by (key, order), then
+    ``mapInPandas`` folds each partition in one linear pass. Per Arrow
+    batch: key-run boundaries are found column-wise, the rows are
+    turned into dicts once, the first row of a run is kept, later rows
+    of the run go through ``is_updated``, and one boolean mask selects
+    the output. The last key and its last accepted record carry into
+    the next Arrow batch, so a run may span batches. Memory is one
+    Arrow batch.
+
+    Every Python task costs a worker round-trip even when it is empty,
+    and AQE does not coalesce this exchange inside ``foreachBatch``, so
+    the exchange is sized to the cores rather than to
+    ``spark.sql.shuffle.partitions``. Its ``HashPartitioning`` on the
+    key also serves a following ``Window.partitionBy(key)``.
     """
     schema: StructType = df.schema
     key_list = list(key_cols)
     order_list = list(order_cols)
 
-    def fold_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        keep = []
-        last: dict | None = None
-        for rec in pdf.to_dict("records"):
-            if last is None or is_updated(last, rec):
-                keep.append(True)
-                last = rec
-            else:
-                keep.append(False)
-        return pdf[pd.Series(keep, index=pdf.index)]
-
     def run(batches):
-        # Many key groups per Python invocation: groupBy().applyInPandas
-        # pays one Arrow worker round-trip PER KEY, which dominates when
-        # keys are many and small (measured 3.0s -> ~0.7s on the q64
-        # shape, 8k keys). Rows arrive hash-partitioned by key and
-        # sorted by (key, order), so a key spans a batch boundary only
-        # at the tail — carried into the next batch; carry memory is
-        # one key group, the same bound applyInPandas had.
-        carry = None
+        prev_key = None  # key of the last row seen
+        last: dict | None = None  # last accepted record of that key
         for pdf in batches:
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
             if len(pdf) == 0:
                 continue
-            lastrow = pdf.iloc[-1]
-            tail = pd.Series(True, index=pdf.index)
-            for k in key_list:
-                kv = lastrow[k]
-                tail &= pdf[k].isna() if pd.isna(kv) else pdf[k].eq(kv)
-            carry = pdf[tail]
-            body = pdf[~tail]
-            if len(body):
-                out = pd.concat(
-                    [
-                        fold_group(g)
-                        for _, g in body.groupby(key_list, sort=False, dropna=False)
-                    ]
-                )
-                if len(out):
-                    yield out
-        if carry is not None and len(carry):
-            out = fold_group(carry)
-            if len(out):
-                yield out
+            starts = _run_starts(pdf, key_list, prev_key)
+            keep = np.zeros(len(pdf), dtype=bool)
+            for i, (start, rec) in enumerate(zip(starts.tolist(), pdf.to_dict("records"))):
+                if start or is_updated(last, rec):
+                    keep[i] = True
+                    last = rec
+            prev_key = tuple(pdf[k].iat[-1] for k in key_list)
+            if keep.any():
+                yield pdf[keep]
 
+    n_parts = df.sparkSession.sparkContext.defaultParallelism
     return (
-        df.repartition(*key_list)
+        df.repartition(n_parts, *key_list)
         .sortWithinPartitions(*key_list, *order_list)
         .mapInPandas(run, schema)
     )

@@ -15,7 +15,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, functions as F
 
 from maston_spark.config import KafkaConfig
-from maston_spark.validated import OK, branch_valid, safe_serialize_json, with_error_headers
+from maston_spark.validated import ERR, OK, branch_valid, safe_serialize_json, with_error_headers
 
 
 def to_kafka_records(
@@ -64,8 +64,9 @@ def split_sink_batch(
 ) -> dict[str, int]:
     """One micro-batch (or batch job) through the reference topology's
     fan-out: serialize safely, attach provenance headers to errors,
-    route. Returns counts for metrics. ``persist`` guarantees the
-    upstream compute runs once even though two sinks consume it.
+    route. Returns counts for metrics, both taken by one aggregate
+    job. ``persist`` guarantees the upstream compute runs once even
+    though the counts and two sinks consume it.
 
     ``serialize`` picks the value serializer (default JSON; pass
     ``lambda d: safe_serialize_avro(d, schema, schema_id)`` for the
@@ -78,14 +79,16 @@ def split_sink_batch(
     prepared = ser(with_error_headers(df, app_id=app_id)).persist()
     try:
         valid, invalid = branch_valid(prepared)
-        n_ok, n_err = valid.count(), invalid.count()
+        n_ok, n_all = prepared.agg(
+            F.count(F.when(F.col(ERR).isNull(), 1)), F.count(F.lit(1))
+        ).first()
         if log_produced:
             from maston_spark.observability import log_produced_records
 
             log_produced_records(valid, batch_id)
         write_valid(valid)
         write_error(invalid)
-        return {"valid": n_ok, "error": n_err}
+        return {"valid": n_ok, "error": n_all - n_ok}
     finally:
         prepared.unpersist()
 

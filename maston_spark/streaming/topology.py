@@ -124,6 +124,10 @@ def _drop_state_versions(spark, state_dir: str, versions: list[int]) -> None:
 # next batch's state read paid the listing + per-file footer cost.
 # delta_topology's active-key snapshot and vocab_saturation's vocab
 # counts are NOT coalesced: those states grow with the key domain.
+# The delta snapshot still lands as at most one file per core: the
+# window that picks it reuses the fold's exchange, which
+# delta_dedup_fold sizes to defaultParallelism (AQE may coalesce the
+# write further).
 _SEG_KINDS = ("v", "d", "c")
 
 
@@ -404,8 +408,10 @@ def delta_topology(
     """Delta consumer: parse → re-key by the recomputed business key
     → per-key emit-iff-updated → split-sink.
 
-    The within-batch fold runs via ``applyInPandas`` inside
-    ``foreachBatch``. Cross-batch suppression state is DURABLE (the
+    The within-batch fold is :func:`maston_spark.delta.delta_dedup_fold`
+    inside ``foreachBatch``: one exchange on the key into as many
+    partitions as there are cores, then one linear ``mapInPandas``
+    pass per partition. Cross-batch suppression state is DURABLE (the
     reference's store persists across the stream —
     topology/TopologyBuilder.java:66-69,87): the last accepted record
     per key lives in a compacted parquet state table under
@@ -432,7 +438,7 @@ def delta_topology(
     validated = _parse_validated(
         source, value_col, value_schema, value_format
     ).withColumn("__business_key", key_col)
-    # applyInPandas sorts by flat column names only — materialize
+    # the fold sorts by flat column names only — materialize
     # (possibly nested) order expressions as temp columns
     ord_aliases = [f"__ord_{i}" for i in range(len(order_cols))]
     for alias, c in zip(ord_aliases, order_cols):

@@ -260,6 +260,47 @@ def test_safe_from_avro_arrow_unsupported_schema_falls_back(spark):
     assert rows[2].ok is None and rows[2].err.code == "FAILED_TO_DESERIALIZE_RECORD"
 
 
+FLOATS = {
+    "name": "F", "type": "record",
+    "fields": [
+        {"name": "k", "type": "long"},
+        {"name": "f", "type": "float"},
+        {"name": "d", "type": ["null", "double"], "default": None},
+    ],
+}
+
+
+def test_float_double_codecs_survive_cloudpickle():
+    """Compiled codecs ship to Python workers by value; a captured
+    ``struct.Struct`` method made any float/double schema unpicklable."""
+    import cloudpickle
+
+    recs = [{"k": 1, "f": 1.5, "d": 2.25}, {"k": -2, "f": -0.5, "d": None}]
+    enc = cloudpickle.loads(cloudpickle.dumps(AC.compile_record_encoder(FLOATS)))
+    dec = cloudpickle.loads(cloudpickle.dumps(AC.compile_record_decoder(FLOATS)))
+    assert [dec(enc(r)) for r in recs] == recs
+    benc = cloudpickle.loads(cloudpickle.dumps(AV.compile_batch_encoder(FLOATS)))
+    bdec = cloudpickle.loads(cloudpickle.dumps(AV.compile_batch_decoder(FLOATS)))
+    framed = benc(pa.array(recs, type=AV.arrow_struct_type(FLOATS)), b"\x00\x00\x00\x00\x07")
+    res = bdec(framed, True)
+    assert not res.errors and res.ok.to_pylist() == recs
+
+
+def test_safe_from_avro_arrow_float_double_on_workers(spark):
+    """``safe_from_avro_arrow`` on a float/double schema runs through a
+    real Spark job (the decoder is pickled to the workers)."""
+    from maston_spark.validated import safe_from_avro_arrow
+
+    good = AC.confluent_wrap(7, AC.encode_record(FLOATS, {"k": 3, "f": 0.25, "d": -1e300}))
+    df = spark.createDataFrame(
+        [Row(id=1, value=good), Row(id=2, value=good[:9])], "id int, value binary"
+    )
+    rows = {r.id: r for r in safe_from_avro_arrow(df, "value", FLOATS).collect()}
+    assert (rows[1].ok.k, rows[1].ok.f, rows[1].ok.d) == (3, 0.25, -1e300)
+    assert rows[1].err is None
+    assert rows[2].ok is None and rows[2].err.code == "FAILED_TO_DESERIALIZE_RECORD"
+
+
 def test_batch_encoder_byte_parity_with_per_record():
     """The vectorized batch encoder must emit BYTE-IDENTICAL output
     to the compiled per-record encoder across the full type matrix:

@@ -3,8 +3,9 @@
 The canonical 6-record sequence (two keys, values
 pass / not-pass / pass each) must emit records 0, 2, 3, 5 — parity:
 topology/VavrKStreamWithDeltaTopologyTest.java:312-331 with fixture
-at :334-376. Both batch paths (expression window and applyInPandas
-fold) and the streaming path (applyInPandasWithState) must agree.
+at :334-376. Both batch paths (expression window and the linear
+``mapInPandas`` fold) and the streaming path (applyInPandasWithState)
+must agree.
 """
 
 from __future__ import annotations
@@ -13,6 +14,7 @@ import shutil
 import tempfile
 
 import pytest
+from hypothesis import given, settings, strategies as st
 from pyspark.sql import Row
 
 from maston_spark.delta import (
@@ -46,6 +48,55 @@ def test_delta_fold_matches_reference_golden(spark):
     df = spark.createDataFrame(GOLDEN)
     out = delta_dedup_fold(df, ["business_key"], ["seq"], ACCEPT)
     assert _emitted(out.collect()) == EXPECTED
+
+
+def _model_fold(rows, key_cols, is_updated):
+    """Pure-Python emit-iff-updated: per key (None is a key value),
+    in ``seq`` order, emit the first record and every record the
+    predicate accepts against the last *accepted* one."""
+    last: dict = {}
+    out = []
+    for r in sorted(rows, key=lambda r: r["seq"]):
+        k = tuple(r[c] for c in key_cols)
+        if k not in last or is_updated(last[k], r):
+            last[k] = r
+            out.append(r["seq"])
+    return sorted(out)
+
+
+# |Δv| >= 2: a record can be suppressed against the last accepted
+# record while differing from the last seen one, so a fold that
+# compared with its predecessor row would disagree with the model
+JUMP = lambda old, new: abs(new["v"] - old["v"]) >= 2  # noqa: E731
+
+
+@settings(max_examples=25, deadline=None)
+@given(
+    keys=st.sampled_from([["k1"], ["k1", "k2"]]),
+    vals=st.lists(
+        st.tuples(
+            st.sampled_from([None, "a", "b"]),
+            st.sampled_from([None, 0, 1]),
+            st.integers(0, 5),
+        ),
+        min_size=1,
+        max_size=40,
+    ),
+)
+def test_prop_delta_fold_matches_model(spark, keys, vals):
+    """The linear fold equals the model on null keys, two-column keys,
+    a predicate where last-accepted != last-seen, and key runs that
+    span Arrow batches (two records per batch)."""
+    rows = [dict(seq=i, k1=a, k2=b, v=v) for i, (a, b, v) in enumerate(vals)]
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(conf)
+    try:
+        spark.conf.set(conf, "2")
+        df = spark.createDataFrame(rows, "seq int, k1 string, k2 int, v int")
+        got = sorted(r.seq for r in delta_dedup_fold(df, keys, ["seq"], JUMP).collect())
+    finally:
+        spark.conf.set(conf, prev)
+    assert got == _model_fold(rows, keys, JUMP)
 
 
 def test_delta_expr_change_semantics(spark):

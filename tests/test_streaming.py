@@ -235,6 +235,56 @@ def test_delta_topology_state_survives_micro_batches(spark, cleanup):
     assert sorted(r.ok.seq for r in sunk["valid"]) == [0, 2, 3, 5]
 
 
+def test_delta_topology_batch_tasks_bounded_by_cores(spark, cleanup):
+    """Every Python task costs a worker round-trip even when empty, and
+    AQE does not coalesce the fold's exchange inside ``foreachBatch``,
+    so no stage of a delta micro-batch may run more than the cores
+    (+1 for the union with the DLQ branch). Shuffle partitions are set
+    to the session default of 32 so a fold sized by that setting
+    fails here."""
+    rows = [
+        Row(value=_payload(f"key-{i % 40}", f"v{i % 3}", i), __replay_batch=i // 200)
+        for i in range(400)
+    ]
+    stream, src = replay_stream(spark.createDataFrame(rows), batches=2)
+    chk = _tmp()
+    cleanup.extend([src, chk])
+    conf = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "32")
+    try:
+        q = delta_topology(
+            stream,
+            SCHEMA,
+            app_id="t-delta-tasks",
+            checkpoint=chk,
+            business_key=F.col("ok.business_key"),
+            order_cols=["ok.seq"],
+            is_updated=lambda old, new: old["ok"]["string_value"]
+            != new["ok"]["string_value"],
+            write_valid=lambda df: df.write.format("noop").mode("overwrite").save(),
+            write_error=lambda df: df.write.format("noop").mode("overwrite").save(),
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+    finally:
+        spark.conf.set(conf, prev)
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(q.runId)
+    assert jobs, "the micro-batch jobs must run under the query's run id"
+    ran = {}
+    for j in jobs:
+        for sid in tracker.getJobInfo(j).stageIds:
+            info = tracker.getStageInfo(sid)
+            if info is not None:
+                ran[sid] = info.numCompletedTasks + info.numFailedTasks
+    assert max(ran.values()) <= sc.defaultParallelism + 1, ran
+
+
 DOC_SCHEMA = "doc_id bigint, text string"
 
 # permissive gate: only the token-count floor can fire, so the test
