@@ -550,8 +550,7 @@ def bucket_of_edges(col: Column, edges: "list[float]") -> Column:
 
 def merge_bin_counts(a: DataFrame, b: DataFrame) -> DataFrame:
     """Additive-counter merge for ``(bin, n)`` frames — the drift
-    monitor's cross-batch state fold (the CMS discipline: counters
-    ADD, so a retry must never re-merge — callers own that corner)."""
+    monitor's cross-batch state fold."""
     return (
         a.unionByName(b)
         .groupBy("bin")

@@ -320,11 +320,9 @@ def cms_sketch(df: DataFrame, item_col: str, depth: int, width: int) -> DataFram
 
 
 def cms_merge(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Merge two count-min grids: cell-wise SUM — the ADDITIVE merge
-    (the CMS discipline: a retry must never re-merge, unlike the
-    idempotent KMV/HLL folds). Shared by the streaming
-    ``cms_watchlist_topology``'s cross-batch state fold and its
-    oracle-graded batch twin (q211), so the streaming path and the
+    """Merge two count-min grids: cell-wise SUM. Shared by the
+    streaming ``cms_watchlist_topology``'s cross-batch state fold and
+    its oracle-graded batch twin (q211), so the streaming path and the
     graded path cannot drift apart."""
     return (
         a.unionByName(b)

@@ -80,59 +80,43 @@ def _start_foreach_batch(df: DataFrame, fn, checkpoint: str, trigger: dict | Non
     return writer.start()
 
 
-def _state_versions(spark, state_dir: str) -> list[int]:
-    """List committed state versions (``v<N>`` subdirs) via the Hadoop
-    FileSystem API, so the state table works on local FS, HDFS, or
-    object stores alike."""
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(state_dir)
-    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(path):
-        return []
-    out = []
-    for st in fs.listStatus(path):
-        name = st.getPath().getName()
-        if name.startswith("v") and name[1:].isdigit():
-            out.append(int(name[1:]))
-    return sorted(out)
-
-
-def _drop_state_versions(spark, state_dir: str, versions: list[int]) -> None:
-    jvm = spark._jvm
-    base = jvm.org.apache.hadoop.fs.Path(state_dir)
-    fs = base.getFileSystem(spark._jsc.hadoopConfiguration())
-    for v in versions:
-        fs.delete(jvm.org.apache.hadoop.fs.Path(state_dir, f"v{v}"), True)
-
-
-# Curation-state segment layout (curation_topology only — the other
-# topologies' state IS a bounded sketch, so their full-rewrite v<N>
-# snapshots are already O(sketch), not O(history)):
-#   d<N>  per-batch DELTA — only batch N's accepted rows
-#   c<N>  COMPACTED run — the merged live rows of every segment < N+1
-#   v<N>  legacy full snapshot (pre-segment layout), read-compatible
-# A batch appends one delta (O(batch) write); a compaction pass folds
-# accumulated segments into one run so the reader's file count stays
-# bounded. Rows carry their accepting batch id in column `b`, which
-# is what makes age-based retention a row filter rather than a
-# file-granularity guess.
+# State layout. Every durable store is a directory of segments named
+# <kind><N>, listed and dropped through the Hadoop FileSystem API so the
+# store works on local FS, HDFS or object stores alike:
+#   v<N>  full snapshot written by batch N (delta_topology and the
+#         sketch/counter monitors; legacy curation/vocab layout)
+#   d<N>  per-batch DELTA — only batch N's rows (curation, vocab)
+#   c<N>  COMPACTED run — the merged rows of every segment <= N
 #
-# round-17 (guide §6 small-files): every BOUNDED state write —
-# curation deltas/compactions and the sketch topologies' v<N>
-# snapshots — lands as ONE part file (coalesce(1)); a sketch-sized
-# frame written at shuffle parallelism was ~16 part files, and the
-# next batch's state read paid the listing + per-file footer cost.
-# delta_topology's active-key snapshot and vocab_saturation's vocab
-# counts are NOT coalesced: those states grow with the key domain.
-# The delta snapshot still lands as at most one file per core: the
-# window that picks it reuses the fold's exchange, which
-# delta_dedup_fold sizes to defaultParallelism (AQE may coalesce the
-# write further).
+# Snapshot rule: batch B folds its input into the newest v<N> with
+# N < B and writes v<B>. Structured Streaming starts batch B only after
+# B-1 has committed, so every version below the newest prior one is
+# dead and B drops it before writing; the prior version itself stays
+# until a later batch runs. A retried B therefore finds the same prior
+# version and recomputes the same state and the same output, whether
+# the fold is a set union or an additive sum.
+#
+# Curation and vocab append one delta per batch (O(batch) write) and a
+# compaction pass folds accumulated segments into one run so the
+# reader's file count stays bounded. Curation rows carry their
+# accepting batch id in column `b`, which is what makes age-based
+# retention a row filter rather than a file-granularity guess.
+#
+# Small files: every BOUNDED state write — curation deltas/compactions
+# and the sketch topologies' v<N> snapshots — lands as ONE part file
+# (coalesce(1)); a sketch-sized frame written at shuffle parallelism
+# was ~16 part files, and the next batch's state read paid the listing
+# + per-file footer cost. delta_topology's active-key snapshot and
+# vocab_saturation's vocab counts are NOT coalesced: those states grow
+# with the key domain. The delta snapshot still lands as at most one
+# file per core: the window that picks it reuses the fold's exchange,
+# which delta_dedup_fold sizes to defaultParallelism (AQE may coalesce
+# the write further).
 _SEG_KINDS = ("v", "d", "c")
 
 
-def _curation_segments(spark, state_dir: str) -> list[tuple[str, int]]:
-    """Live curation state segments as sorted ``(kind, id)`` pairs."""
+def _state_segments(spark, state_dir: str) -> list[tuple[str, int]]:
+    """Live state segments as sorted ``(kind, id)`` pairs."""
     jvm = spark._jvm
     path = jvm.org.apache.hadoop.fs.Path(state_dir)
     fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
@@ -154,6 +138,36 @@ def _drop_segments(spark, state_dir: str, segs: list[tuple[str, int]]) -> None:
         fs.delete(jvm.org.apache.hadoop.fs.Path(state_dir, f"{kind}{v}"), True)
 
 
+def _state_dir(source: DataFrame, checkpoint: str, state_dir: str | None, name: str):
+    """Resolve a topology's ``state_dir`` argument: ``"auto"`` is
+    ``<checkpoint>/<name>`` and ``None`` opts out of durable state. A
+    resolved dir is tied to ``checkpoint`` by :func:`_ensure_state_owner`."""
+    sdir = f"{checkpoint.rstrip('/')}/{name}" if state_dir == "auto" else state_dir
+    if sdir is not None:
+        _ensure_state_owner(source.sparkSession, sdir, checkpoint)
+    return sdir
+
+
+def _prior_state(spark, sdir: str | None, batch_id: int) -> DataFrame | None:
+    """The snapshot batch ``batch_id`` folds into: the newest ``v<N>``
+    with ``N < batch_id``, or None (also without a state dir). Older
+    versions are dropped here (the snapshot rule above)."""
+    if sdir is None:
+        return None
+    prior = [s for s in _state_segments(spark, sdir) if s[0] == "v" and s[1] < batch_id]
+    if not prior:
+        return None
+    _drop_segments(spark, sdir, prior[:-1])
+    return spark.read.parquet(f"{sdir}/v{prior[-1][1]}")
+
+
+def _write_state(df: DataFrame, sdir: str | None, batch_id: int) -> None:
+    """Write batch ``batch_id``'s snapshot as one part file (a no-op
+    without a state dir)."""
+    if sdir is not None:
+        df.coalesce(1).write.mode("overwrite").parquet(f"{sdir}/v{batch_id}")
+
+
 def _read_curation_state(
     spark,
     state_dir: str,
@@ -173,7 +187,7 @@ def _read_curation_state(
     from functools import reduce
 
     if segs is None:
-        segs = _curation_segments(spark, state_dir)
+        segs = _state_segments(spark, state_dir)
     segs = [s for s in segs if s[1] < upto]
     frames = []
     for kind, sid in segs:
@@ -219,7 +233,7 @@ def _maybe_compact_curation_state(
        overwritten in place — the next batch folds it safely.
     """
     segs = [
-        s for s in _curation_segments(spark, state_dir) if s[1] < batch_id
+        s for s in _state_segments(spark, state_dir) if s[1] < batch_id
     ]
     if retention is not None:
         horizon = batch_id + 1 - retention  # rows probed by batch B+1
@@ -249,13 +263,13 @@ def _maybe_compact_curation_state(
 def _ensure_state_owner(spark, state_dir: str, checkpoint: str) -> None:
     """Guard against an explicit ``state_dir`` being reused with a
     FRESH checkpoint: batch ids restart at 0 there, so the previous
-    run's ``v0`` would be mistaken for this run's own retry version
-    (the retry corner in the batch fn) and wrongly suppress
-    first-batch records. An ``_owner`` marker ties the state table to
-    the checkpoint it belongs to; on mismatch the stale versions are
-    dropped — a new checkpoint is a new stream, so its state starts
-    empty. A restart of the SAME checkpoint matches the marker and
-    keeps its durable state (that's the point of the table)."""
+    run's segments (a stale ``c<N>`` run in a curation or vocab store
+    above all) would be read as this stream's history. An ``_owner``
+    marker ties the state table to the checkpoint it belongs to; on
+    mismatch the stale segments are dropped — a new checkpoint is a
+    new stream, so its state starts empty. A restart of the SAME
+    checkpoint matches the marker and keeps its durable state (that's
+    the point of the table)."""
     jvm = spark._jvm
     base = jvm.org.apache.hadoop.fs.Path(state_dir)
     fs = base.getFileSystem(spark._jsc.hadoopConfiguration())
@@ -269,7 +283,7 @@ def _ensure_state_owner(spark, state_dir: str, checkpoint: str) -> None:
             ins.close()
         if existing == owner:
             return
-        _drop_segments(spark, state_dir, _curation_segments(spark, state_dir))
+        _drop_segments(spark, state_dir, _state_segments(spark, state_dir))
     out = fs.create(marker, True)
     try:
         out.write(bytearray(owner.encode("utf-8")))
@@ -415,13 +429,13 @@ def delta_topology(
     reference's store persists across the stream —
     topology/TopologyBuilder.java:66-69,87): the last accepted record
     per key lives in a compacted parquet state table under
-    ``state_dir`` (default ``<checkpoint>/delta_state``), versioned
-    per batch-id so a batch retry rewrites its own version
-    idempotently instead of corrupting the table it reads. Each
-    micro-batch seeds the fold with the stored record per key, so a
-    record unchanged across two batches stays suppressed — the golden
-    sequence of topology/VavrKStreamWithDeltaTopologyTest.java:312-331
-    emits 0,2,3,5 regardless of how the records split into batches.
+    ``state_dir`` (default ``<checkpoint>/delta_state``), one
+    ``v<batch_id>`` snapshot per batch. Each micro-batch seeds the
+    fold with the record per key stored by the newest earlier batch,
+    so a record unchanged across two batches stays suppressed — the
+    golden sequence of
+    topology/VavrKStreamWithDeltaTopologyTest.java:312-331 emits
+    0,2,3,5 regardless of how the records split into batches.
 
     Scale note: the state rewrite per batch is a full compaction of
     the active key set — one shuffle on the key plus a parquet write,
@@ -448,9 +462,7 @@ def delta_topology(
         write_valid, write_error, app_id=app_id, on_metrics=on_metrics,
         serialize=serialize, log_produced=log_records,
     )
-    sdir = f"{checkpoint.rstrip('/')}/delta_state" if state_dir == "auto" else state_dir
-    if sdir is not None:
-        _ensure_state_owner(source.sparkSession, sdir, checkpoint)
+    sdir = _state_dir(source, checkpoint, state_dir, "delta_state")
     SEQ = "__seq"  # 0 = state seed (sorts before every batch row)
 
     def fn(batch_df: DataFrame, batch_id: int) -> None:
@@ -462,49 +474,27 @@ def delta_topology(
             # reference's branch happens before the transformer)
             invalid = batch_df.filter(F.col("err").isNotNull())
             valid = batch_df.filter(F.col("err").isNull() & F.col(OK).isNotNull())
-            if sdir is None:
-                deduped = delta_dedup_fold(
-                    valid, ["__business_key"], ord_aliases, is_updated
-                )
-                split(deduped.unionByName(invalid).drop(*ord_aliases), batch_id)
-                return
-
             combined = valid.withColumn(SEQ, F.lit(1))
-            versions = _state_versions(spark, sdir)
-            prior = [v for v in versions if v < batch_id]
-            # Retry corner: a crash after cleanup but before the
-            # checkpoint commit leaves only this batch's own version;
-            # seeding from it keeps already-stored records suppressed
-            # (at-least-once delivery still holds). Reading and then
-            # overwriting the same path needs the seed materialized
-            # first — localCheckpoint cuts the lineage eagerly.
-            seed_v = prior[-1] if prior else (batch_id if batch_id in versions else None)
-            if seed_v is not None:
-                seed = spark.read.parquet(f"{sdir}/v{seed_v}")
-                if seed_v == batch_id:
-                    seed = seed.localCheckpoint(eager=True)
+            seed = _prior_state(spark, sdir, batch_id)
+            if seed is not None:
                 combined = combined.unionByName(seed.withColumn(SEQ, F.lit(0)))
             accepted = delta_dedup_fold(
                 combined, ["__business_key"], [SEQ, *ord_aliases], is_updated
             ).persist()
-            # last accepted per key (seed included, so idle keys keep
-            # their state) becomes the next compacted state version
-            w = Window.partitionBy("__business_key").orderBy(
-                F.col(SEQ).desc(), *[F.col(a).desc_nulls_last() for a in ord_aliases]
-            )
-            new_state = (
-                accepted.withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") == 1)
-                .drop("__rn", SEQ)
-            )
-            new_state.write.mode("overwrite").parquet(f"{sdir}/v{batch_id}")
+            if sdir is not None:
+                # last accepted per key (seed included, so idle keys
+                # keep their state) becomes the next state version
+                w = Window.partitionBy("__business_key").orderBy(
+                    F.col(SEQ).desc(), *[F.col(a).desc_nulls_last() for a in ord_aliases]
+                )
+                new_state = (
+                    accepted.withColumn("__rn", F.row_number().over(w))
+                    .filter(F.col("__rn") == 1)
+                    .drop("__rn", SEQ)
+                )
+                new_state.write.mode("overwrite").parquet(f"{sdir}/v{batch_id}")
             emitted = accepted.filter(F.col(SEQ) == 1).drop(SEQ)
             split(emitted.unionByName(invalid).drop(*ord_aliases), batch_id)
-            # old versions are only dropped after the sinks consumed
-            # this batch; a crash before this point leaves extra
-            # versions behind, which the next batch ignores (reads
-            # max(version < batch_id)) — never a correctness issue
-            _drop_state_versions(spark, sdir, prior)
         finally:
             if accepted is not None:
                 accepted.unpersist()
@@ -613,13 +603,10 @@ def curation_topology(
     are rejected, where a sequential scan would re-accept c. The
     conservative side errs toward dropping a borderline near-copy,
     never toward accepting a duplicate.
-    The band buckets and signatures ride in the same versioned state
-    table as the exact hashes; crucially the state is a SET under
-    union (idempotent, unlike additive counters), so the versioned
-    crash-retry overwrite is safe — the CMS-vs-KMV merge lesson
-    (SCALE.md) applied to dedup state. State written before this
-    feature existed lacks the columns and is read as empty arrays
-    (older docs suppress exact copies only).
+    The band buckets and signatures ride in the same segmented state
+    table as the exact hashes. State written before this feature
+    existed lacks the columns and is read as empty arrays (older docs
+    suppress exact copies only).
 
     Parity anchors: topology/TopologyBuilder.java:30-50 (validate →
     branch → DLQ shape), error/KafkaErrorToHeaderBuilder.java:16-26
@@ -645,13 +632,7 @@ def curation_topology(
 
     spark = source.sparkSession
     validated = _parse_validated(source, value_col, value_schema, value_format)
-    sdir = (
-        f"{checkpoint.rstrip('/')}/curation_state"
-        if state_dir == "auto"
-        else state_dir
-    )
-    if sdir is not None:
-        _ensure_state_owner(spark, sdir, checkpoint)
+    sdir = _state_dir(source, checkpoint, state_dir, "curation_state")
 
     # reference-corpus structures build ONCE at topology start
     bitmap = np.frombuffer(
@@ -669,7 +650,7 @@ def curation_topology(
         # restart: replay accepted-doc bloom positions from the live
         # state segments (retention applies relative to the next
         # batch — aged-out rows stay out of the probe, by design)
-        segs = _curation_segments(spark, sdir)
+        segs = _state_segments(spark, sdir)
         if segs:
             nxt = max(sid for _, sid in segs) + 1
             prev = _read_curation_state(
@@ -776,18 +757,13 @@ def curation_topology(
             ).withColumn("__h", content_hash(text_of))
 
             # exact-confirm table: historical corpus + durable state.
-            # Retry corner — deliberately NOT delta_topology's
-            # self-seed: there, seeding from the batch's own version
-            # only re-suppresses an already-stored record (harmless);
-            # HERE it would reclassify every doc the failed attempt
-            # accepted as a DuplicateRecord, so a crash between the
-            # state write and the sink delivery would drop those docs
-            # from the valid stream forever. Seeding strictly from
-            # rows with b < batch_id (enforced inside
-            # _read_curation_state) means a retried batch re-accepts
-            # its own docs (at-least-once delivery to the valid sink —
-            # the correct failure mode for ingest), and the own-delta
-            # overwrite at the end of this function stays idempotent.
+            # Like the v<N> stores, a batch reads only strictly-prior
+            # state (rows with b < batch_id, enforced inside
+            # _read_curation_state): seeding from a failed attempt's
+            # own delta would reclassify every doc it accepted as a
+            # DuplicateRecord and drop it from the valid stream. A
+            # retried batch re-accepts its own docs and overwrites
+            # its own delta with the same rows.
             hist = ref_hashes
             seed = None
             if sdir is not None:
@@ -1081,10 +1057,9 @@ def sketch_metrics_topology(
     The cross-batch state IS the sketch — at most ``groups × k``
     ``(g, h)`` hash rows, durable in a compacted parquet table under
     ``state_dir`` (default ``<checkpoint>/kmv_state``), versioned per
-    batch id exactly like ``delta_topology``'s store (a batch retry
-    rewrites its own version idempotently; restart resumes from the
-    last committed version, so estimates never regress). Merging a
-    batch is the KMV union property
+    batch id exactly like ``delta_topology``'s store (restart resumes
+    from the last committed version, so estimates never regress).
+    Merging a batch is the KMV union property
     (:func:`maston_spark.sketches.kmv_truncate`): union the stored
     survivors with the batch's distinct hashes and re-keep the k
     minima — the result is bit-identical to sketching the whole
@@ -1098,9 +1073,7 @@ def sketch_metrics_topology(
     """
     from maston_spark.sketches import h60, kmv_estimate, kmv_truncate
 
-    sdir = f"{checkpoint.rstrip('/')}/kmv_state" if state_dir == "auto" else state_dir
-    if sdir is not None:
-        _ensure_state_owner(source.sparkSession, sdir, checkpoint)
+    sdir = _state_dir(source, checkpoint, state_dir, "kmv_state")
 
     hashed = source.select(
         F.col(group_col).alias("g"), h60(F.col(value_col).cast("string")).alias("h")
@@ -1109,21 +1082,12 @@ def sketch_metrics_topology(
     def fn(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         combined = batch_df.dropDuplicates(["g", "h"])
-        if sdir is not None:
-            versions = _state_versions(spark, sdir)
-            prior = [v for v in versions if v < batch_id]
-            seed_v = prior[-1] if prior else (batch_id if batch_id in versions else None)
-            if seed_v is not None:
-                seed = spark.read.parquet(f"{sdir}/v{seed_v}")
-                if seed_v == batch_id:
-                    seed = seed.localCheckpoint(eager=True)
-                combined = combined.unionByName(seed)
+        seed = _prior_state(spark, sdir, batch_id)
+        if seed is not None:
+            combined = combined.unionByName(seed)
         sk = kmv_truncate(combined, k).persist()
         try:
-            if sdir is not None:
-                sk.select("g", "h").coalesce(1).write.mode("overwrite").parquet(
-                    f"{sdir}/v{batch_id}"
-                )
+            _write_state(sk.select("g", "h"), sdir, batch_id)
             est = kmv_estimate(
                 sk.select(F.col("g").alias(group_col), "h", "rn"), group_col, k
             )
@@ -1136,8 +1100,6 @@ def sketch_metrics_topology(
                 ),
                 batch_id,
             )
-            if sdir is not None:
-                _drop_state_versions(spark, sdir, prior)
         finally:
             sk.unpersist()
 
@@ -1178,39 +1140,21 @@ def cms_watchlist_topology(
     merge touches 2·d·w rows; the probe joins the broadcast grid
     against the |watch|-row list.
     """
-    from maston_spark.sketches import _cms_cells, cms_sketch
+    from maston_spark.sketches import _cms_cells, cms_merge, cms_sketch
 
-    sdir = f"{checkpoint.rstrip('/')}/cms_state" if state_dir == "auto" else state_dir
-    if sdir is not None:
-        _ensure_state_owner(source.sparkSession, sdir, checkpoint)
+    sdir = _state_dir(source, checkpoint, state_dir, "cms_state")
 
     items = source.select(F.col(item_col).alias("item"))
 
     def fn(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         g = cms_sketch(batch_df, "item", depth, width)
-        if sdir is not None:
-            versions = _state_versions(spark, sdir)
-            prior = [v for v in versions if v < batch_id]
-            seed_v = prior[-1] if prior else (batch_id if batch_id in versions else None)
-            if seed_v is not None and seed_v == batch_id:
-                # Retry corner: the stored v{batch_id} ALREADY contains
-                # this batch's counts. Unlike delta's dedup fold or
-                # KMV's set union, the CMS merge is ADDITIVE — merging
-                # the recomputed batch grid on top would double-count —
-                # so the stored grid is the whole truth: use it as-is.
-                g = spark.read.parquet(f"{sdir}/v{batch_id}").localCheckpoint(
-                    eager=True
-                )
-            elif seed_v is not None:
-                from maston_spark.sketches import cms_merge
-
-                seed = spark.read.parquet(f"{sdir}/v{seed_v}")
-                g = cms_merge(g, seed)
+        seed = _prior_state(spark, sdir, batch_id)
+        if seed is not None:
+            g = cms_merge(g, seed)
         g = g.persist()
         try:
-            if sdir is not None:
-                g.coalesce(1).write.mode("overwrite").parquet(f"{sdir}/v{batch_id}")
+            _write_state(g, sdir, batch_id)
             probes = spark.createDataFrame(
                 [(w,) for w in watch], "item string"
             )
@@ -1228,8 +1172,6 @@ def cms_watchlist_topology(
                 .agg(F.min("cnt").cast("long").alias("est_count"))
             )
             write_metrics(est, batch_id)
-            if sdir is not None:
-                _drop_state_versions(spark, sdir, prior)
         finally:
             g.unpersist()
 
@@ -1267,10 +1209,7 @@ def quantile_metrics_topology(
     identity, so every emitted estimate is bit-identical to
     sketching the whole history in one pass (the property
     :func:`kll_quantiles` deliberately trades away for better rank
-    error per byte; monitoring wants restart-invariance). The
-    idempotent-union property also makes the retry corner trivial:
-    self-seeding from the batch's own crashed version cannot
-    double-count, exactly the KMV-not-CMS state discipline.
+    error per byte; monitoring wants restart-invariance).
 
     Scale shape per batch: the batch (not history) is hashed and
     bottom-k-folded inside its scan; the merge window runs over ≤
@@ -1283,13 +1222,7 @@ def quantile_metrics_topology(
         quantile_sample_merge,
     )
 
-    sdir = (
-        f"{checkpoint.rstrip('/')}/quantile_state"
-        if state_dir == "auto"
-        else state_dir
-    )
-    if sdir is not None:
-        _ensure_state_owner(source.sparkSession, sdir, checkpoint)
+    sdir = _state_dir(source, checkpoint, state_dir, "quantile_state")
 
     hashed = source.select(
         F.col(group_col).alias("g"),
@@ -1300,41 +1233,23 @@ def quantile_metrics_topology(
     def fn(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         w = Window.partitionBy("g").orderBy("h", "value")
-        batch_sk = (
+        sk = (
             batch_df.withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") <= k)
             .drop("__rn")
         )
-        combined = batch_sk
-        if sdir is not None:
-            versions = _state_versions(spark, sdir)
-            prior = [v for v in versions if v < batch_id]
-            # bottom-k union is idempotent, so self-seeding from this
-            # batch's own crashed version is harmless (KMV-not-CMS)
-            seed_v = (
-                prior[-1]
-                if prior
-                else (batch_id if batch_id in versions else None)
-            )
-            if seed_v is not None:
-                seed = spark.read.parquet(f"{sdir}/v{seed_v}")
-                if seed_v == batch_id:
-                    seed = seed.localCheckpoint(eager=True)
-                combined = quantile_sample_merge(batch_sk, seed, k)
-        sk = combined.persist()
+        seed = _prior_state(spark, sdir, batch_id)
+        if seed is not None:
+            sk = quantile_sample_merge(sk, seed, k)
+        sk = sk.persist()
         try:
-            if sdir is not None:
-                sk.select("g", "h", "value").coalesce(1).write.mode("overwrite").parquet(
-                    f"{sdir}/v{batch_id}"
-                )
+            _write_state(sk.select("g", "h", "value"), sdir, batch_id)
             write_metrics(
                 quantile_sample_estimate(sk, "g", qs).withColumnRenamed(
                     "g", group_col
                 ),
                 batch_id,
             )
-            if sdir is not None and prior:
-                _drop_state_versions(spark, sdir, prior)
         finally:
             sk.unpersist()
 
@@ -1365,11 +1280,8 @@ def drift_monitor_topology(
     distribution moved since training"), with n_bins cells of state
     no matter how many rows flow past.
 
-    State discipline: the per-bin counters are ADDITIVE (the CMS
-    case, not the KMV case), so the retry corner reads the batch's
-    own stored version AS the whole truth instead of re-merging —
-    re-adding a recomputed batch would double-count
-    (:func:`cms_watchlist_topology`'s documented discipline). The
+    State: the per-bin counters, folded additively into the same
+    versioned snapshot layout as ``delta_topology``'s store. The
     reference pmf and edges are fixed at start; every emitted TVD is
     the exact cross-multiplied int64 statistic over
     (running counts, reference counts).
@@ -1379,19 +1291,14 @@ def drift_monitor_topology(
     # the streaming path and the graded path cannot drift apart
     from maston_spark.profiling import (
         bucket_of_edges,
+        merge_bin_counts,
         ref_bin_edges,
         tvd_from_counts,
     )
 
     if n_bins < 2:
         raise ValueError("n_bins must be >= 2")
-    sdir = (
-        f"{checkpoint.rstrip('/')}/drift_state"
-        if state_dir == "auto"
-        else state_dir
-    )
-    if sdir is not None:
-        _ensure_state_owner(source.sparkSession, sdir, checkpoint)
+    sdir = _state_dir(source, checkpoint, state_dir, "drift_state")
 
     edges = ref_bin_edges(ref, value_col, n_bins)
     refv = ref.filter(F.col(value_col).isNotNull()).select(
@@ -1417,29 +1324,12 @@ def drift_monitor_topology(
         g = batch_df.groupBy("bin").agg(
             F.count(F.lit(1)).cast("long").alias("n")
         )
-        if sdir is not None:
-            versions = _state_versions(spark, sdir)
-            prior = [v for v in versions if v < batch_id]
-            seed_v = (
-                prior[-1]
-                if prior
-                else (batch_id if batch_id in versions else None)
-            )
-            if seed_v is not None and seed_v == batch_id:
-                # additive counters: the stored version already holds
-                # this batch — re-adding would double-count
-                g = spark.read.parquet(f"{sdir}/v{batch_id}").localCheckpoint(
-                    eager=True
-                )
-            elif seed_v is not None:
-                from maston_spark.profiling import merge_bin_counts
-
-                seed = spark.read.parquet(f"{sdir}/v{seed_v}")
-                g = merge_bin_counts(g, seed)
+        seed = _prior_state(spark, sdir, batch_id)
+        if seed is not None:
+            g = merge_bin_counts(g, seed)
         g = g.persist()
         try:
-            if sdir is not None:
-                g.coalesce(1).write.mode("overwrite").parquet(f"{sdir}/v{batch_id}")
+            _write_state(g, sdir, batch_id)
             stream_counts = {r["bin"]: r["n"] for r in g.collect()}
             n_i = [int(stream_counts.get(b, 0)) for b in range(n_bins)]
             n_tot = sum(n_i)
@@ -1451,8 +1341,6 @@ def drift_monitor_topology(
                 ),
                 batch_id,
             )
-            if sdir is not None:
-                _drop_state_versions(spark, sdir, prior)
         finally:
             g.unpersist()
 
@@ -1486,12 +1374,11 @@ def hll_rolling_topology(
     ``(__day, bucket, mj)`` rows, durable in versioned parquet under
     ``state_dir`` (default ``<checkpoint>/hll_state``), versioned per
     batch id like the other stores. Merging a batch is the HLL union
-    property: per-(day, bucket) MAX of stored and batch registers —
-    MAX is IDEMPOTENT, so a crash-retry overwrite of the same
-    version is harmless (the KMV-not-CMS discipline), and the merged
-    state is bit-identical to sketching the whole history in one
-    pass — which makes every emitted estimate equal to the batch
-    twin's one-shot answer over the data so far (golden-tested).
+    property: per-(day, bucket) MAX of stored and batch registers, so
+    the merged state is bit-identical to sketching the whole history
+    in one pass — which makes every emitted estimate equal to the
+    batch twin's one-shot answer over the data so far
+    (golden-tested).
 
     ``retention_days`` bounds state for unbounded streams: days older
     than the newest day minus ``retention_days`` are dropped at write
@@ -1505,9 +1392,7 @@ def hll_rolling_topology(
     """
     from maston_spark.sketches import hll_raw_estimate, hll_registers
 
-    sdir = f"{checkpoint.rstrip('/')}/hll_state" if state_dir == "auto" else state_dir
-    if sdir is not None:
-        _ensure_state_owner(source.sparkSession, sdir, checkpoint)
+    sdir = _state_dir(source, checkpoint, state_dir, "hll_state")
 
     proj = source.select(
         F.date_trunc("day", F.col(ts_col)).cast("date").alias("__day"),
@@ -1517,16 +1402,9 @@ def hll_rolling_topology(
     def fn(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         combined = hll_registers(batch_df, "__day", "__v", p=p)
-        prior: list[int] = []
-        if sdir is not None:
-            versions = _state_versions(spark, sdir)
-            prior = [v for v in versions if v < batch_id]
-            seed_v = prior[-1] if prior else (batch_id if batch_id in versions else None)
-            if seed_v is not None:
-                seed = spark.read.parquet(f"{sdir}/v{seed_v}")
-                if seed_v == batch_id:
-                    seed = seed.localCheckpoint(eager=True)
-                combined = combined.unionByName(seed)
+        seed = _prior_state(spark, sdir, batch_id)
+        if seed is not None:
+            combined = combined.unionByName(seed)
         state = combined.groupBy("__day", "bucket").agg(
             F.max("mj").alias("mj")
         )
@@ -1542,8 +1420,7 @@ def hll_rolling_topology(
             )
         state = state.persist()
         try:
-            if sdir is not None:
-                state.coalesce(1).write.mode("overwrite").parquet(f"{sdir}/v{batch_id}")
+            _write_state(state, sdir, batch_id)
             days = state.select(F.col("__day").alias("day")).distinct()
             merged = (
                 F.broadcast(days)
@@ -1559,8 +1436,6 @@ def hll_rolling_topology(
             write_metrics(
                 hll_raw_estimate(merged, ["day"], p=p).orderBy("day"), batch_id
             )
-            if sdir is not None:
-                _drop_state_versions(spark, sdir, prior)
         finally:
             state.unpersist()
 
@@ -1592,17 +1467,13 @@ def srm_monitor_topology(
 
     Cross-batch state is the ≤|arms|-row ``(variant, n_obs)`` table,
     durable in the same versioned compacted parquet layout as
-    ``delta_topology``'s store. The fold is ADDITIVE (counter
-    semantics — the CMS discipline), so the crash-retry corner reads
-    the stored v{batch_id} as the whole truth rather than re-adding
-    the batch. Per batch: one combiner-reduced count aggregation,
+    ``delta_topology``'s store, folded additively (counter
+    semantics). Per batch: one combiner-reduced count aggregation,
     a ≤|arms|-row merge, and the |arms|-row closing chi-square —
     state and emit are both design-bounded no matter the traffic."""
     from maston_spark.evaluation import srm_from_counts
 
-    sdir = f"{checkpoint.rstrip('/')}/srm_state" if state_dir == "auto" else state_dir
-    if sdir is not None:
-        _ensure_state_owner(source.sparkSession, sdir, checkpoint)
+    sdir = _state_dir(source, checkpoint, state_dir, "srm_state")
 
     known = sorted({str(k) for k in expected}, key=str)
     items = source.select(F.col(variant_col).cast("string").alias("variant"))
@@ -1620,33 +1491,20 @@ def srm_monitor_topology(
             .groupBy("variant")
             .agg(F.count(F.lit(1)).cast("long").alias("n_obs"))
         )
-        if sdir is not None:
-            versions = _state_versions(spark, sdir)
-            prior = [v for v in versions if v < batch_id]
-            seed_v = prior[-1] if prior else (batch_id if batch_id in versions else None)
-            if seed_v is not None and seed_v == batch_id:
-                # additive-counter retry corner: the stored version
-                # already contains this batch — it IS the state
-                counts = spark.read.parquet(f"{sdir}/v{batch_id}").localCheckpoint(
-                    eager=True
-                )
-            elif seed_v is not None:
-                seed = spark.read.parquet(f"{sdir}/v{seed_v}")
-                counts = (
-                    counts.unionByName(seed)
-                    .groupBy("variant")
-                    .agg(F.sum("n_obs").cast("long").alias("n_obs"))
-                )
+        seed = _prior_state(spark, sdir, batch_id)
+        if seed is not None:
+            counts = (
+                counts.unionByName(seed)
+                .groupBy("variant")
+                .agg(F.sum("n_obs").cast("long").alias("n_obs"))
+            )
         counts = counts.persist()
         try:
-            if sdir is not None:
-                counts.coalesce(1).write.mode("overwrite").parquet(f"{sdir}/v{batch_id}")
+            _write_state(counts, sdir, batch_id)
             exp_str = {str(k): v for k, v in expected.items()}
             write_metrics(
                 srm_from_counts(counts, exp_str, chi2_critical), batch_id
             )
-            if sdir is not None:
-                _drop_state_versions(spark, sdir, prior)
         finally:
             counts.unpersist()
 
@@ -1682,18 +1540,13 @@ def cusum_monitor_topology(
     parquet layout as ``delta_topology``'s store. The fold is
     ADDITIVE (counter semantics): a late event lands in its original
     bucket's cell and the statistic self-corrects on the next
-    emission — no watermark surgery. The crash-retry corner reads
-    the stored v{batch_id} as the whole truth rather than re-adding
-    the batch. Per batch: one combiner-reduced bucket aggregation, a
+    emission — no watermark surgery. Per batch: one combiner-reduced
+    bucket aggregation, a
     state-sized merge, and the bounded-series closing windows —
     state and emit are bucket-bounded no matter the traffic."""
     from maston_spark.relational import cusum_from_counts
 
-    sdir = (
-        f"{checkpoint.rstrip('/')}/cusum_state" if state_dir == "auto" else state_dir
-    )
-    if sdir is not None:
-        _ensure_state_owner(source.sparkSession, sdir, checkpoint)
+    sdir = _state_dir(source, checkpoint, state_dir, "cusum_state")
 
     items = source.select(
         F.col(group_col).cast("string").alias("group"),
@@ -1705,30 +1558,17 @@ def cusum_monitor_topology(
         counts = batch_df.groupBy("group", "__bkt").agg(
             F.count(F.lit(1)).cast("long").alias("__c")
         )
-        if sdir is not None:
-            versions = _state_versions(spark, sdir)
-            prior = [v for v in versions if v < batch_id]
-            seed_v = prior[-1] if prior else (batch_id if batch_id in versions else None)
-            if seed_v is not None and seed_v == batch_id:
-                # additive-counter retry corner: the stored version
-                # already contains this batch — it IS the state
-                counts = spark.read.parquet(f"{sdir}/v{batch_id}").localCheckpoint(
-                    eager=True
-                )
-            elif seed_v is not None:
-                seed = spark.read.parquet(f"{sdir}/v{seed_v}")
-                counts = (
-                    counts.unionByName(seed)
-                    .groupBy("group", "__bkt")
-                    .agg(F.sum("__c").cast("long").alias("__c"))
-                )
+        seed = _prior_state(spark, sdir, batch_id)
+        if seed is not None:
+            counts = (
+                counts.unionByName(seed)
+                .groupBy("group", "__bkt")
+                .agg(F.sum("__c").cast("long").alias("__c"))
+            )
         counts = counts.persist()
         try:
-            if sdir is not None:
-                counts.coalesce(1).write.mode("overwrite").parquet(f"{sdir}/v{batch_id}")
+            _write_state(counts, sdir, batch_id)
             write_metrics(cusum_from_counts(counts, "group"), batch_id)
-            if sdir is not None:
-                _drop_state_versions(spark, sdir, prior)
         finally:
             counts.unpersist()
 
@@ -1811,11 +1651,7 @@ def vocab_saturation_topology(
 
     from maston_spark.llm.text import vocab_richness_from_counts
 
-    sdir = (
-        f"{checkpoint.rstrip('/')}/vocab_state" if state_dir == "auto" else state_dir
-    )
-    if sdir is not None:
-        _ensure_state_owner(source.sparkSession, sdir, checkpoint)
+    sdir = _state_dir(source, checkpoint, state_dir, "vocab_state")
 
     toks = source.select(
         F.col(group_col).cast("string").alias("group"),
@@ -1838,7 +1674,7 @@ def vocab_saturation_topology(
             finally:
                 merged.unpersist()
             return
-        segs = _curation_segments(spark, sdir)
+        segs = _state_segments(spark, sdir)
         runs = [s for s in segs if s[0] in ("c", "v") and s[1] <= batch_id]
         run = max(runs, key=lambda s: s[1], default=None)
         if run is not None and run[1] == batch_id:
@@ -1926,10 +1762,8 @@ def privacy_gate_topology(
     granularity (a class's k grows but its l can also grow; neither
     per-class summary is additive, while cell counts fold with
     plain union+sum — the q272/q283 counter discipline). Late or
-    replayed rows self-correct on the next emission; the
-    crash-retry corner reads a stored v{batch_id} as the whole
-    truth. Same versioned compacted parquet layout as
-    ``delta_topology``.
+    replayed rows self-correct on the next emission. Same versioned
+    compacted parquet layout as ``delta_topology``.
 
     Scale shape per batch: one combiner-reduced cell aggregation
     over the BATCH, one |state|-sized merge, one |classes|-bounded
@@ -1939,11 +1773,7 @@ def privacy_gate_topology(
 
     if not qi_cols:
         raise ValueError("privacy_gate_topology: need at least one QI column")
-    sdir = (
-        f"{checkpoint.rstrip('/')}/privacy_state" if state_dir == "auto" else state_dir
-    )
-    if sdir is not None:
-        _ensure_state_owner(source.sparkSession, sdir, checkpoint)
+    sdir = _state_dir(source, checkpoint, state_dir, "privacy_state")
 
     rows = source.select(
         *[F.col(c) for c in qi_cols],
@@ -1955,32 +1785,19 @@ def privacy_gate_topology(
         counts = batch_df.groupBy(*qi_cols, "__sv").agg(
             F.count(F.lit(1)).cast("long").alias("__n")
         )
-        if sdir is not None:
-            versions = _state_versions(spark, sdir)
-            prior = [v for v in versions if v < batch_id]
-            seed_v = prior[-1] if prior else (batch_id if batch_id in versions else None)
-            if seed_v is not None and seed_v == batch_id:
-                # additive-counter retry corner: the stored version
-                # already contains this batch — it IS the state
-                counts = spark.read.parquet(f"{sdir}/v{batch_id}").localCheckpoint(
-                    eager=True
-                )
-            elif seed_v is not None:
-                seed = spark.read.parquet(f"{sdir}/v{seed_v}")
-                counts = (
-                    counts.unionByName(seed)
-                    .groupBy(*qi_cols, "__sv")
-                    .agg(F.sum("__n").cast("long").alias("__n"))
-                )
+        seed = _prior_state(spark, sdir, batch_id)
+        if seed is not None:
+            counts = (
+                counts.unionByName(seed)
+                .groupBy(*qi_cols, "__sv")
+                .agg(F.sum("__n").cast("long").alias("__n"))
+            )
         counts = counts.persist()
         try:
-            if sdir is not None:
-                counts.coalesce(1).write.mode("overwrite").parquet(f"{sdir}/v{batch_id}")
+            _write_state(counts, sdir, batch_id)
             write_metrics(
                 k_anonymity_from_counts(counts, qi_cols, thresholds), batch_id
             )
-            if sdir is not None:
-                _drop_state_versions(spark, sdir, prior)
         finally:
             counts.unpersist()
 
@@ -2018,10 +1835,8 @@ def contamination_gate_topology(
     :func:`maston_spark.llm.text.contamination_from_counts` because
     it IS that closing math over the folded state (the q303 prefix
     twin grades the fold cross-engine). State is |groups| rows —
-    intrinsically tiny, so the versioned compacted snapshot layout
-    (``v{batch_id}`` read as the whole truth on retry, priors
-    dropped after the write) is the right shape, not the vocab
-    topology's segment log.
+    intrinsically tiny, so the versioned snapshot layout is the right
+    shape, not the vocab topology's segment log.
 
     Scale shape per batch: the benchmark gram table is materialized
     ONCE at topology start (an eval suite is tiny — broadcast side),
@@ -2034,13 +1849,7 @@ def contamination_gate_topology(
         tokens,
     )
 
-    sdir = (
-        f"{checkpoint.rstrip('/')}/contamination_state"
-        if state_dir == "auto"
-        else state_dir
-    )
-    if sdir is not None:
-        _ensure_state_owner(source.sparkSession, sdir, checkpoint)
+    sdir = _state_dir(source, checkpoint, state_dir, "contamination_state")
 
     gram_expr = (
         f"explode(transform(sequence(0, size(__toks) - {n}), "
@@ -2068,39 +1877,22 @@ def contamination_gate_topology(
             batch_df, bench_grams, "__grp", id_col="__id",
             text_col="__txt", n=n,
         )
-        if sdir is not None:
-            versions = _state_versions(spark, sdir)
-            prior = [v for v in versions if v < batch_id]
-            seed_v = prior[-1] if prior else (
-                batch_id if batch_id in versions else None
-            )
-            if seed_v is not None and seed_v == batch_id:
-                # additive-counter retry corner: the stored version
-                # already contains this batch — it IS the state
-                counts = spark.read.parquet(
-                    f"{sdir}/v{batch_id}"
-                ).localCheckpoint(eager=True)
-            elif seed_v is not None:
-                seed = spark.read.parquet(f"{sdir}/v{seed_v}")
-                counts = (
-                    counts.unionByName(seed)
-                    .groupBy("group")
-                    .agg(
-                        F.sum("n_docs").cast("long").alias("n_docs"),
-                        F.sum("n_grams").cast("long").alias("n_grams"),
-                        F.sum("n_hits").cast("long").alias("n_hits"),
-                        F.sum("n_docs_hit").cast("long").alias(
-                            "n_docs_hit"
-                        ),
-                    )
+        seed = _prior_state(spark, sdir, batch_id)
+        if seed is not None:
+            counts = (
+                counts.unionByName(seed)
+                .groupBy("group")
+                .agg(
+                    *[
+                        F.sum(c).cast("long").alias(c)
+                        for c in ("n_docs", "n_grams", "n_hits", "n_docs_hit")
+                    ]
                 )
+            )
         counts = counts.persist()
         try:
-            if sdir is not None:
-                counts.coalesce(1).write.mode("overwrite").parquet(f"{sdir}/v{batch_id}")
+            _write_state(counts, sdir, batch_id)
             write_metrics(contamination_from_counts(counts), batch_id)
-            if sdir is not None:
-                _drop_state_versions(spark, sdir, prior if sdir else [])
         finally:
             counts.unpersist()
 
@@ -2138,20 +1930,12 @@ def ams_monitor_topology(
     Cross-batch state is the ≤2-row lane-total table, durable in the
     versioned compacted parquet layout shared with the other
     monitors; the fold is ADDITIVE (exact int64 counter semantics —
-    ±1 sums fold with no error term), so the crash-retry corner
-    reads the stored v{batch_id} as the whole truth rather than
-    re-adding the batch. Per batch: one combiner-reduced 2-row
-    aggregation, a ≤4-row merge, the O(lanes) closing dot product —
-    state and emit are O(lanes) no matter the traffic."""
+    ±1 sums fold with no error term). Per batch: one combiner-reduced
+    2-row aggregation, a ≤4-row merge, the O(lanes) closing dot
+    product — state and emit are O(lanes) no matter the traffic."""
     from maston_spark.sketches import ams_join_from_totals, ams_lane_totals
 
-    sdir = (
-        f"{checkpoint.rstrip('/')}/ams_state"
-        if state_dir == "auto"
-        else state_dir
-    )
-    if sdir is not None:
-        _ensure_state_owner(source.sparkSession, sdir, checkpoint)
+    sdir = _state_dir(source, checkpoint, state_dir, "ams_state")
 
     items = source.select(
         F.col(side_col).cast("string").alias("side"),
@@ -2174,37 +1958,17 @@ def ams_monitor_topology(
                 batch_df.filter(F.col("side") == "b"), "key", "b", n_lanes
             )
         )
-        if sdir is not None:
-            versions = _state_versions(spark, sdir)
-            prior = [v for v in versions if v < batch_id]
-            seed_v = prior[-1] if prior else (
-                batch_id if batch_id in versions else None
+        seed = _prior_state(spark, sdir, batch_id)
+        if seed is not None:
+            totals = (
+                totals.unionByName(seed)
+                .groupBy("side")
+                .agg(*[F.sum(c).cast("long").alias(c) for c in sum_cols])
             )
-            if seed_v is not None and seed_v == batch_id:
-                # additive-counter retry corner: the stored version
-                # already contains this batch — it IS the state
-                totals = spark.read.parquet(
-                    f"{sdir}/v{batch_id}"
-                ).localCheckpoint(eager=True)
-            elif seed_v is not None:
-                seed = spark.read.parquet(f"{sdir}/v{seed_v}")
-                totals = (
-                    totals.unionByName(seed)
-                    .groupBy("side")
-                    .agg(
-                        *[
-                            F.sum(c).cast("long").alias(c)
-                            for c in sum_cols
-                        ]
-                    )
-                )
         totals = totals.persist()
         try:
-            if sdir is not None:
-                totals.coalesce(1).write.mode("overwrite").parquet(f"{sdir}/v{batch_id}")
+            _write_state(totals, sdir, batch_id)
             write_metrics(ams_join_from_totals(totals, n_lanes), batch_id)
-            if sdir is not None:
-                _drop_state_versions(spark, sdir, prior)
         finally:
             totals.unpersist()
 

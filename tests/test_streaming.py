@@ -9,6 +9,7 @@ analogue) + processAllAvailable, so they are deterministic.
 from __future__ import annotations
 
 import json
+import os
 import shutil
 import tempfile
 from datetime import datetime
@@ -499,10 +500,9 @@ def test_curation_topology_state_survives_restart(spark, cleanup):
 
 def test_delta_topology_explicit_state_dir_not_mistaken_for_retry(spark, cleanup):
     """An explicit state_dir reused with a FRESH checkpoint must start
-    empty. Batch ids restart at 0 for a new checkpoint, so without the
-    ``_owner`` guard the previous run's v0 would match the retry
-    corner (``batch_id in versions``) and wrongly suppress the new
-    stream's first-batch records."""
+    empty. Batch ids restart at 0 for a new checkpoint; the ``_owner``
+    guard drops the previous run's versions so they cannot suppress
+    the new stream's records."""
 
     def run_once(records, checkpoint, state_dir):
         src_df = spark.createDataFrame(
@@ -1524,9 +1524,9 @@ def test_curation_neardup_cross_rejected_doc_does_not_suppress(spark, cleanup):
 
 
 def _live_segments(spark, chk):
-    from maston_spark.streaming.topology import _curation_segments
+    from maston_spark.streaming.topology import _state_segments
 
-    return _curation_segments(spark, chk + "/curation_state")
+    return _state_segments(spark, chk + "/curation_state")
 
 
 def test_curation_state_write_is_o_batch_and_compacts(spark, cleanup):
@@ -2435,3 +2435,242 @@ def test_ams_monitor_topology_fold_identity_and_retry(spark, cleanup):
     state = spark.read.parquet(f"{chk}/ams_state/v2")
     replay = ams_join_from_totals(state).collect()[0]
     assert replay.est_join_size == by_batch[2].est_join_size
+
+
+
+# ------------------------------------ crash / restart, every topology
+
+
+class _CrashingSink:
+    """Per-batch output of one topology in delivery order. The delivery
+    with index ``crash_at`` raises once, after the topology has written
+    that batch's state and before the batch commits."""
+
+    def __init__(self, crash_at=None):
+        self.crash_at = crash_at
+        self.batches: list = []
+        self._valid: list = []
+
+    def _deliver(self, df):
+        if len(self.batches) == self.crash_at:
+            self.crash_at = None
+            raise RuntimeError("injected sink failure")
+        return sorted(str(r) for r in df.collect())
+
+    def metrics(self, df, batch_id):
+        self.batches.append(self._deliver(df))
+
+    def valid(self, df):
+        self._valid = self._deliver(df)
+
+    def error(self, df):
+        self.batches.append(self._valid + sorted(str(r) for r in df.collect()))
+
+
+def _batched(rows):
+    """Three replay batches of two rows each."""
+    return [Row(**r, __replay_batch=i // 2) for i, r in enumerate(rows)]
+
+
+def _start_delta(spark, stream, chk, sink):
+    return delta_topology(
+        stream,
+        SCHEMA,
+        app_id="t-crash-delta",
+        checkpoint=chk,
+        business_key=F.col("ok.business_key"),
+        order_cols=["ok.seq"],
+        is_updated=lambda old, new: old["ok"]["string_value"]
+        != new["ok"]["string_value"],
+        write_valid=sink.valid,
+        write_error=sink.error,
+    )
+
+
+def _start_curation(spark, stream, chk, sink):
+    from maston_spark.streaming.topology import curation_topology
+
+    ref = spark.createDataFrame([(100, "historical document text alpha beta")], DOC_SCHEMA)
+    return curation_topology(
+        stream, DOC_SCHEMA, ref, app_id="t-crash-curation", checkpoint=chk,
+        write_valid=sink.valid, write_error=sink.error, gate_kwargs=GATE,
+        compact_every=2,
+    )
+
+
+def _start_monitor(name, static=None, **kw):
+    """Starter for the metrics topology ``name``; ``static(spark)``
+    builds its static input frame (drift reference, eval benchmark)."""
+
+    def start(spark, stream, chk, sink):
+        from maston_spark.streaming import topology
+
+        extra = [static(spark)] if static else []
+        return getattr(topology, name)(
+            stream, *extra, checkpoint=chk, write_metrics=sink.metrics, **kw
+        )
+
+    return start
+
+
+_A_TEXT = "the quick brown fox jumps over the lazy dog"
+_C_TEXT = "pack my box with five dozen liquor jugs"
+
+# name -> (input rows, starter, the v<N> state dir under the checkpoint
+# or None for the segment-log stores)
+_CRASH_CASES = {
+    "delta": (
+        _batched(
+            dict(value=_payload(k, v, i))
+            for i, (k, v) in enumerate(
+                [("k1", "a"), ("k2", "b"), ("k1", "a"), ("k2", "c"), ("k3", "d"), ("k1", "e")]
+            )
+        ),
+        _start_delta,
+        "delta_state",
+    ),
+    "curation": (
+        _batched(
+            dict(value=_doc(i, t))
+            for i, t in enumerate(
+                [_A_TEXT, "sphinx of black quartz judge my vow", _A_TEXT, _C_TEXT,
+                 _C_TEXT, "hi yo"]
+            )
+        ),
+        _start_curation,
+        None,
+    ),
+    "kmv": (
+        _batched(dict(g=f"g{i % 2}", user=f"u{i % 5}") for i in range(6)),
+        _start_monitor("sketch_metrics_topology", group_col="g", value_col="user", k=2),
+        "kmv_state",
+    ),
+    "cms": (
+        _batched(dict(item=f"u{i % 3}") for i in range(6)),
+        _start_monitor(
+            "cms_watchlist_topology", item_col="item", watch=["u1", "u2", "x"],
+            depth=3, width=64,
+        ),
+        "cms_state",
+    ),
+    "quantile": (
+        _batched(dict(g="g", key=f"k{i}", v=float((i * 7) % 6)) for i in range(6)),
+        _start_monitor(
+            "quantile_metrics_topology", group_col="g", key_col="key",
+            value_col="v", k=3, qs=[0.5],
+        ),
+        "quantile_state",
+    ),
+    "drift": (
+        _batched(dict(v=float((i * 7) % 20)) for i in range(6)),
+        _start_monitor(
+            "drift_monitor_topology",
+            lambda spark: spark.createDataFrame([(float(i),) for i in range(20)], "v double"),
+            value_col="v", n_bins=4, threshold=0.3,
+        ),
+        "drift_state",
+    ),
+    "hll": (
+        _batched(dict(ts=datetime(2024, 5, 1 + i // 2, 12), uid=i % 4) for i in range(6)),
+        _start_monitor("hll_rolling_topology", ts_col="ts", value_col="uid",
+                       window_days=2, p=4),
+        "hll_state",
+    ),
+    "srm": (
+        _batched(dict(variant=str(int(i % 3 == 0))) for i in range(6)),
+        _start_monitor("srm_monitor_topology", variant_col="variant",
+                       expected={"0": 0.5, "1": 0.5}),
+        "srm_state",
+    ),
+    "cusum": (
+        _batched(dict(g="ingest", ts=datetime(2024, 5, 5, h % 4, 7)) for h in range(6)),
+        _start_monitor("cusum_monitor_topology", group_col="g", ts_col="ts"),
+        "cusum_state",
+    ),
+    "vocab": (
+        _batched(
+            dict(src=g, text=t)
+            for g, t in [("web", "the cat sat on the mat"), ("books", "alpha beta beta"),
+                         ("web", "a cat sat"), ("books", "gamma alpha"),
+                         ("web", "rare bird"), ("books", "delta")]
+        ),
+        _start_monitor("vocab_saturation_topology", group_col="src",
+                       text_col="text", compact_every=2),
+        None,
+    ),
+    "privacy": (
+        _batched(
+            dict(q1=a, q2=n, sv=s)
+            for a, n, s in [("a", 1, 100), ("b", 1, 200), ("b", 1, 250), ("a", 1, 150),
+                            ("c", 9, 300), ("a", 1, 100)]
+        ),
+        _start_monitor("privacy_gate_topology", qi_cols=["q1", "q2"], sensitive_col="sv"),
+        "privacy_state",
+    ),
+    "contamination": (
+        _batched(
+            dict(src=s, doc_id=i, text=t)
+            for i, (s, t) in enumerate(
+                [("web", "the secret eval answer is blue today"),
+                 ("books", "alpha beta gamma"), ("web", "totally original prose"),
+                 ("books", "eval answer is what"), ("web", "secret eval answer is"),
+                 ("books", "delta epsilon zeta")]
+            )
+        ),
+        _start_monitor(
+            "contamination_gate_topology",
+            lambda spark: spark.createDataFrame(
+                [(100, "the secret eval answer is blue")], "doc_id long, text string"
+            ),
+            group_col="src", id_col="doc_id", text_col="text", n=3,
+        ),
+        "contamination_state",
+    ),
+    "ams": (
+        _batched(dict(side="ab"[i % 2], key=str(i % 3)) for i in range(6)),
+        _start_monitor("ams_monitor_topology", side_col="side", key_col="key", n_lanes=4),
+        "ams_state",
+    ),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_CRASH_CASES))
+def test_topology_crash_restart_matches_uninterrupted(spark, cleanup, name):
+    """A sink failure after the state write of batch 0 (then, in a
+    second run, of batch 1), followed by a restart on the same
+    checkpoint, must emit per batch exactly what an uninterrupted run
+    emits: the retried batch recomputes its first attempt's state and
+    output. The ``v<N>`` stores keep at most two versions."""
+    rows, start, state_name = _CRASH_CASES[name]
+    stream, src = replay_stream(spark.createDataFrame(rows), batches=3)
+    cleanup.append(src)
+
+    def run(chk, sink):
+        q = start(spark, stream, chk, sink)
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+    chk = _tmp()
+    cleanup.append(chk)
+    sink = _CrashingSink()
+    run(chk, sink)
+    expect = sink.batches
+    assert len(expect) == 3
+
+    for crash_at in (0, 1):
+        chk = _tmp()
+        cleanup.append(chk)
+        sink = _CrashingSink(crash_at)
+        with pytest.raises(Exception, match="injected sink failure"):
+            run(chk, sink)
+        assert len(sink.batches) == crash_at
+        run(chk, sink)
+        assert sink.batches == expect, f"crash at batch {crash_at}"
+        if state_name is not None:
+            versions = [
+                d for d in os.listdir(f"{chk}/{state_name}")
+                if d[:1] == "v" and d[1:].isdigit()
+            ]
+            assert len(versions) <= 2, (crash_at, versions)
