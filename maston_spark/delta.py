@@ -231,71 +231,6 @@ def delta_dedup_stream(
     )
 
 
-def delta_dedup_tws(
-    df: DataFrame,
-    key_cols: Sequence[str],
-    order_cols: Sequence[str],
-    is_updated: Callable[[dict, dict], bool],
-    state_ttl_ms: int | None = None,
-):
-    """Streaming delta on the arbitrary-state v2 API
-    (``transformWithStateInPandas``): explicit ``ValueState`` holding
-    the last accepted record, with optional TTL.
-
-    TTL is the 100 TB state-size lever the reference lacks: keys idle
-    longer than ``state_ttl_ms`` are evicted (their next record
-    re-emits as first-seen), bounding the store to the active key
-    set. Requires the RocksDB state store provider
-    (``spark.sql.streaming.stateStore.providerClass`` =
-    ``...RocksDBStateStoreProvider``), which TTL state needs and a
-    100 TB deployment wants anyway. Also requires ``protobuf``
-    (the v2 state API's worker protocol) — absent from this test
-    container, so the golden test for this path is skip-gated;
-    :func:`delta_dedup_stream` is the tested streaming path here.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    schema: StructType = df.schema
-    field_names = [f.name for f in schema.fields]
-    order_list = list(order_cols)
-    ttl = int(state_ttl_ms) if state_ttl_ms else None
-
-    class DeltaProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._last = handle.getValueState("last_accepted", schema, ttl)
-
-        def handleInputRows(self, key, rows, timerValues):
-            last = None
-            if self._last.exists():
-                last = dict(zip(field_names, self._last.get()))
-            for pdf in rows:
-                pdf = pdf.sort_values(order_list, kind="mergesort")
-                keep = []
-                for rec in pdf.to_dict("records"):
-                    try:
-                        accept = last is None or is_updated(last, rec)
-                    except Exception:
-                        accept = False  # parity: suppress, never crash
-                    if accept:
-                        keep.append(True)
-                        last = rec
-                    else:
-                        keep.append(False)
-                out = pdf[pd.Series(keep, index=pdf.index)]
-                if len(out):
-                    yield out
-            if last is not None:
-                self._last.update(tuple(last[n] for n in field_names))
-
-        def close(self) -> None:
-            pass
-
-    return df.groupBy(*key_cols).transformWithStateInPandas(
-        DeltaProcessor(), schema, "append", "None"
-    )
-
-
 def changed_predicate(changed_cols: Sequence[str]) -> Callable[[dict, dict], bool]:
     """Default sugar: ``is_updated = any changed column differs``."""
 

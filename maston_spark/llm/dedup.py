@@ -83,55 +83,6 @@ def shingle_hash_lane(sh: Column) -> Column:
     return F.conv(F.substring(F.md5(sh), 1, 8), 16, 10).cast("long")
 
 
-def shingle_hashes(shingle_col) -> Column:
-    """array<long>: one 32-bit hash per shingle (md5 computed ONCE).
-
-    Callers must materialize this in its own projection (a separate
-    ``select``) before fanning out to the per-seed mins — Catalyst's
-    CollapseProject keeps the boundary because the expression is
-    non-cheap, so the md5 pass runs once however many seeds read it.
-    """
-    return F.transform(shingle_col, shingle_hash_lane)
-
-
-def minhash_value(hashes_col, seed: int) -> Column:
-    """MinHash component ``seed``: min of (a_s*h + b_s) mod p."""
-    a, b = MINHASH_A0 + 2 * seed, MINHASH_B0 + seed
-    return F.array_min(
-        F.transform(hashes_col, lambda h: (F.lit(a) * h + F.lit(b)) % F.lit(MINHASH_PRIME))
-    )
-
-
-def minhash_signature(hashes_col, num_hashes: int = DEFAULT_NUM_HASHES) -> Column:
-    """Full MinHash signature as one array column (input = the
-    materialized :func:`shingle_hashes` column)."""
-    return F.array(*[minhash_value(hashes_col, s) for s in range(num_hashes)])
-
-
-def lsh_band_buckets(
-    hashes_col, num_hashes: int = DEFAULT_NUM_HASHES, band_size: int = DEFAULT_BAND_SIZE
-) -> Column:
-    """array<struct<band, bucket>> over the per-shingle hash column."""
-    n_bands = num_hashes // band_size
-    return F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.md5(
-                    F.concat_ws(
-                        "|",
-                        *[
-                            minhash_value(hashes_col, b * band_size + i).cast("string")
-                            for i in range(band_size)
-                        ],
-                    )
-                ).alias("bucket"),
-            )
-            for b in range(n_bands)
-        ]
-    )
-
-
 def shingle_frame(
     df: DataFrame,
     text_col: str = "text",
@@ -152,46 +103,6 @@ def shingle_frame(
     return spread.select(
         F.col(id_col).alias("id"), shingles(F.col(text_col), shingle_n).alias("sh")
     ).filter(F.size("sh") > 0)
-
-
-def lane_frame(shf: DataFrame) -> DataFrame:
-    """(id, hv): per-shingle 32-bit md5 lanes, distinct per doc.
-    This is the table to persist/write at scale — signatures,
-    candidate buckets, and hashed-shingle Jaccard all derive from it
-    with integer-only work."""
-    return shf.select("id", F.array_distinct(shingle_hashes(F.col("sh"))).alias("hv"))
-
-
-def candidates_from_lanes(
-    lf: DataFrame,
-    num_hashes: int = DEFAULT_NUM_HASHES,
-    band_size: int = DEFAULT_BAND_SIZE,
-) -> DataFrame:
-    """Candidate pairs (id_a < id_b) sharing ≥1 LSH band bucket, from
-    a :func:`lane_frame`. The join is per-bucket (equi on
-    (band, bucket)) — never all-pairs; bucket sizes are bounded by
-    collision probability, and a pathological hot bucket is split by
-    AQE skew join."""
-    hv = lf
-    # Explode the band array INLINE (generator = the array expression).
-    # Materializing it as a column first and exploding the attribute
-    # invites GeneratorNestedColumnAliasing to duplicate the whole
-    # 16-min computation per extracted field (measured 10x slower).
-    buckets = hv.select(
-        "id", F.explode(lsh_band_buckets("hv", num_hashes, band_size)).alias("bb")
-    ).select("id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-    a = buckets.alias("a")
-    b = buckets.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
 
 
 def shingle_lane_rows(

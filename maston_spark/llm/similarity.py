@@ -111,27 +111,6 @@ def cosine_topk(
     )
 
 
-def hyperplane(plane: int, dims: int) -> Column:
-    """Deterministic ±1 hyperplane: component d = +1 iff the first
-    hex digit of md5('<plane>:<d>') has its high bit set."""
-    return F.array(
-        *[
-            F.when(
-                F.substring(F.md5(F.lit(f"{plane}:{d}")), 1, 1) >= "8", F.lit(1.0)
-            ).otherwise(F.lit(-1.0))
-            for d in range(dims)
-        ]
-    )
-
-
-def lsh_bucket(vec_col, n_planes: int, dims: int) -> Column:
-    """Sign-LSH bucket id: bit p = (vec · hyperplane_p) > 0."""
-    bucket = F.lit(0)
-    for p in range(n_planes):
-        bucket = bucket + F.when(dot(vec_col, hyperplane(p, dims)) > 0, 1 << p).otherwise(0)
-    return bucket.cast("int")
-
-
 def embedding_neardup(
     corpus: DataFrame,
     threshold: float = 0.8,
@@ -353,9 +332,10 @@ def embedding_neardup(
 
 
 def hyperplane_matrix(n_planes: int, dims: int):
-    """The deterministic ±1 hyperplanes as a numpy matrix — same
-    md5-derived values as :func:`hyperplane`, computed driver-side
-    with hashlib (md5 is md5 in every engine)."""
+    """The deterministic ±1 hyperplanes as a numpy matrix: component
+    d of plane p is +1 iff the first hex digit of md5('<p>:<d>') has
+    its high bit set, computed driver-side with hashlib (md5 is md5 in
+    every engine)."""
     import hashlib
 
     import numpy as np

@@ -548,16 +548,6 @@ def bucket_of_edges(col: Column, edges: "list[float]") -> Column:
     return b.cast("int")
 
 
-def merge_bin_counts(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Additive-counter merge for ``(bin, n)`` frames — the drift
-    monitor's cross-batch state fold."""
-    return (
-        a.unionByName(b)
-        .groupBy("bin")
-        .agg(F.sum("n").cast("long").alias("n"))
-    )
-
-
 def tvd_from_counts(n_i: "list[int]", m_i: "list[int]") -> float:
     """Exact binned TVD from two aligned count vectors: one IEEE
     quotient over exact integer cross-products (Python ints never

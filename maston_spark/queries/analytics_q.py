@@ -907,8 +907,8 @@ def q201_drift_monitor_prefix(spark, sf_dir):
     claim, graded cross-engine: non-'view' events are split into 3
     deterministic micro-batches (event_id mod 3), each batch's bin
     counts fold into the running state with the SAME
-    :func:`maston_spark.profiling.merge_bin_counts` the topology
-    calls, against bin edges from the SAME
+    :func:`maston_spark.sketches.sum_counts` the topology calls,
+    against bin edges from the SAME
     :func:`maston_spark.profiling.ref_bin_edges` (reference = 'view'
     events), and the final emitted TVD uses the SAME
     :func:`maston_spark.profiling.tvd_from_counts` arithmetic — while
@@ -921,10 +921,10 @@ def q201_drift_monitor_prefix(spark, sf_dir):
     same boundedness the topology itself relies on."""
     from maston_spark.profiling import (
         bucket_of_edges,
-        merge_bin_counts,
         ref_bin_edges,
         tvd_from_counts,
     )
+    from maston_spark.sketches import sum_counts
 
     n_bins, threshold = 10, 0.05
     ev = (
@@ -944,7 +944,7 @@ def q201_drift_monitor_prefix(spark, sf_dir):
             .groupBy("bin")
             .agg(F.count(F.lit(1)).cast("long").alias("n"))
         )
-        counters = g if counters is None else merge_bin_counts(counters, g)
+        counters = sum_counts(g, counters, ["bin"], ["n"])
 
     stream_counts = {r["bin"]: r["n"] for r in counters.collect()}
     ref_counts = {
@@ -1454,7 +1454,7 @@ def q211_cms_watchlist_prefix(spark, sf_dir):
     """The CMS-watchlist TOPOLOGY's fold identity, graded
     cross-engine: events split into 3 deterministic micro-batches
     (event_id mod 3), each batch's count-min grid folded with the
-    SAME :func:`maston_spark.sketches.cms_merge` the streaming
+    SAME :func:`maston_spark.sketches.sum_counts` the streaming
     topology calls (cell-wise sum — the ADDITIVE merge), then the
     watchlist probed through the shared :func:`maston_spark.
     sketches.cms_probe` — while the oracle sketches the whole
@@ -1463,7 +1463,7 @@ def q211_cms_watchlist_prefix(spark, sf_dir):
     q200, drift q201, CMS q211 — every streaming state fold now has
     an oracle-graded batch twin). The absent watch item ('999999')
     pins the zero-cell path."""
-    from maston_spark.sketches import cms_merge, cms_probe, cms_sketch
+    from maston_spark.sketches import cms_probe, cms_sketch, sum_counts
 
     ev = (
         load_table(spark, sf_dir, "events")
@@ -1478,7 +1478,7 @@ def q211_cms_watchlist_prefix(spark, sf_dir):
             depth=4,
             width=64,
         )
-        grid = g if grid is None else cms_merge(grid, g)
+        grid = sum_counts(g, grid, ["seed", "bucket"], ["cnt"])
     watch = spark.createDataFrame(
         [(str(i),) for i in range(1, 11)] + [("999999",)], "item string"
     )
@@ -3301,14 +3301,16 @@ def q249_quantile_treatment(spark, sf_dir):
 def q250_srm_prefix(spark, sf_dir):
     """The SRM monitor TOPOLOGY's fold identity, graded cross-engine:
     events split into 3 deterministic micro-batches (event_id mod 3),
-    each batch's arm counts folded with the SAME additive union+sum
-    the streaming state uses, then the shared
+    each batch's arm counts folded with the SAME additive
+    :func:`maston_spark.sketches.sum_counts` the streaming topology
+    calls, then the shared
     :func:`maston_spark.evaluation.srm_from_counts` closing math —
     while the oracle chi-squares the whole history in one shot.
     Sum-of-counts ≡ counts-of-union exactly; extends the
     topology-twin matrix (q195/q200/q201/q211/q231) to the
     experimentation family."""
     from maston_spark.evaluation import srm_from_counts
+    from maston_spark.sketches import sum_counts
 
     ev = load_table(spark, sf_dir, "events").select(
         (
@@ -3334,13 +3336,7 @@ def q250_srm_prefix(spark, sf_dir):
             .groupBy("variant")
             .agg(F.count(F.lit(1)).cast("long").alias("n_obs"))
         )
-        counts = (
-            g
-            if counts is None
-            else counts.unionByName(g)
-            .groupBy("variant")
-            .agg(F.sum("n_obs").cast("long").alias("n_obs"))
-        )
+        counts = sum_counts(g, counts, ["variant"], ["n_obs"])
     return srm_from_counts(counts, {"0": 0.5, "1": 0.5})
 
 
@@ -4473,14 +4469,16 @@ def q272_cusum_prefix(spark, sf_dir):
     """The CUSUM monitor TOPOLOGY's fold identity, graded
     cross-engine: events split into 3 deterministic micro-batches
     (event_id mod 3), each batch's (group, hour-bucket) counts
-    folded with the SAME additive union+sum the streaming state
-    uses, then the shared :func:`maston_spark.relational.
+    folded with the SAME additive :func:`maston_spark.sketches.
+    sum_counts` the streaming topology calls, then the shared
+    :func:`maston_spark.relational.
     cusum_from_counts` closing math — while the oracle computes the
     changepoint over the whole history in one shot. Sum-of-bucket-
     counts ≡ counts-of-union exactly; extends the topology-twin
     matrix (q195/q200/q201/q211/q231/q250) to the rate-shift
     monitor, the seventh topology."""
     from maston_spark.relational import cusum_from_counts
+    from maston_spark.sketches import sum_counts
 
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("event_type").isNotNull() & F.col("ts").isNotNull()
@@ -4496,13 +4494,7 @@ def q272_cusum_prefix(spark, sf_dir):
             .groupBy("group", "__bkt")
             .agg(F.count(F.lit(1)).cast("long").alias("__c"))
         )
-        counts = (
-            g
-            if counts is None
-            else counts.unionByName(g)
-            .groupBy("group", "__bkt")
-            .agg(F.sum("__c").cast("long").alias("__c"))
-        )
+        counts = sum_counts(g, counts, ["group", "__bkt"], ["__c"])
     return cusum_from_counts(counts, "group").orderBy("group")
 
 
@@ -4540,8 +4532,9 @@ def q283_vocab_saturation_prefix(spark, sf_dir):
     """The vocabulary-saturation monitor TOPOLOGY's fold identity,
     graded cross-engine: documents split into 3 deterministic
     micro-batches (doc_id mod 3), each batch's (source, token)
-    counts folded with the SAME additive union+sum the streaming
-    state uses, then the shared :func:`maston_spark.llm.text.
+    counts folded with the SAME additive :func:`maston_spark.
+    sketches.sum_counts` the streaming topology calls, then the
+    shared :func:`maston_spark.llm.text.
     vocab_richness_from_counts` closing math — while the oracle
     computes Good-Turing + Chao1 over the whole corpus in one shot.
     Counts-of-union ≡ sum-of-batch-counts exactly (fof is NOT
@@ -4549,6 +4542,7 @@ def q283_vocab_saturation_prefix(spark, sf_dir):
     extends the topology-twin matrix (q195/q200/q201/q211/q231/
     q250/q272) to the crawl-saturation gauge, the eighth topology."""
     from maston_spark.llm.text import vocab_richness_from_counts
+    from maston_spark.sketches import sum_counts
 
     d = load_table(spark, sf_dir, "documents").filter(
         F.col("text").isNotNull() & F.col("source").isNotNull()
@@ -4565,13 +4559,7 @@ def q283_vocab_saturation_prefix(spark, sf_dir):
             .groupBy("group", "__tok")
             .agg(F.count(F.lit(1)).cast("long").alias("__c"))
         )
-        counts = (
-            g
-            if counts is None
-            else counts.unionByName(g)
-            .groupBy("group", "__tok")
-            .agg(F.sum("__c").cast("long").alias("__c"))
-        )
+        counts = sum_counts(g, counts, ["group", "__tok"], ["__c"])
     return vocab_richness_from_counts(counts, "group")
 
 
@@ -5730,8 +5718,9 @@ def q296_k_anonymity_prefix(spark, sf_dir):
     """The privacy-gate TOPOLOGY's fold identity, graded
     cross-engine: customers split into 3 deterministic micro-batches
     (c_custkey mod 3), each batch's (QI..., sensitive) cell counts
-    folded with the SAME additive union+sum the streaming state
-    uses, then the shared :func:`maston_spark.profiling.
+    folded with the SAME additive :func:`maston_spark.sketches.
+    sum_counts` the streaming topology calls, then the shared
+    :func:`maston_spark.profiling.
     k_anonymity_from_counts` closing math — while the oracle audits
     the whole table in one shot. Counts-of-union ≡
     sum-of-batch-counts exactly (neither k nor l is additive at
@@ -5739,6 +5728,7 @@ def q296_k_anonymity_prefix(spark, sf_dir):
     extends the topology-twin matrix to the NINTH topology, the
     privacy release gate."""
     from maston_spark.profiling import k_anonymity_from_counts
+    from maston_spark.sketches import sum_counts
 
     c = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey"),
@@ -5756,13 +5746,7 @@ def q296_k_anonymity_prefix(spark, sf_dir):
             .groupBy("nat", "seg", "band", "__sv")
             .agg(F.count(F.lit(1)).cast("long").alias("__n"))
         )
-        counts = (
-            g
-            if counts is None
-            else counts.unionByName(g)
-            .groupBy("nat", "seg", "band", "__sv")
-            .agg(F.sum("__n").cast("long").alias("__n"))
-        )
+        counts = sum_counts(g, counts, ["nat", "seg", "band", "__sv"], ["__n"])
     return k_anonymity_from_counts(counts, ["nat", "seg", "band"])
 
 
@@ -7071,7 +7055,9 @@ def q313_fs_linkage(spark, sf_dir):
 def q314_ams_prefix(spark, sf_dir):
     """ELEVENTH topology's fold-identity twin: the streaming
     join-size monitor's AMS lane totals replayed as a 3-batch
-    additive fold (both sides split by key % 3) and closed with the
+    additive fold (both sides split by key % 3) with the SAME
+    :func:`maston_spark.sketches.sum_counts` the topology calls, and
+    closed with the
     SAME :func:`maston_spark.sketches.ams_join_from_totals` the
     topology emits — the incremental-equals-one-shot claim graded
     cross-engine against the one-shot lane SQL: ±1 sums fold with
@@ -7079,7 +7065,11 @@ def q314_ams_prefix(spark, sf_dir):
     the batch estimate, completing the topology-twin matrix for the
     optimizer family (q217 prices the join once; the monitor keeps
     the price current per micro-batch)."""
-    from maston_spark.sketches import ams_join_from_totals, ams_lane_totals
+    from maston_spark.sketches import (
+        ams_join_from_totals,
+        ams_lane_totals,
+        sum_counts,
+    )
 
     o = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderkey").isNotNull()
@@ -7100,13 +7090,8 @@ def q314_ams_prefix(spark, sf_dir):
                 "b",
             )
         )
-        sum_cols = ["n"] + [f"t{l}" for l in range(16)]
-        folded = (
-            t
-            if folded is None
-            else folded.unionByName(t)
-            .groupBy("side")
-            .agg(*[F.sum(c).cast("long").alias(c) for c in sum_cols])
+        folded = sum_counts(
+            t, folded, ["side"], ["n"] + [f"t{l}" for l in range(16)]
         )
     return ams_join_from_totals(folded, 16)
 

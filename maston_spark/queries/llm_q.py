@@ -5820,7 +5820,8 @@ def q303_contamination_prefix(spark, sf_dir):
     """TENTH topology's fold-identity twin: the streaming
     contamination gate's per-source counters replayed as a 3-batch
     additive fold (docs split by doc_id % 3, probed against the q77
-    eval set) and closed with the SAME
+    eval set) with the SAME :func:`maston_spark.sketches.sum_counts`
+    the topology calls, and closed with the SAME
     :func:`maston_spark.llm.text.contamination_from_counts` math the
     topology emits — the incremental-equals-one-shot claim graded
     cross-engine: per-doc fractions don't fold, counters do."""
@@ -5828,6 +5829,7 @@ def q303_contamination_prefix(spark, sf_dir):
         contamination_counts,
         contamination_from_counts,
     )
+    from maston_spark.sketches import sum_counts
 
     d = load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id").isNotNull()
@@ -5859,17 +5861,8 @@ def q303_contamination_prefix(spark, sf_dir):
             text_col="text",
             n=3,
         )
-        folded = (
-            c
-            if folded is None
-            else folded.unionByName(c)
-            .groupBy("group")
-            .agg(
-                F.sum("n_docs").cast("long").alias("n_docs"),
-                F.sum("n_grams").cast("long").alias("n_grams"),
-                F.sum("n_hits").cast("long").alias("n_hits"),
-                F.sum("n_docs_hit").cast("long").alias("n_docs_hit"),
-            )
+        folded = sum_counts(
+            c, folded, ["group"], ["n_docs", "n_grams", "n_hits", "n_docs_hit"]
         )
     return contamination_from_counts(folded)
 

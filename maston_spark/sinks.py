@@ -1,4 +1,4 @@
-"""Sinks: Kafka (+ DLQ error topic), parquet, console, memory, noop,
+"""Sinks: the Kafka record projection (valid topic + DLQ error topic)
 and the valid/error split writer.
 
 Parity target: topology/TopologyBuilder.java:38-49 — valid records
@@ -14,7 +14,6 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, functions as F
 
-from maston_spark.config import KafkaConfig
 from maston_spark.validated import ERR, OK, branch_valid, safe_serialize_json, with_error_headers
 
 
@@ -32,25 +31,6 @@ def to_kafka_records(
     if headers_col is not None and headers_col in df.columns:
         cols.append(F.col(headers_col).alias("headers"))
     return df.select(*cols)
-
-
-def write_kafka_stream(
-    df: DataFrame,
-    cfg: KafkaConfig,
-    topic: str,
-    checkpoint: str,
-    output_mode: str = "append",
-    trigger: dict | None = None,
-):
-    """Start a streaming Kafka sink (expects kafka record shape)."""
-    writer = df.writeStream.format("kafka").outputMode(output_mode).option(
-        "checkpointLocation", checkpoint
-    )
-    for k, v in cfg.sink_options(topic).items():
-        writer = writer.option(k, v)
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
 
 
 def split_sink_batch(
@@ -112,40 +92,3 @@ def foreach_batch_split(
             on_metrics(batch_id, counts)
 
     return fn
-
-
-def parquet_sink(df: DataFrame, path: str, checkpoint: str, **options):
-    writer = (
-        df.writeStream.format("parquet")
-        .option("path", path)
-        .option("checkpointLocation", checkpoint)
-    )
-    for k, v in options.items():
-        writer = writer.option(k, str(v))
-    return writer.start()
-
-
-def console_sink(df: DataFrame, checkpoint: str, truncate: bool = False, num_rows: int = 20):
-    return (
-        df.writeStream.format("console")
-        .option("checkpointLocation", checkpoint)
-        .option("truncate", str(truncate).lower())
-        .option("numRows", str(num_rows))
-        .start()
-    )
-
-
-def memory_sink(df: DataFrame, name: str, checkpoint: str, output_mode: str = "append"):
-    """Memory sink for tests — results readable as table ``name``."""
-    return (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
-
-
-def noop_write(df: DataFrame) -> None:
-    """Materialize fully without collecting (bench / smoke)."""
-    df.write.format("noop").mode("overwrite").save()

@@ -128,13 +128,14 @@ def kmv_truncate(gh: DataFrame, k: int) -> DataFrame:
 
 
 def kmv_estimate(sk: DataFrame, group_col: str, k: int) -> DataFrame:
-    """Distinct-count estimate from a ranked KMV sketch ``(group, h,
-    rn)`` (see :func:`kmv_distinct_by` for the estimator)."""
+    """Distinct-count estimate from a KMV sketch ``(group, h)`` of at
+    most k distinct hashes per group (see :func:`kmv_distinct_by` for
+    the estimator). A full group's largest hash is its kth minimum."""
     return (
         sk.groupBy(group_col)
         .agg(
             F.count(F.lit(1)).alias("n_seen"),
-            F.max(F.when(F.col("rn") == k, F.col("h"))).alias("kth"),
+            F.max("h").alias("kth"),
         )
         .select(
             group_col,
@@ -319,15 +320,22 @@ def cms_sketch(df: DataFrame, item_col: str, depth: int, width: int) -> DataFram
     ).agg(F.count(F.lit(1)).alias("cnt"))
 
 
-def cms_merge(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Merge two count-min grids: cell-wise SUM. Shared by the
-    streaming ``cms_watchlist_topology``'s cross-batch state fold and
-    its oracle-graded batch twin (q211), so the streaming path and the
-    graded path cannot drift apart."""
+def sum_counts(
+    a: DataFrame, b: DataFrame | None, keys: "list[str]", cols: "list[str]"
+) -> DataFrame:
+    """Additive counter merge: union two count tables and sum each of
+    ``cols`` (as long) per ``keys``; ``b=None`` is the empty table and
+    returns ``a``. Sum-of-counts equals counts-of-union, so this is the
+    exact cross-batch fold of every counter state (count-min grids,
+    bin counts, arm, bucket, cell and token counts, lane totals). The
+    streaming monitors and their oracle-graded batch twins call this
+    one function."""
+    if b is None:
+        return a
     return (
         a.unionByName(b)
-        .groupBy("seed", "bucket")
-        .agg(F.sum("cnt").cast("long").alias("cnt"))
+        .groupBy(*keys)
+        .agg(*[F.sum(c).cast("long").alias(c) for c in cols])
     )
 
 

@@ -88,14 +88,7 @@ def _start_foreach_batch(df: DataFrame, fn, checkpoint: str, trigger: dict | Non
 #   d<N>  per-batch DELTA — only batch N's rows (curation, vocab)
 #   c<N>  COMPACTED run — the merged rows of every segment <= N
 #
-# Snapshot rule: batch B folds its input into the newest v<N> with
-# N < B and writes v<B>. Structured Streaming starts batch B only after
-# B-1 has committed, so every version below the newest prior one is
-# dead and B drops it before writing; the prior version itself stays
-# until a later batch runs. A retried B therefore finds the same prior
-# version and recomputes the same state and the same output, whether
-# the fold is a set union or an additive sum.
-#
+# The v<N> stores follow the snapshot rule of _snapshot_monitor.
 # Curation and vocab append one delta per batch (O(batch) write) and a
 # compaction pass folds accumulated segments into one run so the
 # reader's file count stays bounded. Curation rows carry their
@@ -151,7 +144,8 @@ def _state_dir(source: DataFrame, checkpoint: str, state_dir: str | None, name: 
 def _prior_state(spark, sdir: str | None, batch_id: int) -> DataFrame | None:
     """The snapshot batch ``batch_id`` folds into: the newest ``v<N>``
     with ``N < batch_id``, or None (also without a state dir). Older
-    versions are dropped here (the snapshot rule above)."""
+    versions are dropped here (the snapshot rule of
+    :func:`_snapshot_monitor`)."""
     if sdir is None:
         return None
     prior = [s for s in _state_segments(spark, sdir) if s[0] == "v" and s[1] < batch_id]
@@ -161,11 +155,48 @@ def _prior_state(spark, sdir: str | None, batch_id: int) -> DataFrame | None:
     return spark.read.parquet(f"{sdir}/v{prior[-1][1]}")
 
 
-def _write_state(df: DataFrame, sdir: str | None, batch_id: int) -> None:
-    """Write batch ``batch_id``'s snapshot as one part file (a no-op
-    without a state dir)."""
-    if sdir is not None:
-        df.coalesce(1).write.mode("overwrite").parquet(f"{sdir}/v{batch_id}")
+def _snapshot_monitor(
+    proj: DataFrame,
+    fold: Callable[[DataFrame, DataFrame | None], DataFrame],
+    emit: Callable[[DataFrame], DataFrame],
+    *,
+    name: str,
+    checkpoint: str,
+    state_dir: str | None,
+    write_metrics: Callable[[DataFrame, int], None],
+    trigger: dict | None,
+):
+    """The one batch loop of the metrics monitors: start ``proj`` and,
+    per micro-batch, ``state = fold(batch, prior)``, write ``state`` as
+    the batch's snapshot, then ``write_metrics(emit(state), batch_id)``.
+    ``state`` is persisted across the write and the emit. ``name`` is
+    the state dir under the checkpoint when ``state_dir`` is ``"auto"``.
+
+    Snapshot rule: batch B folds its input into the newest ``v<N>``
+    with N < B (``prior``; None at the first batch and without a state
+    dir) and writes ``v<B>`` as one part file. Structured Streaming
+    starts batch B only after B-1 has committed, so every version below
+    the newest prior one is dead and B drops it before writing; the
+    prior version itself stays until a later batch runs. A retried B
+    therefore finds the same prior version and recomputes the same
+    state and the same output, whether the fold is a set union or an
+    additive sum. This is the D-Streams model: a batch's state is a
+    deterministic function of the previous state and the batch."""
+    sdir = _state_dir(proj, checkpoint, state_dir, name)
+
+    def fn(batch_df: DataFrame, batch_id: int) -> None:
+        prior = _prior_state(batch_df.sparkSession, sdir, batch_id)
+        state = fold(batch_df, prior).persist()
+        try:
+            if sdir is not None:
+                state.coalesce(1).write.mode("overwrite").parquet(
+                    f"{sdir}/v{batch_id}"
+                )
+            write_metrics(emit(state), batch_id)
+        finally:
+            state.unpersist()
+
+    return _start_foreach_batch(proj, fn, checkpoint, trigger)
 
 
 def _read_curation_state(
@@ -441,9 +472,9 @@ def delta_topology(
     the active key set — one shuffle on the key plus a parquet write,
     parallel across executors, no driver materialization. For
     key-cardinality-bound state with TTL eviction prefer
-    :func:`maston_spark.delta.delta_dedup_stream` /
-    ``delta_dedup_tws`` (RocksDB state store) when the pipeline
-    doesn't need the validated+DLQ fan-out of this topology.
+    :func:`maston_spark.delta.delta_dedup_stream` (RocksDB state
+    store) when the pipeline doesn't need the validated+DLQ fan-out
+    of this topology.
     ``state_dir=None`` opts out (per-batch-only suppression).
     """
     key_col = (
@@ -1055,14 +1086,11 @@ def sketch_metrics_topology(
     answerable at any batch without ever storing the distinct set.
 
     The cross-batch state IS the sketch — at most ``groups × k``
-    ``(g, h)`` hash rows, durable in a compacted parquet table under
-    ``state_dir`` (default ``<checkpoint>/kmv_state``), versioned per
-    batch id exactly like ``delta_topology``'s store (restart resumes
-    from the last committed version, so estimates never regress).
-    Merging a batch is the KMV union property
-    (:func:`maston_spark.sketches.kmv_truncate`): union the stored
-    survivors with the batch's distinct hashes and re-keep the k
-    minima — the result is bit-identical to sketching the whole
+    ``(g, h)`` hash rows in the ``kmv_state`` snapshot store (see
+    :func:`_snapshot_monitor`). Merging a batch is the KMV union
+    property (:func:`maston_spark.sketches.kmv_truncate`): union the
+    stored survivors with the batch's distinct hashes and re-keep the
+    k minima — the result is bit-identical to sketching the whole
     history in one pass, which is what makes the emitted estimate
     deterministic and restart-invariant.
 
@@ -1073,37 +1101,29 @@ def sketch_metrics_topology(
     """
     from maston_spark.sketches import h60, kmv_estimate, kmv_truncate
 
-    sdir = _state_dir(source, checkpoint, state_dir, "kmv_state")
-
     hashed = source.select(
         F.col(group_col).alias("g"), h60(F.col(value_col).cast("string")).alias("h")
     )
 
-    def fn(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        combined = batch_df.dropDuplicates(["g", "h"])
-        seed = _prior_state(spark, sdir, batch_id)
-        if seed is not None:
-            combined = combined.unionByName(seed)
-        sk = kmv_truncate(combined, k).persist()
-        try:
-            _write_state(sk.select("g", "h"), sdir, batch_id)
-            est = kmv_estimate(
-                sk.select(F.col("g").alias(group_col), "h", "rn"), group_col, k
-            )
-            seen = sk.groupBy(F.col("g").alias(group_col)).agg(
-                F.count(F.lit(1)).cast("long").alias("n_seen")
-            )
-            write_metrics(
-                seen.join(est, group_col).select(
-                    group_col, "n_seen", "n_distinct_est"
-                ),
-                batch_id,
-            )
-        finally:
-            sk.unpersist()
+    def fold(batch_df: DataFrame, prior: DataFrame | None) -> DataFrame:
+        gh = batch_df.dropDuplicates(["g", "h"])
+        if prior is not None:
+            gh = gh.unionByName(prior)
+        return kmv_truncate(gh, k).select("g", "h")
 
-    return _start_foreach_batch(hashed, fn, checkpoint, trigger)
+    def emit(sk: DataFrame) -> DataFrame:
+        sk = sk.withColumnRenamed("g", group_col)
+        seen = sk.groupBy(group_col).agg(
+            F.count(F.lit(1)).cast("long").alias("n_seen")
+        )
+        return seen.join(kmv_estimate(sk, group_col, k), group_col).select(
+            group_col, "n_seen", "n_distinct_est"
+        )
+
+    return _snapshot_monitor(
+        hashed, fold, emit, name="kmv_state", checkpoint=checkpoint,
+        state_dir=state_dir, write_metrics=write_metrics, trigger=trigger,
+    )
 
 
 def cms_watchlist_topology(
@@ -1125,57 +1145,38 @@ def cms_watchlist_topology(
     depth × width counter rows no matter how many distinct keys flow
     past (the complement of :func:`sketch_metrics_topology`'s
     cardinality monitor: that one asks how MANY distinct, this one
-    asks HOW OFTEN for known keys).
+    asks HOW OFTEN for known keys). A NULL watch entry is dropped.
 
     Cross-batch state IS the sketch grid (≤ d·w ``(seed, bucket,
-    cnt)`` rows), durable in the same versioned compacted parquet
-    layout as ``delta_topology``'s store; merging a batch is the CMS
-    merge property — cell-wise SUM of the stored grid with the
-    batch's grid — so every emitted estimate equals sketching the
-    whole history at once, and ``est ≥ true`` (one-sided) holds at
-    every batch.
+    cnt)`` rows) in the ``cms_state`` snapshot store; merging a batch
+    is the CMS merge property — cell-wise SUM of the stored grid with
+    the batch's grid (:func:`maston_spark.sketches.sum_counts`) — so
+    every emitted estimate equals sketching the whole history at
+    once, and ``est ≥ true`` (one-sided) holds at every batch. The
+    probe is :func:`maston_spark.sketches.cms_probe`, as in the q211
+    twin.
 
     Scale shape per batch: the batch grid is ONE combiner-reduced
     aggregation (≤ d·w rows per task before the tiny shuffle); the
     merge touches 2·d·w rows; the probe joins the broadcast grid
     against the |watch|-row list.
     """
-    from maston_spark.sketches import _cms_cells, cms_merge, cms_sketch
-
-    sdir = _state_dir(source, checkpoint, state_dir, "cms_state")
+    from maston_spark.sketches import cms_probe, cms_sketch, sum_counts
 
     items = source.select(F.col(item_col).alias("item"))
+    probes = source.sparkSession.createDataFrame(
+        [(w,) for w in watch], "item string"
+    )
 
-    def fn(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
+    def fold(batch_df: DataFrame, prior: DataFrame | None) -> DataFrame:
         g = cms_sketch(batch_df, "item", depth, width)
-        seed = _prior_state(spark, sdir, batch_id)
-        if seed is not None:
-            g = cms_merge(g, seed)
-        g = g.persist()
-        try:
-            _write_state(g, sdir, batch_id)
-            probes = spark.createDataFrame(
-                [(w,) for w in watch], "item string"
-            )
-            probe_cells = probes.select(
-                "item", F.explode(_cms_cells(F.col("item"), depth, width)).alias("c")
-            ).select(
-                "item",
-                F.col("c.seed").alias("seed"),
-                F.col("c.bucket").alias("bucket"),
-            )
-            est = (
-                probe_cells.join(F.broadcast(g), ["seed", "bucket"], "left")
-                .select("item", F.coalesce(F.col("cnt"), F.lit(0)).alias("cnt"))
-                .groupBy("item")
-                .agg(F.min("cnt").cast("long").alias("est_count"))
-            )
-            write_metrics(est, batch_id)
-        finally:
-            g.unpersist()
+        return sum_counts(g, prior, ["seed", "bucket"], ["cnt"])
 
-    return _start_foreach_batch(items, fn, checkpoint, trigger)
+    return _snapshot_monitor(
+        items, fold, lambda g: cms_probe(g, probes, "item", depth, width),
+        name="cms_state", checkpoint=checkpoint, state_dir=state_dir,
+        write_metrics=write_metrics, trigger=trigger,
+    )
 
 
 def quantile_metrics_topology(
@@ -1201,11 +1202,10 @@ def quantile_metrics_topology(
     The cross-batch state IS the sketch
     (:func:`maston_spark.sketches.quantile_sample_sketch` — the k
     rows per group with the smallest row-key hashes, values
-    carried), durable in the same versioned compacted parquet layout
-    as ``delta_topology``'s store. Merging a batch is the bottom-k
-    union property (:func:`maston_spark.sketches.
-    quantile_sample_merge`): union the stored survivors with the
-    batch's survivors and re-keep the k (h, value) minima — a SET
+    carried) in the ``quantile_state`` snapshot store. Merging a
+    batch is the bottom-k union property (:func:`maston_spark.
+    sketches.quantile_sample_merge`): union the stored survivors with
+    the batch's survivors and re-keep the k (h, value) minima — a SET
     identity, so every emitted estimate is bit-identical to
     sketching the whole history in one pass (the property
     :func:`kll_quantiles` deliberately trades away for better rank
@@ -1222,38 +1222,28 @@ def quantile_metrics_topology(
         quantile_sample_merge,
     )
 
-    sdir = _state_dir(source, checkpoint, state_dir, "quantile_state")
-
     hashed = source.select(
         F.col(group_col).alias("g"),
         h60(F.col(key_col).cast("string")).alias("h"),
         F.col(value_col).cast("double").alias("value"),
     ).filter(F.col("h").isNotNull() & F.col("value").isNotNull())
 
-    def fn(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
+    def fold(batch_df: DataFrame, prior: DataFrame | None) -> DataFrame:
         w = Window.partitionBy("g").orderBy("h", "value")
         sk = (
             batch_df.withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") <= k)
             .drop("__rn")
         )
-        seed = _prior_state(spark, sdir, batch_id)
-        if seed is not None:
-            sk = quantile_sample_merge(sk, seed, k)
-        sk = sk.persist()
-        try:
-            _write_state(sk.select("g", "h", "value"), sdir, batch_id)
-            write_metrics(
-                quantile_sample_estimate(sk, "g", qs).withColumnRenamed(
-                    "g", group_col
-                ),
-                batch_id,
-            )
-        finally:
-            sk.unpersist()
+        return sk if prior is None else quantile_sample_merge(sk, prior, k)
 
-    return _start_foreach_batch(hashed, fn, checkpoint, trigger)
+    def emit(sk: DataFrame) -> DataFrame:
+        return quantile_sample_estimate(sk, "g", qs).withColumnRenamed("g", group_col)
+
+    return _snapshot_monitor(
+        hashed, fold, emit, name="quantile_state", checkpoint=checkpoint,
+        state_dir=state_dir, write_metrics=write_metrics, trigger=trigger,
+    )
 
 
 def drift_monitor_topology(
@@ -1280,25 +1270,23 @@ def drift_monitor_topology(
     distribution moved since training"), with n_bins cells of state
     no matter how many rows flow past.
 
-    State: the per-bin counters, folded additively into the same
-    versioned snapshot layout as ``delta_topology``'s store. The
-    reference pmf and edges are fixed at start; every emitted TVD is
-    the exact cross-multiplied int64 statistic over
-    (running counts, reference counts).
+    State: the per-bin counters in the ``drift_state`` snapshot
+    store, folded additively. The reference pmf and edges are fixed
+    at start; every emitted TVD is the exact cross-multiplied int64
+    statistic over (running counts, reference counts).
     """
     # edges / binning / merge / TVD arithmetic shared with the
-    # oracle-graded batch twin (q201) via maston_spark.profiling —
-    # the streaming path and the graded path cannot drift apart
+    # oracle-graded batch twin (q201) — the streaming path and the
+    # graded path cannot drift apart
     from maston_spark.profiling import (
         bucket_of_edges,
-        merge_bin_counts,
         ref_bin_edges,
         tvd_from_counts,
     )
+    from maston_spark.sketches import sum_counts
 
     if n_bins < 2:
         raise ValueError("n_bins must be >= 2")
-    sdir = _state_dir(source, checkpoint, state_dir, "drift_state")
 
     edges = ref_bin_edges(ref, value_col, n_bins)
     refv = ref.filter(F.col(value_col).isNotNull()).select(
@@ -1319,32 +1307,23 @@ def drift_monitor_topology(
         bucket_of_edges(F.col(value_col).cast("double"), edges).alias("bin")
     )
 
-    def fn(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        g = batch_df.groupBy("bin").agg(
-            F.count(F.lit(1)).cast("long").alias("n")
-        )
-        seed = _prior_state(spark, sdir, batch_id)
-        if seed is not None:
-            g = merge_bin_counts(g, seed)
-        g = g.persist()
-        try:
-            _write_state(g, sdir, batch_id)
-            stream_counts = {r["bin"]: r["n"] for r in g.collect()}
-            n_i = [int(stream_counts.get(b, 0)) for b in range(n_bins)]
-            n_tot = sum(n_i)
-            tvd = tvd_from_counts(n_i, m_ref)
-            write_metrics(
-                spark.createDataFrame(
-                    [(n_tot, n_ref_total, float(tvd), bool(tvd > threshold))],
-                    "n_stream long, n_ref long, tvd double, drifted boolean",
-                ),
-                batch_id,
-            )
-        finally:
-            g.unpersist()
+    def fold(batch_df: DataFrame, prior: DataFrame | None) -> DataFrame:
+        g = batch_df.groupBy("bin").agg(F.count(F.lit(1)).cast("long").alias("n"))
+        return sum_counts(g, prior, ["bin"], ["n"])
 
-    return _start_foreach_batch(binned, fn, checkpoint, trigger)
+    def emit(g: DataFrame) -> DataFrame:
+        stream_counts = {r["bin"]: r["n"] for r in g.collect()}
+        n_i = [int(stream_counts.get(b, 0)) for b in range(n_bins)]
+        tvd = tvd_from_counts(n_i, m_ref)
+        return g.sparkSession.createDataFrame(
+            [(sum(n_i), n_ref_total, float(tvd), bool(tvd > threshold))],
+            "n_stream long, n_ref long, tvd double, drifted boolean",
+        )
+
+    return _snapshot_monitor(
+        binned, fold, emit, name="drift_state", checkpoint=checkpoint,
+        state_dir=state_dir, write_metrics=write_metrics, trigger=trigger,
+    )
 
 
 def hll_rolling_topology(
@@ -1371,14 +1350,12 @@ def hll_rolling_topology(
     quantile metrics, drift monitor, curation).
 
     The cross-batch state is the register table — ≤ days×2^p
-    ``(__day, bucket, mj)`` rows, durable in versioned parquet under
-    ``state_dir`` (default ``<checkpoint>/hll_state``), versioned per
-    batch id like the other stores. Merging a batch is the HLL union
-    property: per-(day, bucket) MAX of stored and batch registers, so
-    the merged state is bit-identical to sketching the whole history
-    in one pass — which makes every emitted estimate equal to the
-    batch twin's one-shot answer over the data so far
-    (golden-tested).
+    ``(__day, bucket, mj)`` rows in the ``hll_state`` snapshot store.
+    Merging a batch is the HLL union property: per-(day, bucket) MAX
+    of stored and batch registers, so the merged state is
+    bit-identical to sketching the whole history in one pass — which
+    makes every emitted estimate equal to the batch twin's one-shot
+    answer over the data so far (golden-tested).
 
     ``retention_days`` bounds state for unbounded streams: days older
     than the newest day minus ``retention_days`` are dropped at write
@@ -1392,54 +1369,45 @@ def hll_rolling_topology(
     """
     from maston_spark.sketches import hll_raw_estimate, hll_registers
 
-    sdir = _state_dir(source, checkpoint, state_dir, "hll_state")
-
     proj = source.select(
         F.date_trunc("day", F.col(ts_col)).cast("date").alias("__day"),
         F.col(value_col).alias("__v"),
     ).filter(F.col("__day").isNotNull() & F.col("__v").isNotNull())
 
-    def fn(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
+    def fold(batch_df: DataFrame, prior: DataFrame | None) -> DataFrame:
         combined = hll_registers(batch_df, "__day", "__v", p=p)
-        seed = _prior_state(spark, sdir, batch_id)
-        if seed is not None:
-            combined = combined.unionByName(seed)
-        state = combined.groupBy("__day", "bucket").agg(
-            F.max("mj").alias("mj")
+        if prior is not None:
+            combined = combined.unionByName(prior)
+        state = combined.groupBy("__day", "bucket").agg(F.max("mj").alias("mj"))
+        if retention_days is None:
+            return state
+        newest = state.agg(F.max("__day").alias("__newest"))
+        return (
+            state.join(F.broadcast(newest))
+            .filter(
+                F.datediff(F.col("__newest"), F.col("__day"))
+                < F.lit(int(retention_days))
+            )
+            .drop("__newest")
         )
-        if retention_days is not None:
-            newest = state.agg(F.max("__day").alias("__newest"))
-            state = (
-                state.join(F.broadcast(newest))
-                .filter(
-                    F.datediff(F.col("__newest"), F.col("__day"))
-                    < F.lit(int(retention_days))
-                )
-                .drop("__newest")
-            )
-        state = state.persist()
-        try:
-            _write_state(state, sdir, batch_id)
-            days = state.select(F.col("__day").alias("day")).distinct()
-            merged = (
-                F.broadcast(days)
-                .join(
-                    state,
-                    F.datediff(F.col("day"), F.col("__day")).between(
-                        0, window_days - 1
-                    ),
-                )
-                .groupBy("day", "bucket")
-                .agg(F.max("mj").alias("mj"))
-            )
-            write_metrics(
-                hll_raw_estimate(merged, ["day"], p=p).orderBy("day"), batch_id
-            )
-        finally:
-            state.unpersist()
 
-    return _start_foreach_batch(proj, fn, checkpoint, trigger)
+    def emit(state: DataFrame) -> DataFrame:
+        days = state.select(F.col("__day").alias("day")).distinct()
+        merged = (
+            F.broadcast(days)
+            .join(
+                state,
+                F.datediff(F.col("day"), F.col("__day")).between(0, window_days - 1),
+            )
+            .groupBy("day", "bucket")
+            .agg(F.max("mj").alias("mj"))
+        )
+        return hll_raw_estimate(merged, ["day"], p=p).orderBy("day")
+
+    return _snapshot_monitor(
+        proj, fold, emit, name="hll_state", checkpoint=checkpoint,
+        state_dir=state_dir, write_metrics=write_metrics, trigger=trigger,
+    )
 
 
 def srm_monitor_topology(
@@ -1462,24 +1430,22 @@ def srm_monitor_topology(
     ``(variant, n_obs, expected_share, n_exp, chi2, srm_detected)``
     contract as the batch operator because it IS the batch closing
     math — :func:`maston_spark.evaluation.srm_from_counts` over the
-    folded state, so the two paths cannot diverge (the q240 twin
+    folded state, so the two paths cannot diverge (the q250 twin
     grades the fold cross-engine).
 
-    Cross-batch state is the ≤|arms|-row ``(variant, n_obs)`` table,
-    durable in the same versioned compacted parquet layout as
-    ``delta_topology``'s store, folded additively (counter
+    Cross-batch state is the ≤|arms|-row ``(variant, n_obs)`` table
+    in the ``srm_state`` snapshot store, folded additively (counter
     semantics). Per batch: one combiner-reduced count aggregation,
     a ≤|arms|-row merge, and the |arms|-row closing chi-square —
     state and emit are both design-bounded no matter the traffic."""
     from maston_spark.evaluation import srm_from_counts
-
-    sdir = _state_dir(source, checkpoint, state_dir, "srm_state")
+    from maston_spark.sketches import sum_counts
 
     known = sorted({str(k) for k in expected}, key=str)
+    exp_str = {str(k): v for k, v in expected.items()}
     items = source.select(F.col(variant_col).cast("string").alias("variant"))
 
-    def fn(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
+    def fold(batch_df: DataFrame, prior: DataFrame | None) -> DataFrame:
         rogue = batch_df.filter(
             F.col("variant").isNotNull() & ~F.col("variant").isin(known)
         )
@@ -1491,24 +1457,13 @@ def srm_monitor_topology(
             .groupBy("variant")
             .agg(F.count(F.lit(1)).cast("long").alias("n_obs"))
         )
-        seed = _prior_state(spark, sdir, batch_id)
-        if seed is not None:
-            counts = (
-                counts.unionByName(seed)
-                .groupBy("variant")
-                .agg(F.sum("n_obs").cast("long").alias("n_obs"))
-            )
-        counts = counts.persist()
-        try:
-            _write_state(counts, sdir, batch_id)
-            exp_str = {str(k): v for k, v in expected.items()}
-            write_metrics(
-                srm_from_counts(counts, exp_str, chi2_critical), batch_id
-            )
-        finally:
-            counts.unpersist()
+        return sum_counts(counts, prior, ["variant"], ["n_obs"])
 
-    return _start_foreach_batch(items, fn, checkpoint, trigger)
+    return _snapshot_monitor(
+        items, fold, lambda c: srm_from_counts(c, exp_str, chi2_critical),
+        name="srm_state", checkpoint=checkpoint, state_dir=state_dir,
+        write_metrics=write_metrics, trigger=trigger,
+    )
 
 
 def cusum_monitor_topology(
@@ -1536,43 +1491,32 @@ def cusum_monitor_topology(
     q272 prefix twin grades the fold cross-engine).
 
     Cross-batch state is the |groups|×|buckets| ``(group, __bkt,
-    __c)`` count table, durable in the same versioned compacted
-    parquet layout as ``delta_topology``'s store. The fold is
-    ADDITIVE (counter semantics): a late event lands in its original
-    bucket's cell and the statistic self-corrects on the next
-    emission — no watermark surgery. Per batch: one combiner-reduced
-    bucket aggregation, a
-    state-sized merge, and the bounded-series closing windows —
-    state and emit are bucket-bounded no matter the traffic."""
+    __c)`` count table in the ``cusum_state`` snapshot store. The
+    fold is ADDITIVE (counter semantics): a late event lands in its
+    original bucket's cell and the statistic self-corrects on the
+    next emission — no watermark surgery. Per batch: one
+    combiner-reduced bucket aggregation, a state-sized merge, and
+    the bounded-series closing windows — state and emit are
+    bucket-bounded no matter the traffic."""
     from maston_spark.relational import cusum_from_counts
-
-    sdir = _state_dir(source, checkpoint, state_dir, "cusum_state")
+    from maston_spark.sketches import sum_counts
 
     items = source.select(
         F.col(group_col).cast("string").alias("group"),
         F.date_trunc(unit, F.col(ts_col)).alias("__bkt"),
     ).filter(F.col("group").isNotNull() & F.col("__bkt").isNotNull())
 
-    def fn(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
+    def fold(batch_df: DataFrame, prior: DataFrame | None) -> DataFrame:
         counts = batch_df.groupBy("group", "__bkt").agg(
             F.count(F.lit(1)).cast("long").alias("__c")
         )
-        seed = _prior_state(spark, sdir, batch_id)
-        if seed is not None:
-            counts = (
-                counts.unionByName(seed)
-                .groupBy("group", "__bkt")
-                .agg(F.sum("__c").cast("long").alias("__c"))
-            )
-        counts = counts.persist()
-        try:
-            _write_state(counts, sdir, batch_id)
-            write_metrics(cusum_from_counts(counts, "group"), batch_id)
-        finally:
-            counts.unpersist()
+        return sum_counts(counts, prior, ["group", "__bkt"], ["__c"])
 
-    return _start_foreach_batch(items, fn, checkpoint, trigger)
+    return _snapshot_monitor(
+        items, fold, lambda c: cusum_from_counts(c, "group"),
+        name="cusum_state", checkpoint=checkpoint, state_dir=state_dir,
+        write_metrics=write_metrics, trigger=trigger,
+    )
 
 
 def vocab_saturation_topology(
@@ -1601,12 +1545,13 @@ def vocab_saturation_topology(
     The durable cross-batch state is the per-(group, token) COUNT
     table, not the frequency-of-frequencies: fof is NOT additive (a
     token seen once in batch 1 and once in batch 2 is one doubleton,
-    not two singletons), while token counts fold with plain
-    union+sum — the q272 counter discipline, so a late or replayed
-    document self-corrects the statistic on the next emission with
-    no watermark surgery. Counts are TRUE totals (a {1,2,≥3} clamp
-    would shrink nothing that matters — the state's row count is
-    |vocab| either way — and would break ``n_tokens = Σ count``).
+    not two singletons), while token counts fold with
+    :func:`maston_spark.sketches.sum_counts` — the q272 counter
+    discipline, so a late or replayed document self-corrects the
+    statistic on the next emission with no watermark surgery. Counts
+    are TRUE totals (a {1,2,≥3} clamp would shrink nothing that
+    matters — the state's row count is |vocab| either way — and would
+    break ``n_tokens = Σ count``).
 
     State layout — SEGMENTED count deltas (the curation topology's
     delta+compaction discipline adapted to ADDITIVE counters; the
@@ -1628,15 +1573,13 @@ def vocab_saturation_topology(
       read-compatible as a run.
 
     Read rule — coverage, not row dedup (additive counts can't dedup
-    the way the curation topology's content-hash SET state does): the
-    NEWEST run with id <= batch covers every segment at or below its
-    id, so the reader takes that run plus only the deltas ABOVE it. A
-    crash between a compaction write and the consumed-segment delete
-    leaves both visible, and the coverage rule keeps the sum exact.
-    Retry corners: a stored run at ``batch_id`` means the previous
-    attempt already folded this batch — it IS the state, never
-    re-added; a failed attempt's own ``d{batch_id}`` is overwritten
-    in place (same replayed source rows, same delta).
+    the way the curation topology's content-hash SET state does):
+    batch B reads the NEWEST run with id < B, which covers every
+    segment at or below its id, plus only the deltas above it, and
+    drops the covered segments. Compaction writes ``c<B>`` and
+    deletes nothing, so a retried B (whose batch never committed)
+    finds the same run and deltas, recomputes the same counts and
+    overwrites its own ``d<B>`` and ``c<B>`` with the same rows.
 
     Scale shape per batch: one combiner-reduced (group, token)
     aggregation over the BATCH (the shuffle carries the batch's
@@ -1650,6 +1593,7 @@ def vocab_saturation_topology(
     from functools import reduce
 
     from maston_spark.llm.text import vocab_richness_from_counts
+    from maston_spark.sketches import sum_counts
 
     sdir = _state_dir(source, checkpoint, state_dir, "vocab_state")
 
@@ -1667,66 +1611,34 @@ def vocab_saturation_topology(
         counts = batch_df.groupBy("group", "__tok").agg(
             F.count(F.lit(1)).cast("long").alias("__c")
         )
-        if sdir is None:
-            merged = counts.persist()
-            try:
-                write_metrics(vocab_richness_from_counts(merged, "group"), batch_id)
-            finally:
-                merged.unpersist()
-            return
-        segs = _state_segments(spark, sdir)
-        runs = [s for s in segs if s[0] in ("c", "v") and s[1] <= batch_id]
-        run = max(runs, key=lambda s: s[1], default=None)
-        if run is not None and run[1] == batch_id:
-            # retry corner: the previous attempt already compacted
-            # this batch — the stored run IS the state, never re-added
-            merged = spark.read.parquet(
-                f"{sdir}/{run[0]}{run[1]}"
-            ).localCheckpoint(eager=True)
-            consumed = [
-                s
-                for s in segs
-                if s != run
-                and s[1] <= batch_id
-                and (s[0] == "d" or s[1] < batch_id)
-            ]
-            try:
-                write_metrics(vocab_richness_from_counts(merged, "group"), batch_id)
-                _drop_segments(spark, sdir, consumed)
-            finally:
-                merged.unpersist()
-            return
-        # O(batch) state write: this batch's delta (a failed prior
-        # attempt's d{batch_id} holds the same rows — overwrite)
-        counts.write.mode("overwrite").parquet(f"{sdir}/d{batch_id}")
-        floor = run[1] if run is not None else -1
-        deltas = [
-            s for s in segs if s[0] == "d" and floor < s[1] < batch_id
-        ]
-        frames = [counts] + [
-            spark.read.parquet(f"{sdir}/{k}{i}") for k, i in ([run] if run else []) + deltas
-        ]
-        merged = (
-            reduce(lambda a, b: a.unionByName(b), frames)
-            .groupBy("group", "__tok")
-            .agg(F.sum("__c").cast("long").alias("__c"))
-            .persist()
-        )
+        live, stored = [], None
+        if sdir is not None:
+            segs = [s for s in _state_segments(spark, sdir) if s[1] < batch_id]
+            run = max(
+                (s for s in segs if s[0] in ("c", "v")),
+                key=lambda s: s[1],
+                default=("c", -1),
+            )
+            _drop_segments(
+                spark, sdir, [s for s in segs if s[1] <= run[1] and s != run]
+            )
+            live = [s for s in segs if s == run or s[1] > run[1]]
+            # O(batch) state write: this batch's delta (a failed prior
+            # attempt's d{batch_id} holds the same rows — overwrite)
+            counts.write.mode("overwrite").parquet(f"{sdir}/d{batch_id}")
+        if live:
+            stored = reduce(
+                DataFrame.unionByName,
+                [spark.read.parquet(f"{sdir}/{k}{i}") for k, i in live],
+            )
+        merged = sum_counts(counts, stored, ["group", "__tok"], ["__c"]).persist()
         try:
             write_metrics(vocab_richness_from_counts(merged, "group"), batch_id)
-            # amortized compaction: fold once `compact_every` live
-            # segments accumulate, reusing the persisted merge (no
-            # extra read); write-then-delete + the coverage read rule
-            # make a crash between the two harmless
-            if len(frames) >= int(compact_every):
+            # amortized compaction once `compact_every` segments feed
+            # the merge, reusing the persisted merge (no extra read);
+            # the covered segments go at the start of the next batch
+            if sdir is not None and 1 + len(live) >= int(compact_every):
                 merged.write.mode("overwrite").parquet(f"{sdir}/c{batch_id}")
-                _drop_segments(
-                    spark,
-                    sdir,
-                    ([run] if run else [])
-                    + deltas
-                    + [("d", batch_id)],
-                )
         finally:
             merged.unpersist()
 
@@ -1757,51 +1669,40 @@ def privacy_gate_topology(
     cannot diverge (the q296 prefix twin grades the fold
     cross-engine).
 
-    The durable cross-batch state is the CELL count table — k and l
-    are both anti-monotone under row arrival ONLY at cell
-    granularity (a class's k grows but its l can also grow; neither
-    per-class summary is additive, while cell counts fold with
-    plain union+sum — the q272/q283 counter discipline). Late or
-    replayed rows self-correct on the next emission. Same versioned
-    compacted parquet layout as ``delta_topology``.
+    The durable cross-batch state is the CELL count table in the
+    ``privacy_state`` snapshot store — k and l are both anti-monotone
+    under row arrival ONLY at cell granularity (a class's k grows but
+    its l can also grow; neither per-class summary is additive, while
+    cell counts fold additively — the q272/q283 counter discipline).
+    Late or replayed rows self-correct on the next emission.
 
     Scale shape per batch: one combiner-reduced cell aggregation
     over the BATCH, one |state|-sized merge, one |classes|-bounded
     close — state is bounded by |QI-domain × sensitive-domain|, the
     audit's own working set."""
     from maston_spark.profiling import k_anonymity_from_counts
+    from maston_spark.sketches import sum_counts
 
     if not qi_cols:
         raise ValueError("privacy_gate_topology: need at least one QI column")
-    sdir = _state_dir(source, checkpoint, state_dir, "privacy_state")
 
     rows = source.select(
         *[F.col(c) for c in qi_cols],
         F.col(sensitive_col).alias("__sv"),
     )
+    cells = [*qi_cols, "__sv"]
 
-    def fn(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        counts = batch_df.groupBy(*qi_cols, "__sv").agg(
+    def fold(batch_df: DataFrame, prior: DataFrame | None) -> DataFrame:
+        counts = batch_df.groupBy(*cells).agg(
             F.count(F.lit(1)).cast("long").alias("__n")
         )
-        seed = _prior_state(spark, sdir, batch_id)
-        if seed is not None:
-            counts = (
-                counts.unionByName(seed)
-                .groupBy(*qi_cols, "__sv")
-                .agg(F.sum("__n").cast("long").alias("__n"))
-            )
-        counts = counts.persist()
-        try:
-            _write_state(counts, sdir, batch_id)
-            write_metrics(
-                k_anonymity_from_counts(counts, qi_cols, thresholds), batch_id
-            )
-        finally:
-            counts.unpersist()
+        return sum_counts(counts, prior, cells, ["__n"])
 
-    return _start_foreach_batch(rows, fn, checkpoint, trigger)
+    return _snapshot_monitor(
+        rows, fold, lambda c: k_anonymity_from_counts(c, qi_cols, thresholds),
+        name="privacy_state", checkpoint=checkpoint, state_dir=state_dir,
+        write_metrics=write_metrics, trigger=trigger,
+    )
 
 
 def contamination_gate_topology(
@@ -1827,16 +1728,15 @@ def contamination_gate_topology(
     quarantine, not land in the training mix.
 
     The durable cross-batch state is the per-group ADDITIVE counter
-    row ``(n_docs, n_grams, n_hits, n_docs_hit)`` — per-doc
-    fractions don't fold, counters do (the q272/q283/q296 counter
-    discipline), and a document's contribution is decided entirely
-    within its own batch (its grams probe a STATIC benchmark), so
-    the fold is exact under replay. Emits the exact contract of
+    row ``(n_docs, n_grams, n_hits, n_docs_hit)`` in the
+    ``contamination_state`` snapshot store — per-doc fractions don't
+    fold, counters do (the q272/q283/q296 counter discipline), and a
+    document's contribution is decided entirely within its own batch
+    (its grams probe a STATIC benchmark), so the fold is exact under
+    replay. Emits the exact contract of
     :func:`maston_spark.llm.text.contamination_from_counts` because
     it IS that closing math over the folded state (the q303 prefix
-    twin grades the fold cross-engine). State is |groups| rows —
-    intrinsically tiny, so the versioned snapshot layout is the right
-    shape, not the vocab topology's segment log.
+    twin grades the fold cross-engine).
 
     Scale shape per batch: the benchmark gram table is materialized
     ONCE at topology start (an eval suite is tiny — broadcast side),
@@ -1848,8 +1748,7 @@ def contamination_gate_topology(
         contamination_from_counts,
         tokens,
     )
-
-    sdir = _state_dir(source, checkpoint, state_dir, "contamination_state")
+    from maston_spark.sketches import sum_counts
 
     gram_expr = (
         f"explode(transform(sequence(0, size(__toks) - {n}), "
@@ -1871,32 +1770,19 @@ def contamination_gate_topology(
         F.col(text_col).alias("__txt"),
     )
 
-    def fn(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
+    def fold(batch_df: DataFrame, prior: DataFrame | None) -> DataFrame:
         counts = contamination_counts(
-            batch_df, bench_grams, "__grp", id_col="__id",
-            text_col="__txt", n=n,
+            batch_df, bench_grams, "__grp", id_col="__id", text_col="__txt", n=n,
         )
-        seed = _prior_state(spark, sdir, batch_id)
-        if seed is not None:
-            counts = (
-                counts.unionByName(seed)
-                .groupBy("group")
-                .agg(
-                    *[
-                        F.sum(c).cast("long").alias(c)
-                        for c in ("n_docs", "n_grams", "n_hits", "n_docs_hit")
-                    ]
-                )
-            )
-        counts = counts.persist()
-        try:
-            _write_state(counts, sdir, batch_id)
-            write_metrics(contamination_from_counts(counts), batch_id)
-        finally:
-            counts.unpersist()
+        return sum_counts(
+            counts, prior, ["group"], ["n_docs", "n_grams", "n_hits", "n_docs_hit"]
+        )
 
-    return _start_foreach_batch(rows, fn, checkpoint, trigger)
+    return _snapshot_monitor(
+        rows, fold, contamination_from_counts, name="contamination_state",
+        checkpoint=checkpoint, state_dir=state_dir,
+        write_metrics=write_metrics, trigger=trigger,
+    )
 
 
 def ams_monitor_topology(
@@ -1927,15 +1813,13 @@ def ams_monitor_topology(
     the additive fold cross-engine (the q240/q272/q283/q296/q303
     twin discipline; this completes it for the optimizer family).
 
-    Cross-batch state is the ≤2-row lane-total table, durable in the
-    versioned compacted parquet layout shared with the other
-    monitors; the fold is ADDITIVE (exact int64 counter semantics —
-    ±1 sums fold with no error term). Per batch: one combiner-reduced
-    2-row aggregation, a ≤4-row merge, the O(lanes) closing dot
-    product — state and emit are O(lanes) no matter the traffic."""
-    from maston_spark.sketches import ams_join_from_totals, ams_lane_totals
-
-    sdir = _state_dir(source, checkpoint, state_dir, "ams_state")
+    Cross-batch state is the ≤2-row lane-total table in the
+    ``ams_state`` snapshot store; the fold is ADDITIVE (exact int64
+    counter semantics — ±1 sums fold with no error term). Per batch:
+    one combiner-reduced 2-row aggregation, a ≤4-row merge, the
+    O(lanes) closing dot product — state and emit are O(lanes) no
+    matter the traffic."""
+    from maston_spark.sketches import ams_join_from_totals, ams_lane_totals, sum_counts
 
     items = source.select(
         F.col(side_col).cast("string").alias("side"),
@@ -1943,8 +1827,7 @@ def ams_monitor_topology(
     )
     sum_cols = ["n"] + [f"t{l}" for l in range(n_lanes)]
 
-    def fn(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
+    def fold(batch_df: DataFrame, prior: DataFrame | None) -> DataFrame:
         rogue = batch_df.filter(
             F.col("side").isNotNull() & ~F.col("side").isin("a", "b")
         )
@@ -1954,22 +1837,12 @@ def ams_monitor_topology(
         totals = ams_lane_totals(
             batch_df.filter(F.col("side") == "a"), "key", "a", n_lanes
         ).unionByName(
-            ams_lane_totals(
-                batch_df.filter(F.col("side") == "b"), "key", "b", n_lanes
-            )
+            ams_lane_totals(batch_df.filter(F.col("side") == "b"), "key", "b", n_lanes)
         )
-        seed = _prior_state(spark, sdir, batch_id)
-        if seed is not None:
-            totals = (
-                totals.unionByName(seed)
-                .groupBy("side")
-                .agg(*[F.sum(c).cast("long").alias(c) for c in sum_cols])
-            )
-        totals = totals.persist()
-        try:
-            _write_state(totals, sdir, batch_id)
-            write_metrics(ams_join_from_totals(totals, n_lanes), batch_id)
-        finally:
-            totals.unpersist()
+        return sum_counts(totals, prior, ["side"], sum_cols)
 
-    return _start_foreach_batch(items, fn, checkpoint, trigger)
+    return _snapshot_monitor(
+        items, fold, lambda t: ams_join_from_totals(t, n_lanes),
+        name="ams_state", checkpoint=checkpoint, state_dir=state_dir,
+        write_metrics=write_metrics, trigger=trigger,
+    )

@@ -177,7 +177,7 @@ def safe_from_avro_arrow(
     """
     import pyarrow as pa
 
-    from pyspark.sql.types import BinaryType, StringType, StructField, StructType
+    from pyspark.sql.types import StructField, StructType
 
     from maston_spark import avro_codec as AC
     from maston_spark import avro_vec as AV
@@ -190,17 +190,7 @@ def safe_from_avro_arrow(
         )
 
     ok_type = AC.record_struct_type(avro_schema)
-    err_type = StructType(
-        [
-            StructField("code", StringType()),
-            StructField("message", StringType()),
-            StructField("target_class", StringType()),
-            StructField("exception_class", StringType()),
-            StructField("exception_message", StringType()),
-            StructField("stacktrace", StringType()),
-            StructField("raw_bytes", BinaryType()),
-        ]
-    )
+    err_type = E.error_struct_type()
     out_schema = StructType(
         list(df.schema.fields)
         + [StructField(OK, ok_type), StructField(ERR, err_type)]
@@ -289,7 +279,7 @@ def safe_from_avro_evolving(
     import numpy as np
     import pyarrow as pa
 
-    from pyspark.sql.types import BinaryType, StringType, StructField, StructType
+    from pyspark.sql.types import StructField, StructType
 
     from maston_spark import avro_codec as AC
     from maston_spark import avro_vec as AV
@@ -341,17 +331,7 @@ def safe_from_avro_evolving(
     decoders = {int(i): _make_group_decoder(w) for i, w in writer_schemas_by_id.items()}
 
     ok_type = AC.record_struct_type(reader_schema)
-    err_type = StructType(
-        [
-            StructField("code", StringType()),
-            StructField("message", StringType()),
-            StructField("target_class", StringType()),
-            StructField("exception_class", StringType()),
-            StructField("exception_message", StringType()),
-            StructField("stacktrace", StringType()),
-            StructField("raw_bytes", BinaryType()),
-        ]
-    )
+    err_type = E.error_struct_type()
     out_schema = StructType(
         list(df.schema.fields)
         + [StructField(OK, ok_type), StructField(ERR, err_type)]
@@ -539,22 +519,12 @@ def safe_from_avro_python(
     with the raw payload preserved. NULL input (tombstone) stays
     valid with NULL ``ok``.
     """
-    from pyspark.sql.types import BinaryType, StringType, StructField, StructType
+    from pyspark.sql.types import StructField, StructType
 
     from maston_spark import avro_codec as AC
 
     ok_type = AC.record_struct_type(avro_schema)
-    err_type = StructType(
-        [
-            StructField("code", StringType()),
-            StructField("message", StringType()),
-            StructField("target_class", StringType()),
-            StructField("exception_class", StringType()),
-            StructField("exception_message", StringType()),
-            StructField("stacktrace", StringType()),
-            StructField("raw_bytes", BinaryType()),
-        ]
-    )
+    err_type = E.error_struct_type()
     out_schema = StructType(
         list(df.schema.fields)
         + [StructField(OK, ok_type), StructField(ERR, err_type)]

@@ -13,7 +13,6 @@ from __future__ import annotations
 import shutil
 import tempfile
 
-import pytest
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import Row
 
@@ -279,64 +278,5 @@ def test_delta_stream_ttl_evicts_idle_key(spark):
             q.stop()
         assert emitted == [0, 1]
     finally:
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(chk, ignore_errors=True)
-
-
-def _protobuf_ok() -> bool:
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(
-    not _protobuf_ok(),
-    reason="transformWithStateInPandas needs google.protobuf, absent here",
-)
-def test_delta_tws_matches_reference_golden(spark):
-    """Same golden through the v2 arbitrary-state API
-    (transformWithStateInPandas + ValueState), which needs the
-    RocksDB state store provider."""
-    from maston_spark.delta import delta_dedup_tws
-
-    src = tempfile.mkdtemp(prefix="delta_tws_src_")
-    chk = tempfile.mkdtemp(prefix="delta_tws_chk_")
-    prev = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider",
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        batch1, batch2 = GOLDEN[:3], GOLDEN[3:]
-        spark.createDataFrame(batch1).coalesce(1).write.parquet(src + "/b1")
-        spark.createDataFrame(batch2).coalesce(1).write.parquet(src + "/b2")
-        schema = spark.createDataFrame(GOLDEN).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src + "/b*")
-        )
-        out = delta_dedup_tws(stream, ["business_key"], ["seq"], ACCEPT)
-        q = (
-            out.writeStream.format("memory")
-            .queryName("delta_tws")
-            .outputMode("append")
-            .option("checkpointLocation", chk)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            rows = spark.sql("select * from delta_tws").collect()
-        finally:
-            q.stop()
-        assert _emitted(rows) == EXPECTED
-    finally:
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
         shutil.rmtree(src, ignore_errors=True)
         shutil.rmtree(chk, ignore_errors=True)

@@ -2640,7 +2640,10 @@ def test_topology_crash_restart_matches_uninterrupted(spark, cleanup, name):
     second run, of batch 1), followed by a restart on the same
     checkpoint, must emit per batch exactly what an uninterrupted run
     emits: the retried batch recomputes its first attempt's state and
-    output. The ``v<N>`` stores keep at most two versions."""
+    output. The same holds when the last batch ran to the end but its
+    commit was lost, which re-runs it over everything it wrote
+    (vocab's compaction at that batch included). The ``v<N>`` stores
+    keep at most two versions."""
     rows, start, state_name = _CRASH_CASES[name]
     stream, src = replay_stream(spark.createDataFrame(rows), batches=3)
     cleanup.append(src)
@@ -2658,6 +2661,14 @@ def test_topology_crash_restart_matches_uninterrupted(spark, cleanup, name):
     run(chk, sink)
     expect = sink.batches
     assert len(expect) == 3
+
+    # commit lost: batch 2 re-runs on top of its own completed attempt
+    for f in ("2", ".2.crc"):
+        if os.path.exists(f"{chk}/commits/{f}"):
+            os.remove(f"{chk}/commits/{f}")
+    sink = _CrashingSink()
+    run(chk, sink)
+    assert sink.batches == expect[2:], "commit of batch 2 lost"
 
     for crash_at in (0, 1):
         chk = _tmp()
