@@ -420,8 +420,7 @@ def budget_select(
     """
     import pandas as pd
 
-    spark = df.sparkSession
-    p = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    p = num_partitions or df.sparkSession.sparkContext.defaultParallelism
 
     # PINNED persist, deliberately NOT scoped_persist: the driver
     # collects per-__pid totals from THIS materialization, and the

@@ -1679,8 +1679,7 @@ def _encoding_run_summary(
     can assert every Window carries the (column, __pid) partition
     spec (the single-task ``Window.partitionBy(column)`` regression
     q305 escaped once, measured 8.4× worse at 10×)."""
-    spark = df.sparkSession
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n_parts = df.sparkSession.sparkContext.defaultParallelism
     # round-16 optimization (guide §2.3 — shuffle fewer bytes; §2.2 —
     # widen the map side): range-partition the PRE-EXPLODE rows on the
     # caller's order prefix, then explode to (column, value) pairs

@@ -295,7 +295,10 @@ def global_rank(
     :func:`maston_spark.llm.sampling.budget_select`:
 
     1. ``repartitionByRange`` on the sort key (the only full-data
-       shuffle) + ``sortWithinPartitions``, then a PINNED persist so
+       shuffle) into ``num_partitions`` or, by default,
+       ``defaultParallelism`` (the cores: AQE never coalesces an
+       explicit count, and every range partition is one Python task
+       in step 3) + ``sortWithinPartitions``, then a PINNED persist so
        both phases see identical partition boundaries
        (RangePartitioner samples boundaries per execution; an
        evicted cache would re-sample and the offsets would silently
@@ -309,8 +312,7 @@ def global_rank(
     ``order_by`` must be a TOTAL order (include a tiebreaker) for the
     rank to be deterministic; with ties unbroken, tied rows receive
     the arbitrary-but-valid ranks of some linearization."""
-    spark = df.sparkSession
-    p = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    p = num_partitions or df.sparkSession.sparkContext.defaultParallelism
     ordered = (
         df.repartitionByRange(p, *order_by)
         .sortWithinPartitions(*order_by)
@@ -1594,8 +1596,7 @@ def compaction_plan(
     The output is |groups| rows."""
     from maston_spark.caching import scoped_persist
 
-    spark = files.sparkSession
-    p = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    p = files.sparkSession.sparkContext.defaultParallelism
     s = F.col(size_col).cast("long")
     ordered = scoped_persist(
         # NULL sizes dropped up front: the old window form emitted a

@@ -1,6 +1,6 @@
 """SparkSession factory + table loaders for the maston-spark engine.
 
-Scale notes (100 TB design intent, tested on local[32]):
+Scale notes (100 TB design intent, tested on ``local[<cores>]``):
 
 - AQE is on: runtime coalescing of shuffle partitions, skew-join
   splitting, and dynamic broadcast demotion all matter far more at
@@ -8,9 +8,19 @@ Scale notes (100 TB design intent, tested on local[32]):
 - ``spark.sql.session.timeZone=UTC`` pins timestamp semantics so
   results are reproducible across engines (the DuckDB oracle reads
   the same parquet with naive/UTC timestamps).
-- Shuffle partitions default to 32 for local runs; a real cluster
-  deployment overrides this (or lets AQE coalesce from a high
-  initial number, e.g. 2000 for 100 TB inputs).
+- The local master runs one task slot per core this process may use
+  (``SPARK_GRAFT_CPUS`` overrides it), so ``defaultParallelism`` is
+  the core count. Explicit exchanges (the delta fold, the prefix-rank
+  operators, the ``llm.*`` repartitions) are sized to it.
+- Shuffle partitions stay at 32 for the exchanges Catalyst plans; AQE
+  coalesces them at runtime. A real cluster deployment overrides this
+  (or lets AQE coalesce from a high initial number, e.g. 2000 for
+  100 TB inputs).
+- Python workers start from :mod:`maston_spark._worker_daemon`, which
+  imports pyspark from outside ``pyspark.zip`` so a task pays no
+  per-task zip re-read. It is set only when workers can import this
+  package (they start in this process's working directory with its
+  ``PYTHONPATH``).
 - The driver JVM (in local mode also the executor) starts with a
   quarter of ``spark.driver.memory`` as its heap instead of the JVM
   default of 1/64 of physical RAM. A short first micro-batch can
@@ -24,6 +34,7 @@ Scale notes (100 TB design intent, tested on local[32]):
 from __future__ import annotations
 
 import os
+import site
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -54,9 +65,18 @@ def _initial_heap_option(memory: str) -> str:
     return f"-Xms{int(num) * _MEM_UNITS[unit] // 4 >> 20}m"
 
 
+def _engine_on_worker_path() -> bool:
+    """Whether a local Python worker can import ``maston_spark``: the
+    daemon runs ``python -m`` in this process's working directory with
+    its ``PYTHONPATH``, on top of its own site-packages."""
+    root = os.path.dirname(os.path.dirname(os.path.realpath(__file__)))
+    entries = [os.getcwd(), *os.environ.get("PYTHONPATH", "").split(os.pathsep)]
+    return any(p and os.path.realpath(p) == root for p in entries + site.getsitepackages())
+
+
 def build_session(app_name: str = "maston-spark", master: str | None = None) -> SparkSession:
     """Create (or fetch) a SparkSession tuned for this engine."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
     builder = (
         SparkSession.builder.appName(app_name)
@@ -72,6 +92,8 @@ def build_session(app_name: str = "maston-spark", master: str | None = None) -> 
         .config("spark.driver.extraJavaOptions", _initial_heap_option(driver_mem))
         .config("spark.ui.enabled", "false")
     )
+    if _engine_on_worker_path():
+        builder = builder.config("spark.python.daemon.module", "maston_spark._worker_daemon")
     return builder.getOrCreate()
 
 

@@ -466,7 +466,9 @@ def _md5_lane_sign_totals(m, n_lanes: int) -> list:
     throughput at 16 lanes (round-17, guide §1.2 step 2). A NULL hash
     contributes −1 in both formulations: the null bit is skipped by
     ``sum`` while ``count(1)`` still counts the row, matching the
-    ``when(...).otherwise(-1)`` null path."""
+    ``when(...).otherwise(-1)`` null path. ``sum`` of only NULL bits
+    is NULL, so it is coalesced to 0: an all-NULL column has every
+    lane total at −n_rows, not NULL."""
     h1 = F.conv(F.substring(m, 17, 8), 16, 10).cast("long")
     h2 = F.conv(F.substring(m, 25, 8), 16, 10).cast("long")
     out = []
@@ -474,7 +476,7 @@ def _md5_lane_sign_totals(m, n_lanes: int) -> list:
         h = h1 if l < 8 else h2
         bit = F.shiftrightunsigned(h, 31 - 4 * (l % 8)).bitwiseAND(F.lit(1))
         out.append(
-            (F.lit(2) * F.sum(bit) - F.count(F.lit(1))).cast("long")
+            (F.lit(2) * F.coalesce(F.sum(bit), F.lit(0)) - F.count(F.lit(1))).cast("long")
         )
     return out
 

@@ -959,6 +959,38 @@ def test_bh_fdr_step_up_semantics(spark):
     assert sum(r.rejected for r in out.values()) == 4
 
 
+def test_bh_fdr_tasks_bounded_by_cores(spark, sf_dir):
+    """Every range partition of global_rank is one Python task, and AQE
+    never coalesces an explicit partition count, so no stage of q264
+    may run more tasks than the cores. Shuffle partitions are set to
+    the session default of 32 so a rank sized by that setting fails
+    here."""
+    from maston_spark.queries.analytics_q import q264_bh_fdr
+
+    sc = spark.sparkContext
+    conf = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "32")
+    group = "q264-task-bound"
+    sc.setJobGroup(group, "q264_bh_fdr")
+    try:
+        assert q264_bh_fdr(spark, sf_dir).count() > 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        spark.conf.set(conf, prev)
+
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    assert jobs, "q264's jobs must run under the test's job group"
+    ran = {}
+    for j in jobs:
+        for sid in tracker.getJobInfo(j).stageIds:
+            info = tracker.getStageInfo(sid)
+            if info is not None:
+                ran[sid] = info.numCompletedTasks + info.numFailedTasks
+    assert max(ran.values()) <= sc.defaultParallelism, ran
+
+
 def test_kendall_tau_group_split_across_arrow_batches(spark):
     """The round-16 streaming-group kernel carries a group's rows
     across Arrow batch boundaries; force tiny batches so every group

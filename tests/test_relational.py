@@ -3,6 +3,7 @@ top-k per group) against hand-computed expectations."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import Row, functions as F
 
 from maston_spark.relational import asof_join, top_k_per_group
@@ -1047,10 +1048,13 @@ def test_scd2_history_runs_and_intervals(spark):
     assert len(cur) == 2
 
 
-def test_global_rank_matches_windowed_row_number(spark):
+@pytest.mark.parametrize("num_partitions", [1, None, 32], ids=["1", "cores", "32"])
+def test_global_rank_matches_windowed_row_number(spark, num_partitions):
     """Two-phase global_rank == the single-task row_number window for
     a multiset with duplicate sort keys (total order via tiebreaker),
-    across an input partitioning the range exchange must override."""
+    across an input partitioning the range exchange must override, at
+    one range partition, the default (the cores) and 32: the ranks do
+    not depend on the partition count."""
     from maston_spark.relational import global_rank
 
     rows = [(i % 17, f"t{i:04d}") for i in range(500)]
@@ -1058,7 +1062,10 @@ def test_global_rank_matches_windowed_row_number(spark):
     got = {
         (r.freq, r.tok): r.rank
         for r in global_rank(
-            df, [F.col("freq").desc(), F.col("tok").asc()], rank_col="rank"
+            df,
+            [F.col("freq").desc(), F.col("tok").asc()],
+            rank_col="rank",
+            num_partitions=num_partitions,
         ).collect()
     }
     expected_order = sorted(rows, key=lambda t: (-t[0], t[1]))

@@ -146,6 +146,12 @@ def test_ams_f2_golden(spark):
     # deterministic: same input -> bit-identical estimate
     r2 = ams_f2(df, "k", n_lanes=16).collect()[0]
     assert r2.f2_est == r.f2_est
+    # all-NULL column: a NULL value signs -1 in every lane (the oracle's
+    # CASE ... ELSE -1), so each lane total is -2 and the estimate is
+    # exactly (-2)^2 = 4 = F2 of the one NULL group of size 2
+    nulls = spark.createDataFrame([(None,), (None,)], "k string")
+    r = ams_f2(nulls, "k", n_lanes=16).collect()[0]
+    assert (r.n_rows, r.f2_exact, r.f2_est, r.rel_err) == (2, 4, 4.0, 0.0)
 
 
 from hypothesis import given, settings, strategies as st  # noqa: E402
