@@ -8,7 +8,7 @@ suppress. Golden behavior: the 6-record sequence in
 topology/VavrKStreamWithDeltaTopologyTest.java:312-331 emits records
 0, 2, 3 and 5.
 
-Three implementations, fastest first:
+Two implementations, fastest first:
 
 1. ``delta_dedup_expr`` — batch, pure column algebra (lag window).
    Valid whenever the predicate is "any of these columns changed",
@@ -23,17 +23,15 @@ Three implementations, fastest first:
    in one linear pass over its Arrow batches: key-run boundaries are
    found column-wise, and ``is_updated`` runs only on the second and
    later rows of a run. This is the reference implementation of the
-   general semantics (and the oracle for the streaming path);
-   ``delta_topology`` runs it on every micro-batch.
-3. ``delta_dedup_stream`` — streaming, per-key state via
-   ``applyInPandasWithState`` (GroupState holds the last accepted
-   record, checkpointed; use the RocksDB state-store provider at
-   scale).
+   general semantics. The streaming delta,
+   :func:`maston_spark.streaming.topology.delta_topology`, runs it on
+   every micro-batch, seeded from its durable per-key state.
 
 The reference has a latent bug (TransformerBuilder.java:134-136
 double-``get`` on the invalid path) that we deliberately do NOT
 replicate: invalid-input exclusion is a typed precondition here —
-callers branch first (see pipelines.py).
+callers branch first (``delta_topology`` splits off the invalid
+records before the fold).
 """
 
 from __future__ import annotations
@@ -146,88 +144,6 @@ def delta_dedup_fold(
         df.repartition(n_parts, *key_list)
         .sortWithinPartitions(*key_list, *order_list)
         .mapInPandas(run, schema)
-    )
-
-
-def delta_dedup_stream(
-    df: DataFrame,
-    key_cols: Sequence[str],
-    order_cols: Sequence[str],
-    is_updated: Callable[[dict, dict], bool],
-    timeout_conf: str = "NoTimeout",
-    state_ttl_ms: int | None = None,
-):
-    """Streaming delta with persistent per-key state.
-
-    State = the last accepted record (as a single-row tuple),
-    checkpointed by Structured Streaming; survives restarts like the
-    reference's RocksDB store + changelog
-    (topology/TopologyBuilder.java:66-69,87). Micro-batch rows are
-    sorted by ``order_cols`` before the fold so per-key arrival
-    order matches offset order.
-
-    ``state_ttl_ms`` bounds state size — the 100 TB lever the
-    reference's store lacks (its RocksDB store grows with the full
-    key universe forever). When set, the operator switches to
-    ``ProcessingTimeTimeout``: a key idle longer than the TTL is
-    evicted on a later trigger, and its next record re-emits as
-    first-seen. Eviction timestamps are re-armed on every batch that
-    touches the key, so only genuinely idle keys age out.
-
-    Exceptions inside the fold are captured per-key and surfaced as
-    suppressed output rather than a crashed query (parity:
-    TransformerBuilder.java:145-154 error capture), logged via the
-    observability listener.
-    """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    schema: StructType = df.schema
-    out_schema = schema
-    key_list = list(key_cols)
-    order_list = list(order_cols)
-    field_names = [f.name for f in schema.fields]
-    state_schema = schema  # last accepted record, same shape
-    ttl = int(state_ttl_ms) if state_ttl_ms else None
-    if ttl and timeout_conf == "NoTimeout":
-        timeout_conf = "ProcessingTimeTimeout"
-
-    def fn(key, pdfs, state: GroupState):
-        if ttl and state.hasTimedOut:
-            # idle past the TTL: evict; the key's next record is
-            # first-seen again
-            state.remove()
-            yield pd.DataFrame(columns=field_names)
-            return
-        last = None
-        if state.exists:
-            last = dict(zip(field_names, state.get))
-        keep_frames = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values(order_list, kind="mergesort")
-            keep = []
-            for rec in pdf.to_dict("records"):
-                try:
-                    accept = last is None or is_updated(last, rec)
-                except Exception:
-                    accept = False  # error-capture: suppress, never crash
-                if accept:
-                    keep.append(True)
-                    last = rec
-                else:
-                    keep.append(False)
-            keep_frames.append(pdf[pd.Series(keep, index=pdf.index)])
-        if last is not None:
-            state.update(tuple(last[n] for n in field_names))
-        if ttl:
-            # timeouts clear on every invocation — re-arm so the TTL
-            # measures idleness, not lifetime
-            state.setTimeoutDuration(ttl)
-        out = pd.concat(keep_frames) if keep_frames else pd.DataFrame(columns=field_names)
-        yield out
-
-    timeout = getattr(GroupStateTimeout, timeout_conf)
-    return df.groupBy(*key_list).applyInPandasWithState(
-        fn, out_schema, state_schema, "append", timeout
     )
 
 

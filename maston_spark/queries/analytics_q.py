@@ -3043,6 +3043,8 @@ def q244_bloom_pruned_join(spark, sf_dir):
     ).select("o_orderkey")
     joined = bloom_pruned_join(li, urgent, "l_orderkey", "o_orderkey")
     dec = "decimal(18,9)"
+    # the oracle's DECIMAL reaches pandas as a double; a Spark Decimal
+    # would stringify with trailing zeros ("...9520" vs "...952")
     return (
         joined.groupBy("l_returnflag")
         .agg(
@@ -3053,7 +3055,7 @@ def q244_bloom_pruned_join(spark, sf_dir):
                     * (F.lit(1) - F.col("l_discount").cast(dec))
                 ),
                 4,
-            ).alias("revenue"),
+            ).cast("double").alias("revenue"),
         )
         .orderBy("l_returnflag")
     )

@@ -83,29 +83,24 @@ def _start_foreach_batch(df: DataFrame, fn, checkpoint: str, trigger: dict | Non
 # State layout. Every durable store is a directory of segments named
 # <kind><N>, listed and dropped through the Hadoop FileSystem API so the
 # store works on local FS, HDFS or object stores alike:
-#   v<N>  full snapshot written by batch N (delta_topology and the
-#         sketch/counter monitors; legacy curation/vocab layout)
-#   d<N>  per-batch DELTA — only batch N's rows (curation, vocab)
-#   c<N>  COMPACTED run — the merged rows of every segment <= N
+#   v<N>  full snapshot written by batch N (the sketch/counter
+#         monitors; read as a run by the segment-log stores)
+#   d<N>  batch N's own rows (delta_topology, curation, vocab)
+#   c<N>  COMPACTED run: the merged state through batch N
 #
-# The v<N> stores follow the snapshot rule of _snapshot_monitor.
-# Curation and vocab append one delta per batch (O(batch) write) and a
-# compaction pass folds accumulated segments into one run so the
-# reader's file count stays bounded. Curation rows carry their
-# accepting batch id in column `b`, which is what makes age-based
-# retention a row filter rather than a file-granularity guess.
+# The v<N> stores follow the snapshot rule of _snapshot_monitor. The
+# three stores that grow with their key domain follow the segment-log
+# rule of _segment_log: each batch writes one O(batch) d<N>, and every
+# _COMPACT_EVERY-th segment is a c<N> that the next batch reads instead
+# of everything below it.
 #
-# Small files: every BOUNDED state write — curation deltas/compactions
-# and the sketch topologies' v<N> snapshots — lands as ONE part file
-# (coalesce(1)); a sketch-sized frame written at shuffle parallelism
-# was ~16 part files, and the next batch's state read paid the listing
-# + per-file footer cost. delta_topology's active-key snapshot and
-# vocab_saturation's vocab counts are NOT coalesced: those states grow
-# with the key domain. The delta snapshot still lands as at most one
-# file per core: the window that picks it reuses the fold's exchange,
-# which delta_dedup_fold sizes to defaultParallelism (AQE may coalesce
-# the write further).
+# Small files: the sketch snapshots and curation's segments land as ONE
+# part file (coalesce(1)); a sketch-sized frame written at shuffle
+# parallelism was ~16 part files, and the next batch's state read paid
+# the listing + per-file footer cost. The delta and vocab segments are
+# not coalesced: a compacted run grows with the key domain.
 _SEG_KINDS = ("v", "d", "c")
+_COMPACT_EVERY = 8
 
 
 def _state_segments(spark, state_dir: str) -> list[tuple[str, int]]:
@@ -141,18 +136,41 @@ def _state_dir(source: DataFrame, checkpoint: str, state_dir: str | None, name: 
     return sdir
 
 
-def _prior_state(spark, sdir: str | None, batch_id: int) -> DataFrame | None:
-    """The snapshot batch ``batch_id`` folds into: the newest ``v<N>``
-    with ``N < batch_id``, or None (also without a state dir). Older
-    versions are dropped here (the snapshot rule of
-    :func:`_snapshot_monitor`)."""
+def _segment_log(
+    spark, sdir: str | None, batch_id: int, compact_every: int, schema=None
+) -> tuple[DataFrame | None, bool]:
+    """The segment-log rule of the growing stores (delta, curation,
+    vocab): ``(prior, compact)`` for batch B = ``batch_id``.
+
+    ``prior`` is one scan of the live segments with each row's segment
+    id in column ``__seg`` (None without a state dir or segments): the
+    newest run (``c<N>``, or a legacy ``v<N>``) with N < B plus every
+    ``d<M>`` above it. The segments that run covers are dropped here.
+    The caller merges ``prior`` with its batch and writes ONE segment:
+    ``d<B>`` with only the batch's own rows, or, when ``compact`` (the
+    batch would be the ``compact_every``-th live segment), ``c<B>``
+    from the merged frame. Nothing else is deleted, so a retried B
+    (its batch never committed) reads the same segments and rewrites
+    the same one. ``schema`` is the segments' schema when the caller
+    knows it; otherwise the segments' footers are merged (one job)."""
     if sdir is None:
-        return None
-    prior = [s for s in _state_segments(spark, sdir) if s[0] == "v" and s[1] < batch_id]
-    if not prior:
-        return None
-    _drop_segments(spark, sdir, prior[:-1])
-    return spark.read.parquet(f"{sdir}/v{prior[-1][1]}")
+        return None, False
+    segs = [s for s in _state_segments(spark, sdir) if s[1] < batch_id]
+    run = max(
+        (s for s in segs if s[0] in ("c", "v")), key=lambda s: s[1], default=("c", -1)
+    )
+    _drop_segments(spark, sdir, [s for s in segs if s[1] <= run[1] and s != run])
+    live = [s for s in segs if s == run or s[1] > run[1]]
+    compact = 1 + len(live) >= compact_every
+    if not live:
+        return None, compact
+    if schema is None:
+        reader = spark.read.option("mergeSchema", "true")
+    else:
+        reader = spark.read.schema(schema)
+    seg = F.regexp_extract("_metadata.file_path", r"/[cdv](\d+)/[^/]*$", 1).cast("int")
+    prior = reader.parquet(*[f"{sdir}/{k}{i}" for k, i in live]).withColumn("__seg", seg)
+    return prior, compact
 
 
 def _snapshot_monitor(
@@ -185,7 +203,13 @@ def _snapshot_monitor(
     sdir = _state_dir(proj, checkpoint, state_dir, name)
 
     def fn(batch_df: DataFrame, batch_id: int) -> None:
-        prior = _prior_state(batch_df.sparkSession, sdir, batch_id)
+        spark = batch_df.sparkSession
+        prior = None
+        if sdir is not None:
+            vs = [s for s in _state_segments(spark, sdir) if s[0] == "v" and s[1] < batch_id]
+            _drop_segments(spark, sdir, vs[:-1])
+            if vs:
+                prior = spark.read.parquet(f"{sdir}/v{vs[-1][1]}")
         state = fold(batch_df, prior).persist()
         try:
             if sdir is not None:
@@ -199,103 +223,29 @@ def _snapshot_monitor(
     return _start_foreach_batch(proj, fn, checkpoint, trigger)
 
 
-def _read_curation_state(
-    spark,
-    state_dir: str,
-    upto: int,
-    retention: int | None,
-    segs: list[tuple[str, int]] | None = None,
-):
-    """The curation state visible to batch ``upto``: union of every
-    live segment with id < upto, row-filtered to accepting batch
-    ``b`` < upto (belt and braces for the retry corner: a batch must
-    never see its own failed attempt's rows) and, with retention R,
-    ``b >= upto - R`` (batch B probes only the R most recent
-    batches). Returns None when no state exists. The union is a SET
-    (dropDuplicates on the content hash), so a crash between a
-    compaction write and the consumed-segment delete — which leaves
-    the same rows visible twice — is harmless."""
-    from functools import reduce
-
-    if segs is None:
-        segs = _state_segments(spark, state_dir)
-    segs = [s for s in segs if s[1] < upto]
-    frames = []
-    for kind, sid in segs:
-        df = spark.read.parquet(f"{state_dir}/{kind}{sid}")
-        if "b" not in df.columns:
-            # legacy v<N> snapshot: no per-row batch id; every row was
-            # committed by batch N at the latest
-            df = df.withColumn("b", F.lit(sid).cast("long"))
-        frames.append(df)
-    if not frames:
+def _curation_rows(prior: DataFrame | None, batch_id: int, retention: int | None):
+    """Curation's merge: the accepted rows batch ``batch_id`` probes,
+    as a SET over the content hash ``__h`` (a run and the deltas above
+    it never share a row, but a set cannot double-count). Rows carry
+    their accepting batch ``b`` (a legacy ``v<N>`` snapshot has none:
+    its rows count as accepted by batch N); with retention R only rows
+    with ``b >= batch_id - R`` stay visible."""
+    if prior is None:
         return None
-    st = reduce(
-        lambda a, b: a.unionByName(b, allowMissingColumns=True), frames
-    ).filter(F.col("b") < F.lit(upto))
+    b = F.col("__seg")
+    if "b" in prior.columns:
+        b = F.coalesce(F.col("b"), b)
+    st = prior.withColumn("b", b.cast("long")).drop("__seg")
     if retention is not None:
-        st = st.filter(F.col("b") >= F.lit(upto - retention))
+        st = st.filter(F.col("b") >= F.lit(batch_id - retention))
     return st.dropDuplicates(["__h"])
-
-
-def _maybe_compact_curation_state(
-    spark,
-    state_dir: str,
-    batch_id: int,
-    retention: int | None,
-    compact_every: int,
-) -> None:
-    """End-of-batch state maintenance. Two independent jobs:
-
-    1. RETENTION SWEEP — whole delta segments older than the
-       retention horizon (every row aged out) are deleted outright,
-       no read needed (a delta's rows all share one ``b``).
-    2. COMPACTION — once ``compact_every`` segments PRIOR to this
-       batch accumulate, fold them into one run ``c<batch_id-1>`` so
-       the per-batch state read stays bounded in file count. The
-       current batch's own delta is never consumed (the retry corner:
-       a retried batch must still see strictly-prior state), and the
-       fold applies the retention filter relative to the NEXT batch,
-       so aged rows leave disk here. Crash safety: the run is written
-       before the consumed segments are deleted; a crash in between
-       leaves rows visible twice, which the set-under-union read
-       dedups. If ``c<batch_id-1>`` already exists (a retried batch
-       re-compacting), compaction is SKIPPED rather than read-and-
-       overwritten in place — the next batch folds it safely.
-    """
-    segs = [
-        s for s in _state_segments(spark, state_dir) if s[1] < batch_id
-    ]
-    if retention is not None:
-        horizon = batch_id + 1 - retention  # rows probed by batch B+1
-        dead = [s for s in segs if s[0] == "d" and s[1] < horizon]
-        if dead:
-            _drop_segments(spark, state_dir, dead)
-            segs = [s for s in segs if s not in dead]
-    if len(segs) < compact_every:
-        return
-    target = ("c", batch_id - 1)
-    if target in segs:
-        return
-    # fold keeps exactly the rows this batch could still probe
-    # (b >= batch_id - R); anything older is invisible to every
-    # future batch too and leaves disk here
-    merged = _read_curation_state(spark, state_dir, batch_id, retention, segs)
-    if merged is None:
-        return
-    # one part file: the folded run is still bounded by the retention
-    # window's accepted rows (round-17; guide §6 small-files)
-    merged.coalesce(1).write.mode("overwrite").parquet(
-        f"{state_dir}/{target[0]}{target[1]}"
-    )
-    _drop_segments(spark, state_dir, segs)
 
 
 def _ensure_state_owner(spark, state_dir: str, checkpoint: str) -> None:
     """Guard against an explicit ``state_dir`` being reused with a
     FRESH checkpoint: batch ids restart at 0 there, so the previous
-    run's segments (a stale ``c<N>`` run in a curation or vocab store
-    above all) would be read as this stream's history. An ``_owner``
+    run's segments (a stale ``c<N>`` run of a segment-log store above
+    all) would be read as this stream's history. An ``_owner``
     marker ties the state table to the checkpoint it belongs to; on
     mismatch the stale segments are dropped — a new checkpoint is a
     new stream, so its state starts empty. A restart of the SAME
@@ -459,22 +409,21 @@ def delta_topology(
     pass per partition. Cross-batch suppression state is DURABLE (the
     reference's store persists across the stream —
     topology/TopologyBuilder.java:66-69,87): the last accepted record
-    per key lives in a compacted parquet state table under
-    ``state_dir`` (default ``<checkpoint>/delta_state``), one
-    ``v<batch_id>`` snapshot per batch. Each micro-batch seeds the
-    fold with the record per key stored by the newest earlier batch,
-    so a record unchanged across two batches stays suppressed — the
-    golden sequence of
+    per key lives in a segment log under ``state_dir`` (default
+    ``<checkpoint>/delta_state``; the rule of :func:`_segment_log`).
+    Batch B writes ``d<B>``, the last accepted record of each key among
+    its own accepted records, so a record unchanged across two batches
+    stays suppressed — the golden sequence of
     topology/VavrKStreamWithDeltaTopologyTest.java:312-331 emits
     0,2,3,5 regardless of how the records split into batches.
 
-    Scale note: the state rewrite per batch is a full compaction of
-    the active key set — one shuffle on the key plus a parquet write,
-    parallel across executors, no driver materialization. For
-    key-cardinality-bound state with TTL eviction prefer
-    :func:`maston_spark.delta.delta_dedup_stream` (RocksDB state
-    store) when the pipeline doesn't need the validated+DLQ fan-out
-    of this topology.
+    Scale note: the per-batch state write is O(batch), like the
+    reference's one put per accepted record. The fold is seeded with
+    the prior records of the batch's own keys only: a null-safe
+    semi-join of the live segments on the key, then the newest
+    segment's record per key, all in the JVM. Every 8th segment
+    (``_COMPACT_EVERY``) is ``c<B>`` instead, the whole key set, which
+    bounds the segments a batch reads.
     ``state_dir=None`` opts out (per-batch-only suppression).
     """
     key_col = (
@@ -496,6 +445,10 @@ def delta_topology(
     sdir = _state_dir(source, checkpoint, state_dir, "delta_state")
     SEQ = "__seq"  # 0 = state seed (sorts before every batch row)
 
+    def newest(df: DataFrame, *order: Column) -> DataFrame:
+        w = Window.partitionBy("__business_key").orderBy(*order)
+        return df.withColumn("__rn", F.row_number().over(w)).filter("__rn = 1").drop("__rn")
+
     def fn(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         batch_df = batch_df.persist()
@@ -506,25 +459,32 @@ def delta_topology(
             invalid = batch_df.filter(F.col("err").isNotNull())
             valid = batch_df.filter(F.col("err").isNull() & F.col(OK).isNotNull())
             combined = valid.withColumn(SEQ, F.lit(1))
-            seed = _prior_state(spark, sdir, batch_id)
-            if seed is not None:
+            prior, compact = _segment_log(
+                spark, sdir, batch_id, _COMPACT_EVERY, batch_df.schema
+            )
+            if prior is not None:
+                # null-safe: the fold treats a null key as one key; the
+                # batch's keys are broadcast, so the segments are not
+                # shuffled before the newest-row window
+                keys = F.broadcast(valid.select(F.col("__business_key").alias("__k")))
+                seed = prior.join(
+                    keys, prior["__business_key"].eqNullSafe(keys["__k"]), "left_semi"
+                )
+                seed = newest(seed, F.col("__seg").desc()).drop("__seg")
                 combined = combined.unionByName(seed.withColumn(SEQ, F.lit(0)))
             accepted = delta_dedup_fold(
                 combined, ["__business_key"], [SEQ, *ord_aliases], is_updated
             ).persist()
-            if sdir is not None:
-                # last accepted per key (seed included, so idle keys
-                # keep their state) becomes the next state version
-                w = Window.partitionBy("__business_key").orderBy(
-                    F.col(SEQ).desc(), *[F.col(a).desc_nulls_last() for a in ord_aliases]
-                )
-                new_state = (
-                    accepted.withColumn("__rn", F.row_number().over(w))
-                    .filter(F.col("__rn") == 1)
-                    .drop("__rn", SEQ)
-                )
-                new_state.write.mode("overwrite").parquet(f"{sdir}/v{batch_id}")
             emitted = accepted.filter(F.col(SEQ) == 1).drop(SEQ)
+            if sdir is not None:
+                state = newest(emitted, *[F.col(a).desc_nulls_last() for a in ord_aliases])
+                if compact and prior is not None:
+                    state = newest(
+                        prior.unionByName(state.withColumn("__seg", F.lit(batch_id))),
+                        F.col("__seg").desc(),
+                    ).drop("__seg")
+                kind = "c" if compact else "d"
+                state.write.mode("overwrite").parquet(f"{sdir}/{kind}{batch_id}")
             split(emitted.unionByName(invalid).drop(*ord_aliases), batch_id)
         finally:
             if accepted is not None:
@@ -562,7 +522,7 @@ def curation_topology(
     shingle_n: int = 3,
     neardup_tau: float = 0.7,
     state_retention_batches: int | None = None,
-    compact_every: int = 8,
+    compact_every: int = _COMPACT_EVERY,
 ):
     """Streaming CURATION pipeline — the maston validated-ingest
     semantics fused with the LLM-corpus curation battery, per batch:
@@ -586,23 +546,20 @@ def curation_topology(
     Cross-batch dedup state is DURABLE: accepted (content-hash,
     bloom positions[, signature, bands]) rows live in a SEGMENTED
     parquet table under ``state_dir`` (default
-    ``<checkpoint>/curation_state``). Each batch appends ONE delta
-    segment holding only its own accepted rows — the state write is
-    O(batch), never O(history) (the pre-round-11 layout rewrote the
-    full accepted set every batch, the reference's unbounded-store
-    flaw with an extra linear rewrite on top,
-    topology/TopologyBuilder.java:66-69); a retry overwrites its own
-    delta idempotently (state is a set under union). Once
-    ``compact_every`` segments accumulate, one compaction pass folds
-    all prior segments into a single run so the per-batch read stays
-    bounded in file count. ``state_retention_batches=R`` bounds the
-    state's VOLUME: batch B probes only rows accepted in the last R
-    batches (rows carry their accepting batch id), and compaction
-    physically drops older rows — the documented tradeoff being
-    recall, not correctness: a duplicate of content accepted more
-    than R batches ago is re-accepted (same contract as any TTL'd
-    dedup state, delta_topology's ``state_ttl_ms`` applied to
-    curation). The driver-resident bitmap accretes each batch's
+    ``<checkpoint>/curation_state``; the rule of :func:`_segment_log`).
+    Each batch appends ONE delta segment holding only its own accepted
+    rows — the state write is O(batch), never O(history)
+    (topology/TopologyBuilder.java:66-69); a retry overwrites its own
+    segment with the same rows. Every ``compact_every``-th segment is a
+    compacted run of the probed state plus the batch's rows, so the
+    per-batch read stays bounded in file count.
+    ``state_retention_batches=R`` bounds the state's VOLUME: batch B
+    probes only rows accepted in the last R batches (rows carry their
+    accepting batch id), and a compacted run keeps only the rows its
+    batch probed — the documented tradeoff being recall, not
+    correctness: a duplicate of content accepted more than R batches
+    ago is re-accepted (the contract of any TTL'd dedup state). The
+    driver-resident bitmap accretes each batch's
     accepted positions via the same distributed per-partition OR fold
     as the reference-corpus build, and is replayed from the state
     table on restart — a doc accepted before a crash still suppresses
@@ -677,24 +634,15 @@ def curation_topology(
         .distinct()
         .persist()
     )
-    if sdir is not None:
-        # restart: replay accepted-doc bloom positions from the live
-        # state segments (retention applies relative to the next
-        # batch — aged-out rows stay out of the probe, by design)
-        segs = _state_segments(spark, sdir)
-        if segs:
-            nxt = max(sid for _, sid in segs) + 1
-            prev = _read_curation_state(
-                spark, sdir, nxt, state_retention_batches, segs
-            )
-            if prev is not None:
-                bitmap |= np.frombuffer(
-                    fold_positions_bitmap(
-                        prev.select(F.explode("positions").alias("pos")),
-                        bloom_m,
-                    ),
-                    dtype=np.uint8,
-                )
+    segs = _state_segments(spark, sdir) if sdir is not None else []
+    if segs:
+        # restart: replay the bloom positions of every stored row, as
+        # the running bitmap kept them. Covered or aged-out rows only
+        # add probe positives, which the exact-hash confirm settles.
+        pos = spark.read.parquet(*[f"{sdir}/{k}{i}" for k, i in segs]).select(
+            F.explode("positions").alias("pos")
+        )
+        bitmap |= np.frombuffer(fold_positions_bitmap(pos, bloom_m), dtype=np.uint8)
     state = {"bitmap": bitmap}
 
     # ---- near-dup machinery (MinHash-LSH, incremental) ----
@@ -788,23 +736,15 @@ def curation_topology(
             ).withColumn("__h", content_hash(text_of))
 
             # exact-confirm table: historical corpus + durable state.
-            # Like the v<N> stores, a batch reads only strictly-prior
-            # state (rows with b < batch_id, enforced inside
-            # _read_curation_state): seeding from a failed attempt's
-            # own delta would reclassify every doc it accepted as a
-            # DuplicateRecord and drop it from the valid stream. A
-            # retried batch re-accepts its own docs and overwrites
-            # its own delta with the same rows.
+            # A batch reads only strictly-prior segments: seeding from
+            # a failed attempt's own segment would reclassify every doc
+            # it accepted as a DuplicateRecord. A retried batch
+            # re-accepts its own docs and rewrites the same segment.
             hist = ref_hashes
-            seed = None
-            if sdir is not None:
-                seed = _read_curation_state(
-                    spark, sdir, batch_id, state_retention_batches
-                )
-                if seed is not None:
-                    hist = ref_hashes.unionByName(
-                        seed.select("__h")
-                    ).distinct()
+            prior, compact = _segment_log(spark, sdir, batch_id, compact_every)
+            seed = _curation_rows(prior, batch_id, state_retention_batches)
+            if seed is not None:
+                hist = ref_hashes.unionByName(seed.select("__h")).distinct()
             hist_hits = hist.select(
                 F.col("__h").alias("__hh"), F.lit(True).alias("__hit")
             )
@@ -985,22 +925,17 @@ def curation_topology(
                     accepted["__gid"] == F.col("__sgid"),
                     "left",
                 ).drop("__sgid")
-            accepted = accepted.drop("__gid")
+            accepted = accepted.drop("__gid").withColumn(
+                "b", F.lit(batch_id).cast("long")
+            )
             if sdir is not None:
-                # O(batch) state write: ONLY this batch's accepted
-                # rows, stamped with their accepting batch id — never
-                # the accumulated history (that was the pre-segment
-                # layout's full rewrite)
-                # coalesce(1): the delta is O(batch) rows — one part
-                # file keeps the per-batch state READ's file count
-                # (listing + footers, which grow with history) minimal
-                # (round-17; guide §6 small-files). Layout unchanged:
-                # same segment names, schema, and row semantics.
-                accepted.withColumn(
-                    "b", F.lit(batch_id).cast("long")
-                ).coalesce(1).write.mode("overwrite").parquet(
-                    f"{sdir}/d{batch_id}"
-                )
+                # d<B>: only this batch's accepted rows, stamped with
+                # their accepting batch id; c<B>: the probed state too
+                seg = accepted
+                if compact and seed is not None:
+                    seg = seed.unionByName(accepted, allowMissingColumns=True)
+                kind = "c" if compact else "d"
+                seg.coalesce(1).write.mode("overwrite").parquet(f"{sdir}/{kind}{batch_id}")
             counts = split_sink_batch(
                 out.drop(*[c for c in helper_cols if c in out.columns]),
                 write_valid,
@@ -1048,14 +983,6 @@ def curation_topology(
             )
             if on_metrics is not None:
                 on_metrics(batch_id, counts)
-            if sdir is not None:
-                _maybe_compact_curation_state(
-                    spark,
-                    sdir,
-                    batch_id,
-                    state_retention_batches,
-                    compact_every,
-                )
         finally:
             if out is not None:
                 out.unpersist()
@@ -1528,7 +1455,7 @@ def vocab_saturation_topology(
     write_metrics: Callable[[DataFrame, int], None],
     state_dir: str | None = "auto",
     trigger: dict | None = None,
-    compact_every: int = 8,
+    compact_every: int = _COMPACT_EVERY,
 ):
     """Streaming vocabulary-saturation monitor (the EIGHTH topology):
     maintain per-(group, token) frequency counts across micro-batches
@@ -1553,33 +1480,19 @@ def vocab_saturation_topology(
     matters — the state's row count is |vocab| either way — and would
     break ``n_tokens = Σ count``).
 
-    State layout — SEGMENTED count deltas (the curation topology's
-    delta+compaction discipline adapted to ADDITIVE counters; the
-    other counter topologies rewrite whole snapshots because their
-    state is intrinsically tiny — cusum: groups×buckets, srm: arms,
-    privacy gate: QI-domain cells — but vocab state is |vocab|-sized,
+    State layout — the segment log of :func:`_segment_log` (the other
+    counter topologies rewrite whole snapshots because their state is
+    intrinsically tiny — cusum: groups×buckets, srm: arms, privacy
+    gate: QI-domain cells — but vocab state is |vocab|-sized,
     potentially 10⁸–10⁹ (group, token) rows at 100 TB, so a full
     rewrite per batch would be O(batches × |vocab|) write
-    amplification):
-
-    - ``d<N>`` — batch N's (group, token) count DELTA: an O(batch)
-      append per micro-batch, the only per-batch state write;
-    - ``c<K>`` — a compacted run holding the summed counts of
-      EVERYTHING through batch K, written every ``compact_every``
-      batches FROM the already-persisted merged frame (compaction
-      costs one O(|vocab|) write amortized over ``compact_every``
-      batches, never an extra read);
-    - ``v<N>`` — legacy full snapshot (pre-segment layout),
-      read-compatible as a run.
-
-    Read rule — coverage, not row dedup (additive counts can't dedup
-    the way the curation topology's content-hash SET state does):
-    batch B reads the NEWEST run with id < B, which covers every
-    segment at or below its id, plus only the deltas above it, and
-    drops the covered segments. Compaction writes ``c<B>`` and
-    deletes nothing, so a retried B (whose batch never committed)
-    finds the same run and deltas, recomputes the same counts and
-    overwrites its own ``d<B>`` and ``c<B>`` with the same rows.
+    amplification): ``d<N>`` holds batch N's (group, token) count
+    delta, and every ``compact_every``-th batch writes ``c<N>``, the
+    summed counts through N, from its already-persisted merged frame
+    (one O(|vocab|) write amortized over ``compact_every`` batches,
+    never an extra read). The merge is
+    :func:`maston_spark.sketches.sum_counts` over the run and the
+    deltas above it: coverage, not row dedup, keeps the counts exact.
 
     Scale shape per batch: one combiner-reduced (group, token)
     aggregation over the BATCH (the shuffle carries the batch's
@@ -1590,8 +1503,6 @@ def vocab_saturation_topology(
     sublinear in everything ingested). Tokenization is single-space
     split (the engine's cross-engine-gradeable convention; empty
     tokens drop)."""
-    from functools import reduce
-
     from maston_spark.llm.text import vocab_richness_from_counts
     from maston_spark.sketches import sum_counts
 
@@ -1607,38 +1518,23 @@ def vocab_saturation_topology(
     )
 
     def fn(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
         counts = batch_df.groupBy("group", "__tok").agg(
             F.count(F.lit(1)).cast("long").alias("__c")
         )
-        live, stored = [], None
-        if sdir is not None:
-            segs = [s for s in _state_segments(spark, sdir) if s[1] < batch_id]
-            run = max(
-                (s for s in segs if s[0] in ("c", "v")),
-                key=lambda s: s[1],
-                default=("c", -1),
-            )
-            _drop_segments(
-                spark, sdir, [s for s in segs if s[1] <= run[1] and s != run]
-            )
-            live = [s for s in segs if s == run or s[1] > run[1]]
-            # O(batch) state write: this batch's delta (a failed prior
-            # attempt's d{batch_id} holds the same rows — overwrite)
-            counts.write.mode("overwrite").parquet(f"{sdir}/d{batch_id}")
-        if live:
-            stored = reduce(
-                DataFrame.unionByName,
-                [spark.read.parquet(f"{sdir}/{k}{i}") for k, i in live],
-            )
-        merged = sum_counts(counts, stored, ["group", "__tok"], ["__c"]).persist()
+        prior, compact = _segment_log(
+            batch_df.sparkSession, sdir, batch_id, compact_every, counts.schema
+        )
+        if prior is not None:
+            prior = prior.drop("__seg")
+        merged = sum_counts(counts, prior, ["group", "__tok"], ["__c"]).persist()
         try:
+            if sdir is not None:
+                # a compacting batch writes the persisted merge (no
+                # extra read)
+                seg = merged if compact else counts
+                kind = "c" if compact else "d"
+                seg.write.mode("overwrite").parquet(f"{sdir}/{kind}{batch_id}")
             write_metrics(vocab_richness_from_counts(merged, "group"), batch_id)
-            # amortized compaction once `compact_every` segments feed
-            # the merge, reusing the persisted merge (no extra read);
-            # the covered segments go at the start of the next batch
-            if sdir is not None and 1 + len(live) >= int(compact_every):
-                merged.write.mode("overwrite").parquet(f"{sdir}/c{batch_id}")
         finally:
             merged.unpersist()
 

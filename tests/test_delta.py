@@ -4,14 +4,11 @@ The canonical 6-record sequence (two keys, values
 pass / not-pass / pass each) must emit records 0, 2, 3, 5 — parity:
 topology/VavrKStreamWithDeltaTopologyTest.java:312-331 with fixture
 at :334-376. Both batch paths (expression window and the linear
-``mapInPandas`` fold) and the streaming path (applyInPandasWithState)
-must agree.
+``mapInPandas`` fold) must agree; the streaming path,
+``delta_topology``, is tested in ``test_streaming.py``.
 """
 
 from __future__ import annotations
-
-import shutil
-import tempfile
 
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import Row
@@ -20,7 +17,6 @@ from maston_spark.delta import (
     changed_predicate,
     delta_dedup_expr,
     delta_dedup_fold,
-    delta_dedup_stream,
 )
 
 GOLDEN = [
@@ -135,148 +131,3 @@ def test_delta_expr_equals_fold_under_change_predicate(spark):
     assert sorted(r.event_id for r in a.collect()) == sorted(
         r.event_id for r in b.collect()
     )
-
-
-def test_delta_stream_matches_reference_golden(spark):
-    """Streaming path: file source → applyInPandasWithState → memory
-    sink. Two micro-batches split mid-key to prove state persists
-    across batches."""
-    src = tempfile.mkdtemp(prefix="delta_src_")
-    chk = tempfile.mkdtemp(prefix="delta_chk_")
-    try:
-        batch1, batch2 = GOLDEN[:3], GOLDEN[3:]
-        spark.createDataFrame(batch1).coalesce(1).write.mode("overwrite").parquet(
-            src + "/b1"
-        )
-        spark.createDataFrame(batch2).coalesce(1).write.mode("overwrite").parquet(
-            src + "/b2"
-        )
-        schema = spark.createDataFrame(GOLDEN).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src + "/b*")
-        )
-        out = delta_dedup_stream(stream, ["business_key"], ["seq"], ACCEPT)
-        q = (
-            out.writeStream.format("memory")
-            .queryName("delta_golden")
-            .outputMode("append")
-            .option("checkpointLocation", chk)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            rows = spark.sql("select * from delta_golden").collect()
-        finally:
-            q.stop()
-        assert _emitted(rows) == EXPECTED
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(chk, ignore_errors=True)
-
-
-def test_delta_stream_state_survives_across_batches(spark):
-    """A duplicate arriving in a LATER micro-batch must still be
-    suppressed (per-key GroupState, not per-batch memory)."""
-    rows1 = [Row(seq=0, business_key="k", string_value="x")]
-    rows2 = [Row(seq=1, business_key="k", string_value="x")]  # dup, later batch
-    src = tempfile.mkdtemp(prefix="delta_src2_")
-    chk = tempfile.mkdtemp(prefix="delta_chk2_")
-    try:
-        spark.createDataFrame(rows1).coalesce(1).write.parquet(src + "/b1")
-        spark.createDataFrame(rows2).coalesce(1).write.parquet(src + "/b2")
-        schema = spark.createDataFrame(rows1).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src + "/b*")
-        )
-        out = delta_dedup_stream(
-            stream, ["business_key"], ["seq"], changed_predicate(["string_value"])
-        )
-        q = (
-            out.writeStream.format("memory")
-            .queryName("delta_state")
-            .outputMode("append")
-            .option("checkpointLocation", chk)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            emitted = _emitted(spark.sql("select * from delta_state").collect())
-        finally:
-            q.stop()
-        assert emitted == [0]
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(chk, ignore_errors=True)
-
-
-def test_delta_stream_ttl_evicts_idle_key(spark):
-    """With ``state_ttl_ms``, a key idle past the TTL is evicted and
-    its next (duplicate) record re-emits as first-seen — the bounded-
-    state behavior the reference's ever-growing store lacks.
-
-    Drive: b1 = key A (emits, arms TTL) → idle past TTL (an empty
-    trigger fires A's timeout → eviction) → b2 = duplicate of A
-    (re-emits because state is gone). Without TTL, seq 1 would be
-    suppressed (see test_delta_stream_state_survives_across_batches).
-
-    NOTE: with ProcessingTimeTimeout the micro-batch engine keeps
-    scheduling (empty) batches to service timers, so
-    ``processAllAvailable()`` never settles — the sink is POLLED with
-    a deadline instead.
-    """
-    import time
-
-    def wait_rows(n, deadline_s=60.0):
-        t0 = time.monotonic()
-        while time.monotonic() - t0 < deadline_s:
-            if spark.sql("select * from delta_ttl").count() >= n:
-                return
-            time.sleep(0.2)
-        raise AssertionError(
-            f"sink did not reach {n} rows in {deadline_s}s: "
-            f"{spark.sql('select * from delta_ttl').collect()}"
-        )
-
-    src = tempfile.mkdtemp(prefix="delta_ttl_src_")
-    chk = tempfile.mkdtemp(prefix="delta_ttl_chk_")
-    try:
-        schema = spark.createDataFrame(
-            [Row(seq=0, business_key="A", string_value="x")]
-        ).schema
-        stream = spark.readStream.schema(schema).parquet(src + "/b*")
-        out = delta_dedup_stream(
-            stream,
-            ["business_key"],
-            ["seq"],
-            changed_predicate(["string_value"]),
-            state_ttl_ms=500,
-        )
-        q = (
-            out.writeStream.format("memory")
-            .queryName("delta_ttl")
-            .outputMode("append")
-            .option("checkpointLocation", chk)
-            .start()
-        )
-        try:
-            spark.createDataFrame(
-                [Row(seq=0, business_key="A", string_value="x")]
-            ).coalesce(1).write.parquet(src + "/b1")
-            wait_rows(1)
-            time.sleep(2.0)  # idle past the 500 ms TTL → timer evicts A
-            spark.createDataFrame(
-                [Row(seq=1, business_key="A", string_value="x")]  # dup of seq 0
-            ).coalesce(1).write.parquet(src + "/b2")
-            # seq 1 appears ONLY if the TTL evicted A's state
-            wait_rows(2)
-            emitted = _emitted(spark.sql("select * from delta_ttl").collect())
-        finally:
-            q.stop()
-        assert emitted == [0, 1]
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(chk, ignore_errors=True)

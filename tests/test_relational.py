@@ -1354,6 +1354,34 @@ def test_bloom_pruned_join_coerces_divergent_key_types(spark):
     assert got == want and len(got) == 140
 
 
+def test_q244_revenue_with_trailing_zero_matches_oracle(spark, tmp_path):
+    """q244's revenue ends in 0 at the 4th decimal (101.1200 = 2 x
+    50.56): the DuckDB oracle's DECIMAL reaches pandas as the double
+    101.12, so Spark must hand over a double too, or the checker sees
+    '101.1200' != '101.12'."""
+    import duckdb
+
+    from maston_spark.queries import REGISTRY
+    from maston_spark.queries.analytics_q import q244_bloom_pruned_join
+    from tools.check_correctness import compare
+
+    spark.createDataFrame(
+        [(1, "R", 50.56, 0.0), (1, "R", 50.56, 0.0), (2, "A", 20.0, 0.5), (3, "N", 9.0, 0.0)],
+        "l_orderkey long, l_returnflag string, l_extendedprice double, l_discount double",
+    ).coalesce(1).write.parquet(str(tmp_path / "lineitem.parquet"))
+    spark.createDataFrame(
+        [(1, "1-URGENT"), (2, "1-URGENT"), (3, "5-LOW")],
+        "o_orderkey long, o_orderpriority string",
+    ).coalesce(1).write.parquet(str(tmp_path / "orders.parquet"))
+    con = duckdb.connect()
+    for t in ("lineitem", "orders"):
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{tmp_path}/{t}.parquet/*.parquet'")
+    got = q244_bloom_pruned_join(spark, str(tmp_path)).toPandas()
+    want = con.execute(REGISTRY["q244_bloom_pruned_join"].oracle).df()
+    assert compare("q244_bloom_pruned_join", got, want) == []
+    assert sorted(got["revenue"]) == [10.0, 101.12]
+
+
 def test_acf_matches_plain_python_and_flags_periodicity(spark):
     """A period-3 series has acf(3) ~ 1 and matches the plain-python
     estimator exactly at every lag; a constant series emits NULL."""

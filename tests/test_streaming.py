@@ -542,6 +542,80 @@ def test_delta_topology_explicit_state_dir_not_mistaken_for_retry(spark, cleanup
     assert sorted(r.ok.seq for r in second["valid"]) == [0]
 
 
+def _run_delta(spark, cleanup, rows, n_batches):
+    """``delta_topology`` over ``rows`` in ``n_batches`` replay batches
+    with the not-equal predicate; returns (emitted seqs, checkpoint)."""
+    stream, src = replay_stream(spark.createDataFrame(rows), batches=n_batches)
+    chk = _tmp()
+    cleanup.extend([src, chk])
+    sunk: list = []
+    q = delta_topology(
+        stream,
+        SCHEMA,
+        app_id="t-delta-segments",
+        checkpoint=chk,
+        business_key=F.col("ok.business_key"),
+        order_cols=["ok.seq"],
+        is_updated=lambda old, new: old["ok"]["string_value"]
+        != new["ok"]["string_value"],
+        write_valid=lambda df: sunk.extend(r.ok.seq for r in df.collect()),
+        write_error=lambda df: None,
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    return sorted(sunk), chk
+
+
+def test_delta_topology_state_is_segmented_o_batch(spark, cleanup, monkeypatch):
+    """Each batch writes the last accepted record of only its own
+    accepted keys as d<N>, never the key set seen so far; with the
+    compaction cadence at 4, batch 3 writes c3 with every key, and a
+    key accepted before the compaction stays suppressed after it."""
+    from maston_spark.streaming import topology
+
+    monkeypatch.setattr(topology, "_COMPACT_EVERY", 4)
+    rows, seq, want = [], 0, []
+    for b in range(6):
+        # "base" changes every batch, k<b> is new, k0 repeats unchanged
+        for k, v in [("base", f"v{b}"), (f"k{b}", "x")] + ([("k0", "x")] if b else []):
+            rows.append(Row(value=_payload(k, v, seq), __replay_batch=b))
+            if not (b and k == "k0"):
+                want.append(seq)
+            seq += 1
+    emitted, chk = _run_delta(spark, cleanup, rows, 6)
+    assert emitted == want
+
+    sdir = f"{chk}/delta_state"
+    segs = sorted(
+        (d[:1], int(d[1:])) for d in os.listdir(sdir) if d[:1] in "vdc" and d[1:].isdigit()
+    )
+    assert segs == [("c", 3), ("d", 4), ("d", 5)]
+
+    def state(kind, i):
+        return {
+            r["__business_key"]: r.ok.string_value
+            for r in spark.read.parquet(f"{sdir}/{kind}{i}").collect()
+        }
+
+    assert state("d", 4) == {"base": "v4", "k4": "x"}
+    assert state("d", 5) == {"base": "v5", "k5": "x"}
+    assert state("c", 3) == {"base": "v3", "k0": "x", "k1": "x", "k2": "x", "k3": "x"}
+
+
+def test_delta_topology_null_keys_suppressed_across_batches(spark, cleanup):
+    """A null business key is one key, across batches as within one:
+    batch 1's unchanged null-key record is suppressed against batch 0's
+    and its changed one is emitted."""
+    recs = [(0, None, "a"), (0, "k", "a"), (1, None, "a"), (1, None, "b"), (1, "k", "a")]
+    rows = [
+        Row(value=_payload(k, v, i), __replay_batch=b) for i, (b, k, v) in enumerate(recs)
+    ]
+    emitted, _ = _run_delta(spark, cleanup, rows, 2)
+    assert emitted == [0, 1, 3]
+
+
 def test_observe_errors_batch_and_listener(spark, cleanup):
     from maston_spark.validated import safe_from_json
 
@@ -1529,6 +1603,14 @@ def _live_segments(spark, chk):
     return _state_segments(spark, chk + "/curation_state")
 
 
+def _read_curation_state(spark, sdir, upto, retention):
+    """The curation rows batch ``upto`` would probe."""
+    from maston_spark.streaming.topology import _curation_rows, _segment_log
+
+    prior, _ = _segment_log(spark, sdir, upto, 8)
+    return _curation_rows(prior, upto, retention)
+
+
 def test_curation_state_write_is_o_batch_and_compacts(spark, cleanup):
     """The round-11 state layout: each batch writes ONE delta segment
     holding only its own accepted rows — O(batch), not O(history) —
@@ -1596,8 +1678,6 @@ def test_curation_state_write_is_o_batch_and_compacts(spark, cleanup):
         if kind == "d":
             assert n <= 3, (kind, sid, n)
     # the union of live segments is the full accepted set, exactly once
-    from maston_spark.streaming.topology import _read_curation_state
-
     st = _read_curation_state(spark, sdir, 10**9, None)
     assert st.count() == len(texts)
 
@@ -1657,8 +1737,6 @@ def test_read_curation_state_legacy_v_snapshot(spark, cleanup):
     strictly-prior filter applies, and the set-union dedup holds when
     a legacy snapshot and a delta carry the same hash."""
     import tempfile
-
-    from maston_spark.streaming.topology import _read_curation_state
 
     sdir = tempfile.mkdtemp(prefix="curation_state_legacy_")
     cleanup.append(sdir)
@@ -2516,19 +2594,20 @@ def _start_monitor(name, static=None, **kw):
 _A_TEXT = "the quick brown fox jumps over the lazy dog"
 _C_TEXT = "pack my box with five dozen liquor jugs"
 
+_DELTA_ROWS = _batched(
+    dict(value=_payload(k, v, i))
+    for i, (k, v) in enumerate(
+        [("k1", "a"), ("k2", "b"), ("k1", "a"), ("k2", "c"), ("k3", "d"), ("k1", "e")]
+    )
+)
+
 # name -> (input rows, starter, the v<N> state dir under the checkpoint
 # or None for the segment-log stores)
 _CRASH_CASES = {
-    "delta": (
-        _batched(
-            dict(value=_payload(k, v, i))
-            for i, (k, v) in enumerate(
-                [("k1", "a"), ("k2", "b"), ("k1", "a"), ("k2", "c"), ("k3", "d"), ("k1", "e")]
-            )
-        ),
-        _start_delta,
-        "delta_state",
-    ),
+    "delta": (_DELTA_ROWS, _start_delta, None),
+    # the same stream with the compaction cadence at 2 (set in the
+    # test): batches 1 and 2 write c<B>
+    "delta_compact": (_DELTA_ROWS, _start_delta, None),
     "curation": (
         _batched(
             dict(value=_doc(i, t))
@@ -2635,15 +2714,19 @@ _CRASH_CASES = {
 
 
 @pytest.mark.parametrize("name", sorted(_CRASH_CASES))
-def test_topology_crash_restart_matches_uninterrupted(spark, cleanup, name):
+def test_topology_crash_restart_matches_uninterrupted(spark, cleanup, monkeypatch, name):
     """A sink failure after the state write of batch 0 (then, in a
     second run, of batch 1), followed by a restart on the same
     checkpoint, must emit per batch exactly what an uninterrupted run
     emits: the retried batch recomputes its first attempt's state and
     output. The same holds when the last batch ran to the end but its
-    commit was lost, which re-runs it over everything it wrote
-    (vocab's compaction at that batch included). The ``v<N>`` stores
-    keep at most two versions."""
+    commit was lost, which re-runs it over everything it wrote (the
+    compaction at that batch of vocab, curation and delta_compact
+    included). The ``v<N>`` stores keep at most two versions."""
+    from maston_spark.streaming import topology
+
+    if name == "delta_compact":
+        monkeypatch.setattr(topology, "_COMPACT_EVERY", 2)
     rows, start, state_name = _CRASH_CASES[name]
     stream, src = replay_stream(spark.createDataFrame(rows), batches=3)
     cleanup.append(src)
