@@ -3,11 +3,12 @@
 The environment ships Spark without the ``spark-avro`` connector jar
 (``from_avro``/``to_avro`` don't resolve — see
 :func:`maston_spark.validated.avro_available`), so the executable
-Avro path is this hand-written codec run as an Arrow-batched pandas
-UDF. It implements the Avro 1.x binary encoding spec for the subset
-the reference's records use: primitives, ``["null", X]`` unions, and
-the ``decimal`` logical type on ``bytes``
-(two's-complement big-endian unscaled int).
+Avro path is hand-written. This module is its per-record codec: it
+implements the Avro 1.x binary encoding spec for the subset the
+reference's records use — primitives, ``["null", X]`` unions,
+arrays, maps, and the ``decimal`` logical type on ``bytes``
+(two's-complement big-endian unscaled int) — plus the OCF container
+format and writer→reader schema resolution.
 
 Parity targets in the reference:
 - serdes/VavrSafeDeserializer.java:29-39 — try-decode, on failure
@@ -21,11 +22,15 @@ Parity targets in the reference:
   ``["null", bytes-decimal]`` union (the shape of
   src/test/resources/dummy-avro-record.avsc:27-38).
 
-Scale note: the codec runs inside ``mapInPandas`` over the binary
-column — per-partition Python, Arrow-batched, no shuffle, no driver
-involvement; it parallelizes linearly with executors. When a real
-cluster has the spark-avro jar, ``validated.safe_from_avro`` is the
-preferred JVM-side path and shares the same ok/err output contract.
+Scale note: the serde operators in :mod:`maston_spark.validated` run
+under ``mapInArrow`` — per-partition Python, Arrow-batched, no
+shuffle, no driver involvement; they parallelize linearly with
+executors. Whole batches decode and encode with the numpy passes of
+:mod:`maston_spark.avro_vec`; this codec decodes the records those
+passes cannot (corrupt or rare shapes) and every record of a schema
+outside their subset (arrays, maps). When a real cluster has the
+spark-avro jar, ``validated.safe_from_avro`` is the preferred
+JVM-side path and shares the same ok/err output contract.
 """
 
 from __future__ import annotations
@@ -333,7 +338,7 @@ def _fit_decimal(unscaled: int, scale: int, p: int, s: int):
     column type becomes NULL here — the documented overflow contract.
     Doing it lazily "at the Arrow boundary" is NOT an option: pyarrow
     raises ArrowInvalid for out-of-range decimal128 values, which
-    would crash the mapInPandas task and break never-throw serde
+    would crash the ``mapInArrow`` task and break never-throw serde
     parity (serdes/VavrSafeDeserializer.java:29-39).
     """
     if s < scale:  # capped scale: only exact rescales survive
@@ -371,8 +376,8 @@ def _compile(sch: Any):
     Schema dispatch (dict walking, string compares, logical-type
     checks) happens ONCE here instead of per record per field; the
     returned closures parse positionally over the payload bytes with
-    no BytesIO allocation. This is the per-row fast path behind
-    ``safe_from_avro_python`` — ~5× over the naive walker on the q73
+    no BytesIO allocation. This is the per-record path behind the
+    jar-less Avro serde — ~5× over the naive walker on the q73
     record shape, which matters when the serde is the hot loop of a
     100 TB Kafka backfill.
     """

@@ -2,12 +2,12 @@
 
 This is the scale-safe executable serde path when the ``spark-avro``
 jar is absent: instead of walking each record in Python
-(:func:`maston_spark.avro_codec.compile_record_decoder` inside
-``mapInPandas``), whole Arrow batches are decoded with numpy array
-ops inside ``mapInArrow`` — the per-*record* Python loop becomes a
-per-*field* sequence of vectorized passes over the batch's
-concatenated payload buffer. See ``tools/bench_avro.py`` for the
-measured speedup committed alongside this module.
+(:func:`maston_spark.avro_codec.compile_record_decoder`), whole Arrow
+batches are decoded with numpy array ops inside ``mapInArrow`` — the
+per-*record* Python loop becomes a per-*field* sequence of
+vectorized passes over the batch's concatenated payload buffer. See
+``tools/bench_avro.py`` for the measured speedup committed alongside
+this module.
 
 Parity target is unchanged: serdes/VavrSafeDeserializer.java:29-39 —
 never throw; malformed payloads become ``err`` rows with the raw
@@ -23,7 +23,8 @@ between engines.
 Supported schema subset = the codec's subset: primitives,
 ``["null", X]`` unions, decimal-logical-type bytes.
 :func:`compile_batch_decoder` raises ``ValueError`` for anything
-else; callers fall back to the per-record path wholesale.
+else (arrays, maps); callers then decode every record with the
+compiled per-record codec.
 
 Design notes (how each construct vectorizes):
 
@@ -65,6 +66,7 @@ from maston_spark.avro_codec import (
 __all__ = [
     "compile_batch_decoder",
     "compile_batch_encoder",
+    "schema_ids",
     "BatchDecodeResult",
     "arrow_type_for",
     "arrow_struct_type",
@@ -137,6 +139,53 @@ def _read_varint(st: _St, sel: np.ndarray) -> np.ndarray:
         shift += 7
     # zigzag decode (unsigned acc -> signed value)
     return ((acc >> np.uint64(1)).astype(np.int64)) ^ -((acc & np.uint64(1)).astype(np.int64))
+
+
+def binary_layout(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
+    """(offsets int64[n+1], data uint8[*]) of a binary or string Arrow
+    array: its buffers viewed as numpy, the data not copied."""
+    n = len(arr)
+    bufs = arr.buffers()
+    large = pa.types.is_large_binary(arr.type) or pa.types.is_large_string(arr.type)
+    offs = (
+        np.frombuffer(bufs[1], dtype=np.int64 if large else np.int32)[
+            arr.offset : arr.offset + n + 1
+        ].astype(np.int64)
+        if bufs[1] is not None
+        else np.zeros(n + 1, dtype=np.int64)
+    )
+    data = (
+        np.frombuffer(bufs[2], dtype=np.uint8)
+        if bufs[2] is not None
+        else np.empty(0, dtype=np.uint8)
+    )
+    return offs, data
+
+
+def _framed(offs: np.ndarray, data: np.ndarray) -> np.ndarray:
+    """bool[n]: the payload holds the 5-byte Confluent frame (magic
+    byte 0 + 4-byte schema id)."""
+    starts = offs[:-1]
+    framed = (offs[1:] - starts) >= 5
+    if len(data):
+        framed &= data[np.minimum(starts, len(data) - 1)] == 0
+    return framed
+
+
+def schema_ids(values: pa.Array) -> np.ndarray:
+    """Confluent schema id of every row (int64), read with one numpy
+    gather; -1 where the payload is NULL or not framed."""
+    offs, data = binary_layout(values)
+    framed = _framed(offs, data) & values.is_valid().to_numpy(zero_copy_only=False)
+    ids = np.full(len(values), -1, dtype=np.int64)
+    p = offs[:-1][framed]
+    ids[framed] = (
+        (data[p + 1].astype(np.int64) << 24)
+        | (data[p + 2].astype(np.int64) << 16)
+        | (data[p + 3].astype(np.int64) << 8)
+        | data[p + 4].astype(np.int64)
+    )
+    return ids
 
 
 def _gather(data, starts, lengths):
@@ -508,8 +557,8 @@ def resolve_struct(ok: pa.StructArray, spec: list, reader: dict) -> pa.StructArr
                 # Avro-spec promotions (int→long/float/double, …,
                 # string↔bytes). string→bytes cannot fail; bytes→string
                 # validates UTF-8 and raises ArrowInvalid on non-UTF8
-                # writer bytes — callers (validated.py dec_fast) catch
-                # that and re-route the group per record so only the
+                # writer bytes — the caller (validated._avro_decoder)
+                # catches that and re-decodes per record so only the
                 # offending rows become err rows.
                 arr = arr.cast(typ)
             arrays.append(arr)
@@ -527,7 +576,7 @@ def compile_batch_decoder(schema: dict):
     exception the per-record path raises.
 
     Raises ``ValueError`` at compile time for schema features outside
-    the codec subset, so callers can fall back wholesale.
+    the vectorizable subset, so callers can decode per record instead.
     """
     field_specs = [(f["name"], f["type"]) for f in schema["fields"]]
     field_decs = [_compile_field(t) for _, t in field_specs]
@@ -539,27 +588,11 @@ def compile_batch_decoder(schema: dict):
             value_array = value_array.combine_chunks()
         n = len(value_array)
         null_in = value_array.is_null().to_numpy(zero_copy_only=False)
-        bufs = value_array.buffers()
-        odt = np.int64 if pa.types.is_large_binary(value_array.type) else np.int32
-        raw_offs = (
-            np.frombuffer(bufs[1], dtype=odt)[
-                value_array.offset: value_array.offset + n + 1
-            ].astype(np.int64)
-            if bufs[1] is not None
-            else np.zeros(n + 1, dtype=np.int64)
-        )
-        data = (np.frombuffer(bufs[2], dtype=np.uint8)
-                if bufs[2] is not None else np.empty(0, dtype=np.uint8))
-        starts, ends = raw_offs[:-1].copy(), raw_offs[1:].copy()
-        lengths = ends - starts
+        raw_offs, data = binary_layout(value_array)
 
-        st = _St(data, starts.copy(), ends, ~null_in)
+        st = _St(data, raw_offs[:-1].copy(), raw_offs[1:], ~null_in)
         if confluent:
-            if len(data):
-                first = data[np.minimum(starts, len(data) - 1)]
-            else:
-                first = np.zeros(n, dtype=np.uint8)
-            st.bail(st.active & ((lengths < 5) | (first != 0)))
+            st.bail(st.active & ~_framed(raw_offs, data))
             st.pos += 5  # magic + 4-byte schema id
 
         cols = [_make_col(n, t) for _, t in field_specs]
@@ -797,20 +830,8 @@ def _compile_field_encoder(sch: Any):
     if t in ("bytes", "string"):
 
         def enc_bytes(arr, st, excluded):
-            n = len(arr)
             st.bail |= ~excluded & ~_arr_np_valid(arr)
-            bufs = arr.buffers()
-            odt = np.int64 if pa.types.is_large_string(arr.type) or pa.types.is_large_binary(arr.type) else np.int32
-            offs = (
-                np.frombuffer(bufs[1], dtype=odt)[arr.offset : arr.offset + n + 1].astype(np.int64)
-                if bufs[1] is not None
-                else np.zeros(n + 1, dtype=np.int64)
-            )
-            data = (
-                np.frombuffer(bufs[2], dtype=np.uint8)
-                if bufs[2] is not None
-                else np.empty(0, dtype=np.uint8)
-            )
+            offs, data = binary_layout(arr)
             starts, blen = offs[:-1], offs[1:] - offs[:-1]
             u = _zigzag_u64(blen)
             nb = _varint_lengths(u)
@@ -844,19 +865,7 @@ def patch_binary(arr: pa.Array, patched: dict[int, bytes]) -> pa.Array:
     patch points, the same splice the decoder's fallback uses."""
     n = len(arr)
     valid = arr.is_valid().to_numpy(zero_copy_only=False).copy()
-    bufs = arr.buffers()
-    offs = (
-        np.frombuffer(bufs[1], dtype=np.int32)[arr.offset : arr.offset + n + 1].astype(
-            np.int64
-        )
-        if bufs[1] is not None
-        else np.zeros(n + 1, dtype=np.int64)
-    )
-    values = (
-        np.frombuffer(bufs[2], dtype=np.uint8)
-        if bufs[2] is not None
-        else np.empty(0, dtype=np.uint8)
-    )
+    offs, values = binary_layout(arr)
     lens = offs[1:] - offs[:-1]
     new_lens = lens.copy()
     for i, b in patched.items():
@@ -896,7 +905,7 @@ def compile_batch_encoder(schema: dict):
     (serdes/VavrSafeSerializer.java:26-52).
 
     Raises ``ValueError`` at compile time for schema features outside
-    the vectorizable subset, so callers fall back wholesale.
+    the vectorizable subset, so callers can encode per record instead.
     """
     field_comps = [_compile_field_encoder(f["type"]) for f in schema["fields"]]
     record_encode = compile_record_encoder(schema)

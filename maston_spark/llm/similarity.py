@@ -1146,24 +1146,25 @@ def _round9_numerators(X: "np.ndarray") -> "np.ndarray":
     n0 = np.floor(p + 0.5)
     # boundary margin: |x·10⁹| · 4·eps (float product + repr offset)
     # plus an absolute floor — far wider than the true error, and the
-    # slow path is exact anyway
+    # slow path is exact anyway. From 2⁵³ on a double no longer holds
+    # every integer, so x·10⁹ there is off by up to its ulp: those
+    # elements take the exact path too, and its results go into the
+    # int64 buffer, never back through a double.
     dist = np.abs((p - np.floor(p)) - 0.5)
     tol = 1e-6 + np.abs(p) * 1e-12
-    suspicious = (dist < tol) | ~np.isfinite(p)
+    suspicious = (dist < tol) | ~np.isfinite(p) | (np.abs(p) >= 2.0**53)
+    out = n0.astype(np.int64)
     if suspicious.any():
         from decimal import ROUND_HALF_UP, Decimal
 
         q9 = Decimal("1e-9")
-        flat = n0.reshape(-1)
+        flat = out.reshape(-1)
         xf = X.reshape(-1)
         for i in np.flatnonzero(suspicious.reshape(-1)):
-            flat[i] = float(
-                Decimal(repr(float(xf[i]))).quantize(
-                    q9, rounding=ROUND_HALF_UP
-                )
-                * 1_000_000_000
-            )
-    return n0.astype(np.int64)
+            v = Decimal(repr(float(xf[i]))).quantize(q9, rounding=ROUND_HALF_UP)
+            if v.is_finite():  # NaN keeps its cast value (no NaN/Inf guard yet)
+                flat[i] = int(v * 1_000_000_000)
+    return out
 
 
 def _kmeans_update_exact(X: "np.ndarray", cids: "np.ndarray"):

@@ -2,18 +2,28 @@
 error-header provenance, header flattening, safe serialization.
 
 These reproduce the semantics of the reference's serde/transformer
-layer (citations inline) as pure DataFrame column algebra. No Python
-runs per-row in any of these — everything is Catalyst expressions,
-so the whole layer stays inside whole-stage codegen and scales
-linearly with executors at 100 TB.
+layer (citations inline). The JSON operators, the jar-backed
+:func:`safe_from_avro` and the error-channel operators are DataFrame
+column algebra: Catalyst expressions inside whole-stage codegen. The
+jar-less Avro serde (:func:`safe_from_avro_evolving` and its sugar,
+:func:`safe_serialize_avro`) runs in Python workers under
+``mapInArrow``, one Arrow batch at a time: schemas in the
+vectorizable subset decode and encode as whole-batch numpy passes
+(:mod:`maston_spark.avro_vec`); records that pass cannot handle, and
+schemas outside the subset (arrays, maps), take the compiled
+per-record codec (:mod:`maston_spark.avro_codec`).
 """
 
 from __future__ import annotations
 
 from typing import Callable
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, functions as F
 
+from maston_spark import avro_codec as AC
+from maston_spark import avro_vec as AV
 from maston_spark import errors as E
 
 OK = "ok"
@@ -153,89 +163,23 @@ def safe_from_avro_arrow(
     value_col: str,
     avro_schema: dict,
     target_class: str = "avro",
-    confluent_wire_format: bool = True,
 ) -> DataFrame:
-    """Vectorized executable Avro path (no spark-avro jar needed).
-
-    Decodes Confluent-framed Avro binary with the numpy/pyarrow batch
-    decoder (:mod:`maston_spark.avro_vec`) inside ``mapInArrow`` —
-    per-partition, Arrow-batched, no shuffle, and (unlike
-    :func:`safe_from_avro_python`) no per-record Python in the hot
-    loop: fields decode as whole-batch numpy passes and the ok struct
-    is assembled directly from Arrow buffers. Records the vectorized
-    pass can't handle (corruption, rare legal shapes) re-decode
-    through the compiled per-record codec, so ok/err semantics —
-    including error classes and messages — are byte-identical to the
-    per-record path and to the never-throw contract of
-    serdes/VavrSafeDeserializer.java:29-39.
-
-    Falls back to :func:`safe_from_avro_python` wholesale when the
-    schema uses features outside the vectorizable subset.
+    """Jar-less Avro decode of Confluent-framed payloads:
+    :func:`safe_from_avro_evolving` with ``avro_schema`` as the reader
+    and as the writer of every schema id (the frame's id is not
+    checked). Same ok/err contract as :func:`safe_from_avro`.
 
     Measured on the q73 record shape (see ``tools/bench_avro.py``):
     ~10× per-row over the compiled per-record closures.
     """
-    import pyarrow as pa
-
-    from pyspark.sql.types import StructField, StructType
-
-    from maston_spark import avro_codec as AC
-    from maston_spark import avro_vec as AV
-
-    try:
-        batch_decode = AV.compile_batch_decoder(avro_schema)
-    except ValueError:
-        return safe_from_avro_python(
-            df, value_col, avro_schema, target_class, confluent_wire_format
-        )
-
-    ok_type = AC.record_struct_type(avro_schema)
-    err_type = E.error_struct_type()
-    out_schema = StructType(
-        list(df.schema.fields)
-        + [StructField(OK, ok_type), StructField(ERR, err_type)]
-    )
-    err_pa_type = pa.struct(
-        [
-            pa.field("code", pa.string()),
-            pa.field("message", pa.string()),
-            pa.field("target_class", pa.string()),
-            pa.field("exception_class", pa.string()),
-            pa.field("exception_message", pa.string()),
-            pa.field("stacktrace", pa.string()),
-            pa.field("raw_bytes", pa.binary()),
-        ]
-    )
-
-    def run(batches):
-        for batch in batches:
-            names = list(batch.schema.names)
-            values = batch.column(names.index(value_col))
-            res = batch_decode(values, confluent_wire_format)
-            err_list: list[dict | None] = [None] * batch.num_rows
-            for i, exc in res.errors.items():
-                err_list[i] = {
-                    "code": E.FAILED_TO_DESERIALIZE_RECORD,
-                    "message": f"unable to decode avro as {target_class}",
-                    "target_class": target_class,
-                    "exception_class": type(exc).__name__,
-                    "exception_message": str(exc)[:256],
-                    "stacktrace": None,
-                    "raw_bytes": bytes(values[i].as_py()),
-                }
-            err_arr = pa.array(err_list, type=err_pa_type)
-            yield pa.RecordBatch.from_arrays(
-                list(batch.columns) + [res.ok, err_arr], names=names + [OK, ERR]
-            )
-
-    return df.mapInArrow(run, out_schema)
+    return safe_from_avro_evolving(df, value_col, avro_schema, None, target_class)
 
 
 def safe_from_avro_evolving(
     df: DataFrame,
     value_col: str,
     reader_schema: dict,
-    writer_schemas_by_id: dict[int, dict],
+    writer_schemas_by_id: dict[int, dict] | None,
     target_class: str = "avro",
 ) -> DataFrame:
     """Schema-EVOLUTION-aware Avro deserialize: per-record writer
@@ -250,211 +194,157 @@ def safe_from_avro_evolving(
     each id's writer schema once (``writer_schemas_by_id`` — see
     :func:`safe_from_avro_registry` for the registry-backed sugar)
     and bakes compiled decoders into the task closure; executors
-    never talk to the registry.
+    never talk to the registry. ``None`` decodes every id with
+    ``reader_schema`` (:func:`safe_from_avro_arrow`).
 
     Execution per Arrow batch (``mapInArrow``, no shuffle):
 
-    1. schema ids are extracted VECTORIZED from the frame bytes
-       (one numpy gather, no per-record Python);
-    2. rows group by id; each group decodes with its writer-compiled
-       vectorized batch decoder (:mod:`maston_spark.avro_vec`), then
-       projects to the reader shape with whole-column Arrow
-       select/cast/fill ops per the Avro-spec resolution rules
-       (:func:`maston_spark.avro_codec.resolution_spec` — name
-       matching, defaults, int→long/float→double/string↔bytes
-       promotions);
-    3. groups scatter back to row order with one ``take``. The
-       steady-state single-id batch skips the scatter entirely.
+    1. schema ids come from the frame bytes with one numpy gather
+       (:func:`maston_spark.avro_vec.schema_ids`);
+    2. when every framed row goes to one decoder (the steady state)
+       the whole array decodes in one call, with no take or scatter;
+       otherwise each id's rows are taken, decoded and scattered back
+       to row order with one ``take``;
+    3. a writer in the vectorizable subset decodes with
+       :mod:`maston_spark.avro_vec` and projects to the reader shape
+       with whole-column Arrow ops per the Avro-spec resolution rules
+       (:func:`maston_spark.avro_codec.resolution_spec`; skipped when
+       writer and reader are the same schema). Any other writer
+       (arrays, maps) decodes per record with the compiled codec.
 
     Never-throw contract (serdes/VavrSafeDeserializer.java:29-39):
     unknown schema ids, bad framing, and per-record decode failures
     become ``err`` rows with the raw payload preserved; NULL input
     (tombstone) stays valid with NULL ``ok``.
-
-    At 100 TB this is the right shape: the id dispatch is O(batch)
-    numpy, decoders compile once per executor (closure), and a new
-    schema version rolling through a topic costs one extra group per
-    transitional batch — steady-state batches stay single-group.
     """
-    import numpy as np
-    import pyarrow as pa
-
+    from pyspark.sql.pandas.types import to_arrow_type
     from pyspark.sql.types import StructField, StructType
-
-    from maston_spark import avro_codec as AC
-    from maston_spark import avro_vec as AV
-
-    struct_pa_type = AV.arrow_struct_type(reader_schema)
-
-    def _make_group_decoder(writer: dict):
-        spec = AC.resolution_spec(writer, reader_schema)
-
-        def _make_slow():
-            rec_decode = AC.compile_resolving_record_decoder(writer, reader_schema)
-
-            def dec_slow(sub: pa.Array):
-                oks: list[dict | None] = []
-                errs: dict[int, Exception] = {}
-                for j in range(len(sub)):
-                    raw = bytes(sub[j].as_py())
-                    try:
-                        oks.append(rec_decode(raw[5:]))
-                    except Exception as exc:  # noqa: BLE001 — never-throw serde
-                        oks.append(None)
-                        errs[j] = exc
-                return pa.array(oks, type=struct_pa_type), errs
-
-            return dec_slow
-
-        try:
-            batch_decode = AV.compile_batch_decoder(writer)
-        except ValueError:
-            return _make_slow()
-
-        slow_holder: list = []
-
-        def dec_fast(sub: pa.Array):
-            res = batch_decode(sub, True)
-            try:
-                return AV.resolve_struct(res.ok, spec, reader_schema), res.errors
-            except pa.ArrowInvalid:
-                # A bytes→string promotion cast validates UTF-8 whole-column
-                # and raises on any non-UTF8 writer bytes. Never-throw
-                # contract: re-decode the group per record so only the bad
-                # rows become err rows instead of the cast killing the task.
-                if not slow_holder:
-                    slow_holder.append(_make_slow())
-                return slow_holder[0](sub)
-
-        return dec_fast
-
-    decoders = {int(i): _make_group_decoder(w) for i, w in writer_schemas_by_id.items()}
 
     ok_type = AC.record_struct_type(reader_schema)
     err_type = E.error_struct_type()
-    out_schema = StructType(
-        list(df.schema.fields)
-        + [StructField(OK, ok_type), StructField(ERR, err_type)]
-    )
-    err_pa_type = pa.struct(
-        [
-            pa.field("code", pa.string()),
-            pa.field("message", pa.string()),
-            pa.field("target_class", pa.string()),
-            pa.field("exception_class", pa.string()),
-            pa.field("exception_message", pa.string()),
-            pa.field("stacktrace", pa.string()),
-            pa.field("raw_bytes", pa.binary()),
-        ]
-    )
-
-    def _err(values: pa.Array, i: int, exc_msg: str, exc_class: str = "AvroDecodeError"):
-        return {
-            "code": E.FAILED_TO_DESERIALIZE_RECORD,
-            "message": f"unable to decode avro as {target_class}",
-            "target_class": target_class,
-            "exception_class": exc_class,
-            "exception_message": exc_msg[:256],
-            "stacktrace": None,
-            "raw_bytes": bytes(values[i].as_py()),
+    ok_pa, err_pa = to_arrow_type(ok_type), to_arrow_type(err_type)
+    if writer_schemas_by_id is None:
+        every_id = _avro_decoder(reader_schema, reader_schema, ok_pa)
+        decoders = {}
+    else:
+        every_id = None
+        decoders = {
+            int(i): _avro_decoder(w, reader_schema, ok_pa)
+            for i, w in writer_schemas_by_id.items()
         }
 
     def run(batches):
         for batch in batches:
-            names = list(batch.schema.names)
-            values = batch.column(names.index(value_col))
-            if isinstance(values, pa.ChunkedArray):
-                values = values.combine_chunks()
-            n = len(values)
-            null_in = values.is_null().to_numpy(zero_copy_only=False)
-            bufs = values.buffers()
-            odt = np.int64 if pa.types.is_large_binary(values.type) else np.int32
-            offs = (
-                np.frombuffer(bufs[1], dtype=odt)[
-                    values.offset : values.offset + n + 1
-                ].astype(np.int64)
-                if bufs[1] is not None
-                else np.zeros(n + 1, dtype=np.int64)
-            )
-            data = (
-                np.frombuffer(bufs[2], dtype=np.uint8)
-                if bufs[2] is not None
-                else np.empty(0, dtype=np.uint8)
-            )
-            starts, lengths = offs[:-1], offs[1:] - offs[:-1]
-            framed = (~null_in) & (lengths >= 5)
-            if len(data):
-                framed &= data[np.minimum(starts, len(data) - 1)] == 0
-            ids = np.full(n, -1, dtype=np.int64)
-            fidx = np.nonzero(framed)[0]
-            if len(fidx):
-                p = starts[fidx]
-                ids[fidx] = (
-                    (data[p + 1].astype(np.int64) << 24)
-                    | (data[p + 2].astype(np.int64) << 16)
-                    | (data[p + 3].astype(np.int64) << 8)
-                    | data[p + 4].astype(np.int64)
-                )
-
-            err_list: list[dict | None] = [None] * n
-            for i in np.nonzero((~null_in) & ~framed)[0]:
-                err_list[int(i)] = _err(values, int(i), "not a Confluent-framed payload")
-
-            groups: list[tuple] = []  # (row idx array, reader-shaped StructArray)
-            for sid in np.unique(ids[fidx]) if len(fidx) else []:
-                gidx = np.nonzero(framed & (ids == sid))[0]
-                dec = decoders.get(int(sid))
-                if dec is None:
-                    for i in gidx:
-                        err_list[int(i)] = _err(
-                            values, int(i), f"unknown schema id {int(sid)}"
-                        )
-                    continue
-                if len(gidx) == n:  # steady state: one id covers the batch
-                    ok_arr, errs = dec(values)
-                    for j, exc in errs.items():
-                        err_list[int(j)] = _err(
-                            values, int(j), str(exc), type(exc).__name__
-                        )
-                    groups = [(gidx, ok_arr)]
-                    break
-                sub = values.take(pa.array(gidx))
-                ok_sub, errs = dec(sub)
-                for j, exc in errs.items():
-                    err_list[int(gidx[j])] = _err(
-                        values, int(gidx[j]), str(exc), type(exc).__name__
-                    )
-                groups.append((gidx, ok_sub))
-
-            if len(groups) == 1 and len(groups[0][0]) == n:
-                ok_arr = groups[0][1]
+            values = batch.column(value_col)
+            dec = every_id
+            if dec is None:
+                ids = AV.schema_ids(values)
+                live = np.unique(ids[ids >= 0])
+                if len(live) == 1:
+                    dec = decoders.get(int(live[0]))
+            if dec is not None:
+                ok, errors = dec(values)
             else:
-                covered = (
-                    np.concatenate([g[0] for g in groups])
-                    if groups
-                    else np.empty(0, dtype=np.int64)
-                )
-                rest = np.setdiff1d(np.arange(n, dtype=np.int64), covered)
-                order = np.concatenate([covered, rest])
-                parts = [g[1] for g in groups]
-                if len(rest):
-                    parts.append(pa.nulls(len(rest), struct_pa_type))
-                combined = (
-                    pa.concat_arrays([p.cast(struct_pa_type) for p in parts])
-                    if parts
-                    else pa.nulls(0, struct_pa_type)
-                )
-                inv = np.empty(n, dtype=np.int64)
-                inv[order] = np.arange(n, dtype=np.int64)
-                ok_arr = combined.take(pa.array(inv))
-
-            err_arr = pa.array(err_list, type=err_pa_type)
+                ok, errors = _decode_by_id(values, ids, decoders, ok_pa)
             yield pa.RecordBatch.from_arrays(
-                list(batch.columns) + [ok_arr, err_arr], names=names + [OK, ERR]
+                batch.columns + [ok, _err_column(values, errors, target_class, err_pa)],
+                names=batch.schema.names + [OK, ERR],
             )
 
+    out_schema = StructType(
+        df.schema.fields + [StructField(OK, ok_type), StructField(ERR, err_type)]
+    )
     return df.mapInArrow(run, out_schema)
 
+
+def _avro_decoder(writer: dict, reader: dict, ok_pa: pa.DataType):
+    """``fn(values) -> (ok, errors)`` over Confluent-framed payloads
+    written with ``writer``: ``ok`` is a reader-shaped StructArray,
+    ``errors`` maps a row to the exception its payload raised. An
+    unframed payload raises ``AvroDecodeError("not a Confluent-framed
+    payload")``; a NULL payload gives a NULL ``ok``."""
+    record_decode = AC.compile_resolving_record_decoder(writer, reader)
+
+    def per_record(values: pa.Array):
+        oks: list[dict | None] = []
+        errors: dict[int, Exception] = {}
+        for i, raw in enumerate(values.to_pylist()):
+            try:
+                if raw is not None and (len(raw) < 5 or raw[0]):
+                    raise AC.AvroDecodeError("not a Confluent-framed payload")
+                oks.append(None if raw is None else record_decode(raw[5:]))
+            except Exception as exc:  # noqa: BLE001 — never-throw serde
+                oks.append(None)
+                errors[i] = exc
+        return pa.array(oks, type=ok_pa), errors
+
+    try:
+        batch_decode = AV.compile_batch_decoder(writer)
+        spec = None if writer == reader else AC.resolution_spec(writer, reader)
+        if spec is not None:
+            AV.arrow_struct_type(reader)  # the reader must vectorize too
+    except ValueError:
+        return per_record
+
+    def vectorized(values: pa.Array):
+        res = batch_decode(values, True)
+        if spec is None:
+            return res.ok, res.errors
+        try:
+            return AV.resolve_struct(res.ok, spec, reader), res.errors
+        except pa.ArrowInvalid:
+            # A bytes→string promotion validates UTF-8 whole-column and
+            # raises on any non-UTF-8 writer bytes: re-decode per record
+            # so only the bad rows become err rows.
+            return per_record(values)
+
+    return vectorized
+
+
+def _decode_by_id(values: pa.Array, ids: np.ndarray, decoders: dict, ok_pa: pa.DataType):
+    """Decode a batch that mixes schema ids (or holds an unknown one):
+    each id's rows are taken, decoded by their writer's decoder and
+    scattered back to row order by one ``take``."""
+    unframed = values.is_valid().to_numpy(zero_copy_only=False) & (ids < 0)
+    errors: dict[int, Exception] = {
+        int(i): AC.AvroDecodeError("not a Confluent-framed payload")
+        for i in np.nonzero(unframed)[0]
+    }
+    parts = [pa.nulls(1, ok_pa)]  # row 0: where every undecoded row points
+    pos = np.zeros(len(values), dtype=np.int64)
+    at = 1
+    for sid in np.unique(ids[ids >= 0]):
+        rows = np.nonzero(ids == sid)[0]
+        dec = decoders.get(int(sid))
+        if dec is None:
+            for i in rows:
+                errors[int(i)] = AC.AvroDecodeError(f"unknown schema id {int(sid)}")
+            continue
+        ok, errs = dec(values.take(pa.array(rows)))
+        errors.update((int(rows[j]), exc) for j, exc in errs.items())
+        parts.append(ok)
+        pos[rows] = np.arange(at, at + len(rows))
+        at += len(rows)
+    return pa.concat_arrays(parts).take(pa.array(pos)), errors
+
+
+def _err_column(
+    values: pa.Array, errors: dict[int, Exception], target_class: str, err_pa: pa.DataType
+) -> pa.Array:
+    """The ``err`` column of a decoded batch: the failed payload's raw
+    bytes and exception (serdes/VavrSafeDeserializer.java:29-39)."""
+    rows: list[dict | None] = [None] * len(values)
+    for i, exc in errors.items():
+        rows[i] = {
+            "code": E.FAILED_TO_DESERIALIZE_RECORD,
+            "message": f"unable to decode avro as {target_class}",
+            "target_class": target_class,
+            "exception_class": type(exc).__name__,
+            "exception_message": str(exc)[:256],
+            "stacktrace": None,
+            "raw_bytes": values[i].as_py(),
+        }
+    return pa.array(rows, type=err_pa)
 
 def distinct_schema_ids(df: DataFrame, value_col: str = "value") -> list[int]:
     """Distinct Confluent schema ids present in a (batch) DataFrame's
@@ -499,82 +389,6 @@ def safe_from_avro_registry(
     ids = known_ids if known_ids is not None else distinct_schema_ids(df, value_col)
     writers = {i: client.get_by_id(i).schema for i in ids}
     return safe_from_avro_evolving(df, value_col, reader, writers, target_class)
-
-
-def safe_from_avro_python(
-    df: DataFrame,
-    value_col: str,
-    avro_schema: dict,
-    target_class: str = "avro",
-    confluent_wire_format: bool = True,
-) -> DataFrame:
-    """Executable Avro fallback when the spark-avro jar is absent.
-
-    Decodes Confluent-framed Avro binary with the pure-Python codec
-    in :mod:`maston_spark.avro_codec` inside ``mapInPandas``
-    (Arrow-batched, per-partition, no shuffle). Same ok/err output
-    contract as :func:`safe_from_avro`; same never-throw semantics
-    as serdes/VavrSafeDeserializer.java:29-39 — any decode failure
-    (bad framing, truncated varint, trailing bytes) lands in ``err``
-    with the raw payload preserved. NULL input (tombstone) stays
-    valid with NULL ``ok``.
-    """
-    from pyspark.sql.types import StructField, StructType
-
-    from maston_spark import avro_codec as AC
-
-    ok_type = AC.record_struct_type(avro_schema)
-    err_type = E.error_struct_type()
-    out_schema = StructType(
-        list(df.schema.fields)
-        + [StructField(OK, ok_type), StructField(ERR, err_type)]
-    )
-
-    # schema dispatch compiled ONCE (driver side, shipped in the task
-    # closure); the per-record loop below is positional byte parsing
-    # with a zero-cost-when-ok try/except — no per-row schema walking
-    decode = AC.compile_record_decoder(avro_schema)
-
-    def run(batches):
-        for pdf in batches:
-            oks, errs = [], []
-            ok_append, err_append = oks.append, errs.append
-            for v in pdf[value_col].tolist():
-                if v is None:
-                    ok_append(None)
-                    err_append(None)
-                    continue
-                raw = bytes(v)
-                try:
-                    if confluent_wire_format:
-                        if len(raw) < 5 or raw[0]:
-                            raise AC.AvroDecodeError(
-                                "not a Confluent-framed payload"
-                            )
-                        body = raw[5:]
-                    else:
-                        body = raw
-                    ok_append(decode(body))
-                    err_append(None)
-                except Exception as exc:  # noqa: BLE001 — never-throw serde
-                    ok_append(None)
-                    err_append(
-                        {
-                            "code": E.FAILED_TO_DESERIALIZE_RECORD,
-                            "message": f"unable to decode avro as {target_class}",
-                            "target_class": target_class,
-                            "exception_class": type(exc).__name__,
-                            "exception_message": str(exc)[:256],
-                            "stacktrace": None,
-                            "raw_bytes": raw,
-                        }
-                    )
-            out = pdf.copy()
-            out[OK] = oks
-            out[ERR] = errs
-            yield out
-
-    return df.mapInPandas(run, out_schema)
 
 
 def branch_valid(df: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -783,104 +597,51 @@ def safe_serialize_avro(
     driver-side via
     :meth:`maston_spark.registry.SchemaRegistryClient.schema_id_for`
     (which honors the reference's AUTO_REGISTER_SCHEMAS flag).
-    Runs Arrow-batched per partition (``mapInPandas``); the encoder
-    closures compile once per executor.
+    Runs Arrow-batched per partition (``mapInArrow``): the ok column
+    encodes as per-field numpy passes (~2.6× the compiled per-record
+    loop, see ``tools/bench_avro.py``), or per record with the
+    compiled encoder for a schema outside the vectorizable subset;
+    only the (rare) err rows take per-row Python, spliced in with one
+    rebuild. The encoders compile once, driver side.
     """
     from pyspark.sql.types import BinaryType, StructField, StructType
 
-    from maston_spark import avro_codec as AC
-
-    out_schema = StructType(list(df.schema.fields) + [StructField(out_col, BinaryType())])
-    try:
-        err_fields = [f.name for f in df.schema[ERR].dataType.fields]
-    except Exception:
-        err_fields = []
-    has_src = "source_record" in err_fields
-    # encoders compile ONCE (driver side, shipped in the task closure);
-    # the 5-byte Confluent frame is a precomputed constant prefix
+    out_schema = StructType(df.schema.fields + [StructField(out_col, BinaryType())])
     encode = AC.compile_record_encoder(avro_schema)
     frame = AC.confluent_wrap(schema_id, b"")
 
+    def framed(rec: dict) -> bytes:
+        try:
+            return frame + encode(rec)
+        except Exception:  # noqa: BLE001 — never-throw serializer
+            return b""
+
     try:
-        from maston_spark import avro_vec as AV
-
         batch_encode = AV.compile_batch_encoder(avro_schema)
-    except ValueError:
-        batch_encode = None
+    except ValueError:  # outside the vectorizable subset: per record
 
-    if batch_encode is not None:
-        # VECTORIZED produce path (mapInArrow): the whole ok column
-        # encodes as per-field numpy passes (~2.6× the compiled
-        # per-record loop, see tools/bench_avro.py); only the (rare)
-        # err rows take per-row Python, spliced in with one rebuild.
-        import numpy as np
-        import pyarrow as pa
-
-        from maston_spark.avro_vec import patch_binary
-
-        def run_arrow(batches):
-            for batch in batches:
-                names = list(batch.schema.names)
-                ok = batch.column(names.index(OK))
-                err = batch.column(names.index(ERR))
-                if isinstance(ok, pa.ChunkedArray):
-                    ok = ok.combine_chunks()
-                if isinstance(err, pa.ChunkedArray):
-                    err = err.combine_chunks()
-                encoded = batch_encode(ok, frame)
-                err_rows = np.nonzero(
-                    err.is_valid().to_numpy(zero_copy_only=False)
-                )[0]
-                patched: dict[int, bytes] = {}
-                for i in err_rows:
-                    e = err[int(i)].as_py()
-                    raw = e.get("raw_bytes")
-                    if raw is not None:
-                        patched[int(i)] = bytes(raw)
-                        continue
-                    src = e.get("source_record") if has_src else None
-                    if src is None:
-                        patched[int(i)] = b""
-                        continue
-                    try:
-                        patched[int(i)] = frame + encode(src)
-                    except Exception:  # noqa: BLE001 — never-throw
-                        patched[int(i)] = b""
-                out = patch_binary(encoded, patched) if patched else encoded
-                yield pa.RecordBatch.from_arrays(
-                    list(batch.columns) + [out], names=names + [out_col]
-                )
-
-        return df.mapInArrow(run_arrow, out_schema)
+        def batch_encode(ok: pa.Array, prefix: bytes) -> pa.Array:
+            recs = ok.to_pylist()
+            return pa.array([None if r is None else framed(r) for r in recs], pa.binary())
 
     def run(batches):
-        for pdf in batches:
-            values: list = []
-            for ok, err in zip(pdf[OK], pdf[ERR]):
-                if err is None and ok is not None:
-                    rec = ok
-                elif err is not None:
-                    raw = err.get("raw_bytes")
-                    if raw is not None:
-                        values.append(bytes(raw))
-                        continue
-                    src = err.get("source_record") if has_src else None
-                    if src is None:
-                        values.append(b"")
-                        continue
-                    rec = src
+        for batch in batches:
+            err = batch.column(ERR)
+            encoded = batch_encode(batch.column(OK), frame)
+            patched: dict[int, bytes] = {}
+            for i in np.nonzero(err.is_valid().to_numpy(zero_copy_only=False))[0]:
+                e = err[int(i)].as_py()
+                raw, src = e.get("raw_bytes"), e.get("source_record")
+                if raw is not None:
+                    patched[int(i)] = raw
                 else:
-                    values.append(None)
-                    continue
-                try:
-                    values.append(frame + encode(rec))
-                except Exception:  # noqa: BLE001 — never-throw serializer
-                    values.append(b"")
-            out = pdf.copy()
-            out[out_col] = values
-            yield out
+                    patched[int(i)] = b"" if src is None else framed(src)
+            out = AV.patch_binary(encoded, patched) if patched else encoded
+            yield pa.RecordBatch.from_arrays(
+                batch.columns + [out], names=batch.schema.names + [out_col]
+            )
 
-    return df.mapInPandas(run, out_schema)
+    return df.mapInArrow(run, out_schema)
 
 
 def replay_dlq(

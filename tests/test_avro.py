@@ -16,7 +16,6 @@ import decimal
 import io
 
 import pytest
-from pyspark.sql import Row
 
 from maston_spark import avro_codec as AC
 
@@ -117,28 +116,6 @@ def test_spark_type_mapping():
         AC.spark_type_for(["string", "long"])  # non-null union unsupported
 
 
-def test_safe_from_avro_python_never_throws(spark):
-    """DataFrame-level contract: good payload -> ok struct; corrupt
-    payload -> err with raw bytes preserved; NULL value (tombstone)
-    -> both NULL."""
-    from maston_spark.validated import safe_from_avro_python
-
-    good = AC.confluent_wrap(
-        7, AC.encode_record(DUMMY_SCHEMA, {"mandatoryStringValue": "ok-1"})
-    )
-    corrupt = good[:6]  # framing intact, body truncated
-    df = spark.createDataFrame(
-        [Row(id=1, value=good), Row(id=2, value=corrupt), Row(id=3, value=None)],
-        "id int, value binary",
-    )
-    rows = {r.id: r for r in safe_from_avro_python(df, "value", DUMMY_SCHEMA).collect()}
-    assert rows[1].ok.mandatoryStringValue == "ok-1" and rows[1].err is None
-    assert rows[2].ok is None
-    assert rows[2].err.code == "FAILED_TO_DESERIALIZE_RECORD"
-    assert bytes(rows[2].err.raw_bytes) == corrupt
-    assert rows[3].ok is None and rows[3].err is None
-
-
 def test_decimal_wider_than_spark_cap_nulls_not_crashes():
     """A validly-encoded decimal wider than Spark's 38-digit cap is
     legal under the reference's precision-64 schema
@@ -206,8 +183,9 @@ def test_oversized_varint_rejected_inside_try_decode():
 
 
 def test_compiled_decoder_matches_reference_walker():
-    """compile_record_decoder is the hot path under mapInPandas; its
-    output must byte-for-byte match decode_record on the dummy shape."""
+    """compile_record_decoder is the per-record path of the jar-less
+    serde; its output must byte-for-byte match decode_record on the
+    dummy shape."""
     dec = AC.compile_record_decoder(DUMMY_SCHEMA)
     recs = [
         {"mandatoryStringValue": "a", "mandatoryBusinessStringKey": None,

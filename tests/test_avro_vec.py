@@ -18,6 +18,7 @@ import random
 import pyarrow as pa
 import pytest
 from pyspark.sql import Row
+from pyspark.sql import functions as F
 
 from maston_spark import avro_codec as AC
 from maston_spark import avro_vec as AV
@@ -205,27 +206,73 @@ def test_prop_engines_agree_on_arbitrary_bytes(payloads):
     _cross_check(payloads)
 
 
-def test_safe_from_avro_arrow_dataframe_contract(spark):
+LONG_STR = {
+    "name": "T", "type": "record",
+    "fields": [
+        {"name": "k", "type": "long"},
+        {"name": "v", "type": ["null", "string"], "default": None},
+    ],
+}
+
+# the shape of dummy-avro-record.avsc (tests/test_avro.py DUMMY_SCHEMA):
+# nullable strings and a precision-64 bytes-decimal union
+DUMMY = {
+    "name": "DummyAvroTest", "type": "record",
+    "fields": [
+        {"name": "mandatoryStringValue", "type": "string"},
+        {"name": "mandatoryBusinessStringKey", "type": ["null", "string"], "default": None},
+        {"name": "nullableStringValue", "type": ["null", "string"], "default": None},
+        {
+            "name": "nullableDummyBigDecimal",
+            "type": [
+                "null",
+                {"logicalType": "decimal", "precision": 64, "scale": 0, "type": "bytes"},
+            ],
+            "default": None,
+        },
+    ],
+}
+
+ARRAY_MAP = {
+    "name": "A", "type": "record",
+    "fields": [
+        {"name": "xs", "type": {"type": "array", "items": "long"}},
+        {"name": "m", "type": {"type": "map", "values": "string"}},
+    ],
+}
+
+CONTRACT_CASES = [
+    pytest.param(LONG_STR, {"k": 9, "v": "ok"}, id="long_string"),
+    pytest.param(
+        DUMMY,
+        {
+            "mandatoryStringValue": "ok-1",
+            "mandatoryBusinessStringKey": None,
+            "nullableStringValue": "n",
+            "nullableDummyBigDecimal": decimal.Decimal("-12345678901234567890"),
+        },
+        id="decimal_unions",
+    ),
+    pytest.param(ARRAY_MAP, {"xs": [1, 2, 3], "m": {"a": "x", "b": "y"}}, id="array_map"),
+]
+
+
+@pytest.mark.parametrize("sch, rec", CONTRACT_CASES)
+def test_safe_from_avro_arrow_dataframe_contract(spark, sch, rec):
     """DataFrame-level: good -> ok struct; corrupt -> err with raw
-    bytes preserved; NULL (tombstone) -> both NULL. Same contract as
-    safe_from_avro_python (VavrSafeDeserializer.java:29-39)."""
+    bytes preserved; NULL (tombstone) -> both NULL
+    (VavrSafeDeserializer.java:29-39), on the vectorized engine and on
+    the per-record one (arrays/maps)."""
     from maston_spark.validated import safe_from_avro_arrow
 
-    sch = {
-        "name": "T", "type": "record",
-        "fields": [
-            {"name": "k", "type": "long"},
-            {"name": "v", "type": ["null", "string"], "default": None},
-        ],
-    }
-    good = AC.confluent_wrap(7, AC.encode_record(sch, {"k": 9, "v": "ok"}))
+    good = AC.confluent_wrap(7, AC.encode_record(sch, rec))
     corrupt = good[:6]
     df = spark.createDataFrame(
         [Row(id=1, value=good), Row(id=2, value=corrupt), Row(id=3, value=None)],
         "id int, value binary",
     )
     rows = {r.id: r for r in safe_from_avro_arrow(df, "value", sch).collect()}
-    assert rows[1].ok.k == 9 and rows[1].ok.v == "ok" and rows[1].err is None
+    assert rows[1].ok.asDict(recursive=True) == rec and rows[1].err is None
     assert rows[2].ok is None
     assert rows[2].err.code == "FAILED_TO_DESERIALIZE_RECORD"
     assert rows[2].err.exception_class == "AvroDecodeError"
@@ -233,10 +280,79 @@ def test_safe_from_avro_arrow_dataframe_contract(spark):
     assert rows[3].ok is None and rows[3].err is None
 
 
+@pytest.mark.parametrize("sch, rec", CONTRACT_CASES[::2])  # one per decode engine
+def test_safe_from_avro_arrow_matches_evolving_single_id(spark, sch, rec):
+    """``safe_from_avro_arrow`` is ``safe_from_avro_evolving`` with one
+    writer: identical ok/err on good, truncated, bad-magic, short and
+    NULL payloads."""
+    from maston_spark.validated import safe_from_avro_arrow, safe_from_avro_evolving
+
+    good = AC.confluent_wrap(42, AC.encode_record(sch, rec))
+    df = spark.createDataFrame(
+        [
+            Row(id=1, value=good),
+            Row(id=2, value=good[:-1]),
+            Row(id=3, value=b"\x01" + good[1:]),
+            Row(id=4, value=good[:4]),
+            Row(id=5, value=None),
+        ],
+        "id int, value binary",
+    )
+    arrow = {r.id: r for r in safe_from_avro_arrow(df, "value", sch).collect()}
+    evolving = {
+        r.id: r for r in safe_from_avro_evolving(df, "value", sch, {42: sch}).collect()
+    }
+    assert arrow == evolving
+    assert arrow[1].err is None and arrow[5].ok is None and arrow[5].err is None
+    assert all(arrow[i].ok is None and arrow[i].err is not None for i in (2, 3, 4))
+    assert {arrow[i].err.exception_message for i in (3, 4)} == {
+        "not a Confluent-framed payload"
+    }
+
+
+def test_safe_serialize_avro_roundtrip_array_map(spark):
+    """The produce side on a schema outside the vectorizable subset:
+    each row encodes with the compiled per-record encoder inside the
+    same ``mapInArrow`` body, and decodes back to the same record."""
+    from maston_spark.validated import safe_from_avro_arrow, safe_serialize_avro
+
+    with pytest.raises(ValueError):
+        AV.compile_batch_encoder(ARRAY_MAP)
+    err_ddl = (
+        "struct<code:string,message:string,target_class:string,"
+        "exception_class:string,exception_message:string,"
+        "stacktrace:string,raw_bytes:binary,"
+        "source_record:struct<xs:array<bigint>,m:map<string,string>>>"
+    )
+    recs = {"a": {"xs": [1, -2], "m": {"k": "v"}}, "b": {"xs": [], "m": {}}}
+    df = spark.createDataFrame(
+        [
+            ("a", recs["a"], None),
+            ("b", recs["b"], None),
+            ("src", None, {"code": "X", "source_record": {"xs": [5], "m": {"z": "q"}}}),
+            ("raw", None, {"code": "X", "raw_bytes": b"orig"}),
+            ("null", None, None),
+        ],
+        f"k string, ok struct<xs:array<bigint>,m:map<string,string>>, err {err_ddl}",
+    )
+    framed = safe_serialize_avro(df, ARRAY_MAP, 7)
+    out = {r.k: r.value_out for r in framed.collect()}
+    for k, rec in recs.items():
+        sid, body = AC.confluent_unwrap(bytes(out[k]))
+        assert sid == 7 and AC.decode_record(ARRAY_MAP, body) == rec
+    assert AC.decode_record(ARRAY_MAP, bytes(out["src"])[5:]) == {"xs": [5], "m": {"z": "q"}}
+    assert bytes(out["raw"]) == b"orig" and out["null"] is None
+    back = safe_from_avro_arrow(
+        framed.select("k", F.col("value_out").alias("value")), "value", ARRAY_MAP
+    )
+    got = {r.k: r.ok.asDict(recursive=True) for r in back.filter("k in ('a', 'b')").collect()}
+    assert got == recs
+
+
 def test_safe_from_avro_arrow_unsupported_schema_falls_back(spark):
-    """Schemas outside the VECTORIZABLE subset (arrays/maps)
-    transparently delegate to the per-record mapInPandas path — same
-    ok/err output contract, values decoded by the full codec."""
+    """Schemas outside the VECTORIZABLE subset (arrays/maps) decode
+    per record inside the same ``mapInArrow`` body — same ok/err
+    output contract, values decoded by the full codec."""
     from maston_spark.validated import safe_from_avro_arrow
 
     sch = {

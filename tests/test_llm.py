@@ -2594,3 +2594,32 @@ def test_rake_keyphrases_multispace_breaks_runs(spark):
     )
     out = {r.phrase for r in rake_keyphrases(df, "doc_id", "text", top_k=50).collect()}
     assert out == {"alpha", "beta"}  # tab-glued gamma\t\tdelta fails [a-z]+
+
+
+def test_round9_numerators_exact_between_2_53_and_2_62():
+    """``round(x, 9)`` numerators where x·10⁹ lies in [2⁵³, 2⁶²): a
+    double no longer holds every integer there, so the float fast path
+    is off by up to its ulp. They must equal Spark's HALF_UP on the
+    shortest round-trip decimal string (the ``Decimal(repr(x))``
+    reference) exactly."""
+    import random
+    from decimal import ROUND_HALF_UP, Decimal
+
+    import numpy as np
+
+    from maston_spark.llm.similarity import _round9_numerators
+
+    def ref(x):
+        q = Decimal(repr(x)).quantize(Decimal("1e-9"), rounding=ROUND_HALF_UP)
+        return int(q * 1_000_000_000)
+
+    rng = random.Random(9)
+    xs = [9007199.254740993, 9876543.210123457, 3000000000.123457]
+    xs += [rng.uniform(2.0**53, 2.0**62) / 1e9 for _ in range(297)]
+    xs += [-x for x in xs[:50]]
+    X = np.array(xs, dtype=np.float64).reshape(-1, 7)  # a (rows, dims) matrix
+    got = _round9_numerators(X).reshape(-1)
+    assert [int(v) for v in got] == [ref(float(x)) for x in X.reshape(-1)]
+    assert [int(v) for v in _round9_numerators(np.array(xs[:3]))] == [
+        9007199254740993, 9876543210123457, 3000000000123457000
+    ]

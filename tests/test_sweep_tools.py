@@ -121,3 +121,33 @@ def test_bench_validity_gate_on_loadavg():
     assert bench.bench_valid([2.0, 5.0, 9.0]) is True  # boundary
     assert bench.bench_valid([11.24, 9.8, 7.7]) is False  # the r14 record
     assert bench.bench_valid(None) is True  # platform without getloadavg
+
+
+def test_code_lines_skips_comments_docstrings_and_blanks():
+    """tools/code_lines.py counts a line only when it holds code: the
+    module, class and function docstrings, comment-only lines and
+    blank lines do not count; a string that is not a docstring and a
+    line with a trailing comment do."""
+    from tools.code_lines import code_lines
+
+    src = '''"""Module docstring,
+two lines."""
+
+import os  # a trailing comment keeps the line
+
+
+def f(x):
+    """Function docstring."""
+    # a comment-only line
+    s = """a multi-line string
+that is not a docstring"""
+    return (x,
+            s)
+
+
+class C:
+    """Class docstring."""
+
+    y = 1
+'''
+    assert code_lines(src) == 8

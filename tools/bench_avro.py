@@ -1,10 +1,12 @@
 """Microbenchmark: per-record compiled Avro decode vs vectorized batch decode.
 
-Measures the two executable serde engines behind
-``validated.safe_from_avro_python`` (compiled per-record closures,
-``avro_codec.compile_record_decoder``) and
-``validated.safe_from_avro_arrow`` (numpy/pyarrow batch decode,
-``avro_vec.compile_batch_decoder``) on the q73 record shape —
+Measures the two decode engines of the jar-less Avro serde
+(``validated.safe_from_avro_evolving`` and its sugar
+``safe_from_avro_arrow``): the compiled per-record closures
+(``avro_codec.compile_record_decoder``, which decode the records the
+batch pass cannot and every record of a schema with arrays or maps)
+and the numpy/pyarrow batch decode
+(``avro_vec.compile_batch_decoder``) on the q73 record shape —
 long + nullable string + string + nullable decimal(12,2) — with the
 same ~13% injected corruption mix q73 uses, outside Spark so the
 numbers isolate decode cost from scan/shuffle.

@@ -495,17 +495,27 @@ def run_ams(spark, n, chk):
 # bytes GROW with |groups| exactly as that layout documents.
 
 
+def _growkey(b: int, j: int) -> int:
+    """Key of row ``j`` (0..4999) of batch ``b``: half the rows update
+    the 500 keys minted in this batch, the other half a 750-key window
+    of the older keys that slides by 131 per batch. A batch therefore
+    touches at most 1 250 keys while the live set grows by 500."""
+    k = j // 2
+    if b == 0 or j % 2 == 0:
+        return 500 * b + k % 500
+    return (131 * b + k % 750) % (500 * b)
+
+
 def run_delta_growkeys(spark, n, chk):
     """Per-key delta-store family: keyspace grows 500 -> 500*n while
-    the batch stays 5k rows — written bytes must track the batch's
-    touched keys, not the accumulated key count."""
+    the batch stays 5k rows touching at most 1 250 keys — written
+    bytes must track the batch's touched keys, not the accumulated
+    key count."""
     from maston_spark.streaming.topology import delta_topology
 
     rows = [
         (
-            _payload(
-                f"k{(i * 7) % (500 * (b + 1))}", f"v{b}.{i}", b * ROWS + i
-            ),
+            _payload(f"k{_growkey(b, i // 4)}", f"v{b}.{i}", b * ROWS + i),
             b,
         )
         for b in range(n)
