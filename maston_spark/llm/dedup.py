@@ -650,23 +650,25 @@ def _bloom_position(norm_col: Column, i: int, m: int) -> Column:
     )
 
 
+# the one Bloom bound: the bit test ships the bitmap to every task as
+# a binary literal, so its size is capped where a task binary stays cheap
+_BLOOM_MAX_BYTES = 4 << 20
+
+
 def build_bloom_bitmap(
     ref: DataFrame, text_col: str = "text", m: int = 1 << 20, n_hashes: int = 2
 ) -> bytes:
-    """Distributed Bloom-filter build over a reference corpus: each
-    task folds its partitions' bit positions into ONE local bitmap
-    (numpy, unbuffered `bitwise_or.at`), the driver ORs the per-task
-    bitmaps. Driver traffic is `n_tasks * m/8` bytes — independent of
-    corpus size, which is the entire point: a trillion-key historical
-    corpus collapses to a fixed-size structure.
+    """Distributed Bloom-filter build over a reference corpus: the
+    bit positions of each text go through :func:`fold_positions_bitmap`.
+    Driver traffic is ``n_tasks * m/8`` bytes, independent of corpus
+    size: a large historical corpus collapses to a fixed-size structure.
 
     Positions are md5-lane hashes of the *normalized* text (same
     normalization as :func:`content_hash`), so the filter answers
     "was this exact content in the reference corpus" with zero false
     negatives and a false-positive rate ≈ (n_hashes·n_keys/m)^n_hashes.
+    A NULL reference text sets no bit.
     """
-    if m % 8 != 0:
-        raise ValueError("m must be a multiple of 8")
     norm = F.lower(F.trim(F.regexp_replace(F.col(text_col), r"\s+", " ")))
     pos_df = ref.select(
         F.explode(F.array(*[_bloom_position(norm, i, m) for i in range(n_hashes)])).alias(
@@ -679,13 +681,21 @@ def build_bloom_bitmap(
 def fold_positions_bitmap(pos_df: DataFrame, m: int) -> bytes:
     """Fold a frame of bloom bit positions (one ``pos`` long column)
     into an m-bit bitmap: per-task numpy OR, driver OR of the
-    ``n_tasks × m/8``-byte partials. Shared by
-    :func:`build_bloom_bitmap` (positions from text) and the
-    streaming curation topology (positions replayed from its
-    accepted-docs state table on restart)."""
-    import numpy as np
-    import pandas as pd
+    ``n_tasks × m/8``-byte partials. NULL positions set no bit.
+    Shared by :func:`build_bloom_bitmap` (md5 positions of text) and
+    :func:`maston_spark.relational.bloom_pruned_join` (xxhash64
+    positions of join keys).
 
+    ``m`` must be a positive multiple of 8 with ``m/8`` at most 4 MiB,
+    the size :func:`bloom_bit_test` ships to every task; anything else
+    raises ``ValueError`` before a job runs."""
+    import numpy as np
+
+    if m <= 0 or m % 8 != 0 or m // 8 > _BLOOM_MAX_BYTES:
+        raise ValueError(
+            f"bloom filter size m={m} must be a positive multiple of 8 "
+            f"with m/8 <= {_BLOOM_MAX_BYTES} bytes"
+        )
     nbytes = m // 8
 
     def fold(batches):
@@ -699,9 +709,30 @@ def fold_positions_bitmap(pos_df: DataFrame, m: int) -> bytes:
             yield pd.DataFrame({"bitmap": [bm.tobytes()]})
 
     out = np.zeros(nbytes, dtype=np.uint8)
-    for row in pos_df.mapInPandas(fold, "bitmap binary").collect():
+    pos = pos_df.filter(F.col("pos").isNotNull())
+    for row in pos.mapInPandas(fold, "bitmap binary").collect():
         out |= np.frombuffer(row.bitmap, dtype=np.uint8)
     return out.tobytes()
+
+
+def bloom_bit_test(bitmap: bytes, positions: list[Column]) -> Column:
+    """True when every position's bit is set in ``bitmap``; a NULL
+    position tests false. The test runs in the JVM: the bitmap is a
+    binary literal and each bit is a 1-byte ``substr`` + ``hex`` +
+    ``bitwiseAND``, so no Python worker touches the probed rows. The
+    positions must come from the hash family that built the bitmap."""
+    bm_lit = F.lit(bytearray(bitmap))
+
+    def bit(p: Column) -> Column:
+        at = F.shiftright(p, 3).cast("int") + F.lit(1)
+        byte = F.conv(F.hex(bm_lit.substr(at, F.lit(1))), 16, 10).cast("int")
+        two_pow = F.pow(F.lit(2.0), p.bitwiseAND(7).cast("double")).cast("int")
+        return byte.bitwiseAND(two_pow) != 0
+
+    hit = bit(positions[0])
+    for p in positions[1:]:
+        hit = hit & bit(p)
+    return F.coalesce(hit, F.lit(False))
 
 
 def bloom_probe(
@@ -711,55 +742,16 @@ def bloom_probe(
     m: int = 1 << 20,
     n_hashes: int = 2,
     out_col: str = "maybe_dup",
-    normalize: bool = True,
 ) -> DataFrame:
-    """Probe a prebuilt Bloom bitmap: add ``out_col`` = True when all
-    ``n_hashes`` bit positions of the row's normalized text are set.
-    ``text`` is a column name or Column expression (pass a
-    ``coalesce`` when the column can be null — positions of a null
-    text are null and the probe batch would fail).
-    ``normalize=False`` hashes the column verbatim — the join-key
-    path (:func:`maston_spark.relational.bloom_pruned_join`), where
-    text normalization would corrupt non-text keys; the build side
-    must hash the same way.
-
-    The bitmap ships to executors via closure capture below ~4 MiB
-    and ``SparkContext.broadcast`` above it (one torrent transfer per
-    executor, not per task). Shared by
-    :func:`bloom_incremental_dedup` (one-shot batch dedup) and the
-    streaming curation topology (whose bitmap accretes accepted docs
-    across micro-batches)."""
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql.functions import pandas_udf
-
-    spark = df.sparkSession
-    if m // 8 > (4 << 20):
-        bc = spark.sparkContext.broadcast(bitmap)
-
-        def _bm() -> bytes:
-            return bc.value
-
-    else:
-
-        def _bm() -> bytes:
-            return bitmap
-
-    @pandas_udf("boolean")
-    def bits_set(pos_arrays: pd.Series) -> pd.Series:
-        bm = np.frombuffer(_bm(), dtype=np.uint8)
-        pv = np.stack(pos_arrays.to_numpy())  # (batch, n_hashes) int64
-        hit = ((bm[pv // 8] >> (pv % 8).astype(np.uint8)) & 1).astype(bool)
-        return pd.Series(hit.all(axis=1))
-
+    """Probe a bitmap from :func:`build_bloom_bitmap`: add ``out_col`` =
+    True when all ``n_hashes`` md5 bit positions of the row's
+    normalized text are set (:func:`bloom_bit_test`); a NULL text gives
+    False. ``text`` is a column name or Column expression."""
     tcol = F.col(text) if isinstance(text, str) else text
-    norm = (
-        F.lower(F.trim(F.regexp_replace(tcol, r"\s+", " "))) if normalize else tcol
-    )
+    norm = F.lower(F.trim(F.regexp_replace(tcol, r"\s+", " ")))
     return df.withColumn(
         out_col,
-        bits_set(F.array(*[_bloom_position(norm, i, m) for i in range(n_hashes)])),
+        bloom_bit_test(bitmap, [_bloom_position(norm, i, m) for i in range(n_hashes)]),
     )
 
 
@@ -781,14 +773,11 @@ def bloom_incremental_dedup(
     (exact normalized-content match, via equi-join on the 128-bit
     content hash), and ``false_positive`` (bloom hit, exact miss) so
     the caller can measure the realized FP rate against the sizing
-    formula. At 100 TB the bloom probe prunes the ingest stream with
-    a broadcast fixed-size bitmap and NO shuffle; only the (rare)
-    bloom survivors proceed to the exact-hash confirm join, which is
-    exactly what this operator's two flags decompose.
-
-    The bitmap ships to executors via closure capture below ~4 MiB
-    and `SparkContext.broadcast` above it (one torrent transfer per
-    executor, not per task).
+    formula. The probe is a JVM bit test against a fixed-size bitmap
+    (at most 4 MiB, shipped as a literal), so flagging a new document
+    needs no shuffle; the exact-hash flag is the confirm join. A NULL
+    new text is neither flagged nor a duplicate, and a NULL reference
+    text is skipped.
     """
     bitmap = build_bloom_bitmap(ref_df, text_col=text_col, m=m, n_hashes=n_hashes)
     probed = bloom_probe(

@@ -1878,15 +1878,18 @@ def bloom_pruned_join(
 
     100 TB shape: the filter build collapses the dim's keys to an
     m-bit bitmap via per-task numpy folds (driver traffic
-    n_tasks·m/8 bytes, independent of dim size); the probe is one
-    Arrow-batched vectorized UDF over the fact scan, so fact rows
+    n_tasks·m/8 bytes, independent of dim size); the probe is a JVM
+    bit test over the fact scan
+    (:func:`maston_spark.llm.dedup.bloom_bit_test`), so fact rows
     whose key cannot match never enter the join shuffle. With a 1%
     -selective dim, the fact-side shuffle write drops ~99%·(1−fpr).
     Size m for the dim's key cardinality: fpr ≈
-    (n_hashes·n_keys/m)^n_hashes.
+    (n_hashes·n_keys/m)^n_hashes. ``m`` must be a positive multiple
+    of 8 with m/8 at most 4 MiB (``ValueError`` otherwise, before any
+    job runs).
 
-    Keys hash as their STRING form on both sides (md5 lanes,
-    ``normalize=False`` — no text canonicalization on join keys).
+    Keys hash as their STRING form on both sides (xxhash64 seeded
+    with the hash index, no text canonicalization on join keys).
     When the two key columns have DIFFERENT types, both sides are
     first cast to the type the join itself would coerce them to
     (resolved via Catalyst's own when/otherwise coercion on a
@@ -1895,11 +1898,7 @@ def bloom_pruned_join(
     false NEGATIVES and silently drop rows the plain join matches,
     violating the bit-identity contract. Keys with no common type
     raise. NULL fact keys are dropped (inner-join semantics)."""
-    from maston_spark.llm.dedup import (
-        _bloom_position,
-        bloom_probe,
-        fold_positions_bitmap,
-    )
+    from maston_spark.llm.dedup import bloom_bit_test, fold_positions_bitmap
 
     f_type = fact.schema[fact_key].dataType
     d_type = dim.schema[dim_key].dataType
@@ -1927,71 +1926,24 @@ def bloom_pruned_join(
 
     dk = dim_hash_col.cast("string")
     fk = fact_hash_col.cast("string")
-    fact_nn = fact.filter(F.col(fact_key).isNotNull())
-    if m // 8 <= (4 << 20):
-        # round-17 (guide §4.1 — eliminate the Python boundary; §1.2
-        # step 2): positions from native xxhash64 instead of 2 md5
-        # digests per fact row (the md5 passes dominated the probe —
-        # measured 1.99 s of a 2.85 s query at sf0.1), and the bit
-        # test runs IN the JVM against the bitmap as a binary literal
-        # (1-byte substr + hex + bitwiseAND), so no ArrowEvalPython
-        # node touches the fact scan at all. The filter's hash choice
-        # is internal: zero false negatives holds for any hash applied
-        # identically to both sides, and false positives still wash
-        # out in the real join — the result stays the plain join's,
-        # which the q244 oracle certifies externally. Probe measured
-        # 1.62 → 0.58 s, full query 2.85 → ~1.7 s.
-        def _pos(col_str, i: int):
-            return F.pmod(F.xxhash64(col_str, F.lit(i)), F.lit(m)).cast("long")
 
-        pos = dim.filter(dk.isNotNull()).select(
-            F.explode(
-                F.array(*[_pos(dk, i) for i in range(n_hashes)])
-            ).alias("pos")
-        )
-        bitmap = fold_positions_bitmap(pos, m)
-        bm_lit = F.lit(bytearray(bitmap))
+    # positions from native xxhash64, not md5 digests: the md5 passes
+    # dominated the probe (1.99 s of a 2.85 s query at sf0.1). The hash
+    # choice is internal: zero false negatives holds for any hash
+    # applied identically to both sides, and false positives wash out
+    # in the real join, which the q244 oracle certifies externally.
+    def _pos(col_str, i: int):
+        return F.pmod(F.xxhash64(col_str, F.lit(i)), F.lit(m)).cast("long")
 
-        def bit_test(p):
-            byte = F.conv(
-                F.hex(
-                    bm_lit.substr(
-                        (p / F.lit(8)).cast("int") + F.lit(1), F.lit(1)
-                    )
-                ),
-                16,
-                10,
-            ).cast("int")
-            twopow = F.pow(F.lit(2.0), (p % F.lit(8)).cast("double")).cast(
-                "int"
-            )
-            return byte.bitwiseAND(twopow) != F.lit(0)
-
-        hit = bit_test(_pos(fk, 0))
-        for i in range(1, n_hashes):
-            hit = hit & bit_test(_pos(fk, i))
-        probed = fact_nn.withColumn("__bloom_hit", hit)
-    else:
-        # big filters: a multi-MB binary literal would bloat every
-        # task binary — keep the broadcast bitmap + vectorized-UDF
-        # probe (build and probe MUST share one hash family, so this
-        # branch stays on the md5 positions bloom_probe computes)
-        pos = dim.filter(dk.isNotNull()).select(
-            F.explode(
-                F.array(*[_bloom_position(dk, i, m) for i in range(n_hashes)])
-            ).alias("pos")
-        )
-        bitmap = fold_positions_bitmap(pos, m)
-        probed = bloom_probe(
-            fact_nn,
-            bitmap,
-            text=fk,
-            m=m,
-            n_hashes=n_hashes,
-            out_col="__bloom_hit",
-            normalize=False,
-        )
-    pruned = probed.filter(F.col("__bloom_hit")).drop("__bloom_hit")
+    # xxhash64 skips a NULL input, so NULL dim keys are dropped first
+    pos = dim.filter(dk.isNotNull()).select(
+        F.explode(F.array(*[_pos(dk, i) for i in range(n_hashes)])).alias("pos")
+    )
+    bitmap = fold_positions_bitmap(pos, m)
+    pruned = fact.filter(
+        F.col(fact_key).isNotNull()
+        & bloom_bit_test(bitmap, [_pos(fk, i) for i in range(n_hashes)])
+    )
     if fact_key == dim_key:
         # name-join: one key column out, like the plain on="key" join
         # this operator is a drop-in for (a Column-expression join

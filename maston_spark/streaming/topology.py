@@ -229,13 +229,14 @@ def _curation_rows(prior: DataFrame | None, batch_id: int, retention: int | None
     it never share a row, but a set cannot double-count). Rows carry
     their accepting batch ``b`` (a legacy ``v<N>`` snapshot has none:
     its rows count as accepted by batch N); with retention R only rows
-    with ``b >= batch_id - R`` stay visible."""
+    with ``b >= batch_id - R`` stay visible. The Bloom ``positions``
+    column of segments written by older versions is dropped."""
     if prior is None:
         return None
     b = F.col("__seg")
     if "b" in prior.columns:
         b = F.coalesce(F.col("b"), b)
-    st = prior.withColumn("b", b.cast("long")).drop("__seg")
+    st = prior.withColumn("b", b.cast("long")).drop("__seg", "positions")
     if retention is not None:
         st = st.filter(F.col("b") >= F.lit(batch_id - retention))
     return st.dropDuplicates(["__h"])
@@ -509,8 +510,6 @@ def curation_topology(
     id_col: str = "doc_id",
     text_col: str = "text",
     gate_kwargs: dict | None = None,
-    bloom_m: int = 1 << 20,
-    bloom_hashes: int = 2,
     state_dir: str | None = "auto",
     trigger: dict | None = None,
     on_metrics: Callable[[int, dict[str, int]], None] | None = None,
@@ -533,18 +532,17 @@ def curation_topology(
        rule failures become ``err`` rows
        (``QualityGateRejected``, ordered fail reasons in the message);
     3. incremental dedup against the historical corpus AND everything
-       this stream already accepted: Bloom-bitmap probe (fixed-size,
-       executor-local — no shuffle for the clean majority) →
-       exact-confirm hash join for probe hits → within-batch
-       first-copy-wins; duplicates become ``err`` rows
-       (``DuplicateRecord``);
+       this stream already accepted: one hash join of the batch's
+       normalized content hashes against the reference hashes and the
+       durable state, then within-batch first-copy-wins; duplicates
+       become ``err`` rows (``DuplicateRecord``);
     4. the reference fan-out (:func:`maston_spark.sinks.split_sink_batch`):
        survivors serialize to the valid sink, every reject reaches the
        DLQ with the 11 ``maston.error.*`` provenance headers — one
        error channel for parse, quality, and duplicate rejects alike.
 
-    Cross-batch dedup state is DURABLE: accepted (content-hash,
-    bloom positions[, signature, bands]) rows live in a SEGMENTED
+    Cross-batch dedup state is DURABLE: accepted (content-hash[,
+    signature, bands]) rows live in a SEGMENTED
     parquet table under ``state_dir`` (default
     ``<checkpoint>/curation_state``; the rule of :func:`_segment_log`).
     Each batch appends ONE delta segment holding only its own accepted
@@ -559,19 +557,16 @@ def curation_topology(
     batch probed — the documented tradeoff being recall, not
     correctness: a duplicate of content accepted more than R batches
     ago is re-accepted (the contract of any TTL'd dedup state). The
-    driver-resident bitmap accretes each batch's
-    accepted positions via the same distributed per-partition OR fold
-    as the reference-corpus build, and is replayed from the state
-    table on restart — a doc accepted before a crash still suppresses
-    its copies after recovery.
+    segments are the whole dedup state, so a doc accepted before a
+    crash still suppresses its copies after a restart. Segments
+    written with the older ``positions`` column (Bloom bit positions)
+    are read as they are, and a compacted run drops that column.
 
     Scale shape: the reference corpus is touched ONCE at topology
-    start (bitmap build + exact-hash table, persisted); per batch the
-    Bloom probe is a fixed ``m/8``-byte broadcast with no false
-    negatives, so only probe-positive rows reach the hash join, and
-    the join's right side is the hash table — hashes, never text. The
-    bitmap never grows (FP rate, not memory, is what degrades as
-    accepted docs accrete — size ``m`` for the corpus lifetime).
+    start (an exact-hash table, persisted); per batch the hash join's
+    right side is that table plus the state's hashes — hashes, never
+    text (topology/TopologyBuilder.java:66-69: one exact lookup in the
+    keyed store per record).
 
     With ``neardup=True`` stage 3 also rejects NEAR-duplicates
     (``NearDuplicateRecord``, reason ``near_duplicate``): each doc
@@ -599,21 +594,12 @@ def curation_topology(
     Parity anchors: topology/TopologyBuilder.java:30-50 (validate →
     branch → DLQ shape), error/KafkaErrorToHeaderBuilder.java:16-26
     (headers); the curation stages follow Rae et al. 2021 (gate) and
-    the Bloom-prefilter incremental dedup of
-    :func:`maston_spark.llm.dedup.bloom_incremental_dedup`; the
-    near-dup stage composes the q41/q152 MinHash-LSH pipeline
+    the exact content hash of
+    :func:`maston_spark.llm.dedup.content_hash`; the near-dup stage composes the q41/q152 MinHash-LSH pipeline
     (Broder 1997) incrementally.
     """
-    import numpy as np
-
     from maston_spark import errors as E
-    from maston_spark.llm.dedup import (
-        _bloom_position,
-        bloom_probe,
-        build_bloom_bitmap,
-        content_hash,
-        fold_positions_bitmap,
-    )
+    from maston_spark.llm.dedup import content_hash
     from maston_spark.llm.text import gopher_gate
     from maston_spark.sinks import split_sink_batch
     from maston_spark.validated import ERR, _mk_err
@@ -622,28 +608,12 @@ def curation_topology(
     validated = _parse_validated(source, value_col, value_schema, value_format)
     sdir = _state_dir(source, checkpoint, state_dir, "curation_state")
 
-    # reference-corpus structures build ONCE at topology start
-    bitmap = np.frombuffer(
-        build_bloom_bitmap(
-            ref_corpus, text_col=text_col, m=bloom_m, n_hashes=bloom_hashes
-        ),
-        dtype=np.uint8,
-    ).copy()
+    # the reference-corpus hash table builds ONCE at topology start
     ref_hashes = (
         ref_corpus.select(content_hash(F.col(text_col)).alias("__h"))
         .distinct()
         .persist()
     )
-    segs = _state_segments(spark, sdir) if sdir is not None else []
-    if segs:
-        # restart: replay the bloom positions of every stored row, as
-        # the running bitmap kept them. Covered or aged-out rows only
-        # add probe positives, which the exact-hash confirm settles.
-        pos = spark.read.parquet(*[f"{sdir}/{k}{i}" for k, i in segs]).select(
-            F.explode("positions").alias("pos")
-        )
-        bitmap |= np.frombuffer(fold_positions_bitmap(pos, bloom_m), dtype=np.uint8)
-    state = {"bitmap": bitmap}
 
     # ---- near-dup machinery (MinHash-LSH, incremental) ----
     # construction + confirm SHARED with the batch operator
@@ -684,13 +654,9 @@ def curation_topology(
 
     id_of = F.col(OK)[id_col]
     text_of = F.coalesce(F.col(OK)[text_col], F.lit(""))
-    norm = F.lower(F.trim(F.regexp_replace(text_of, r"\s+", " ")))
-    positions = F.array(
-        *[_bloom_position(norm, i, bloom_m) for i in range(bloom_hashes)]
-    )
     helper_cols = [
-        "__gid", "__keep", "__reasons", "__maybe", "__h", "__hh", "__hit",
-        "__elig", "__rn", "__positions", "__near",
+        "__gid", "__keep", "__reasons", "__h", "__hh", "__hit", "__elig",
+        "__rn", "__near",
     ]
 
     def fn(batch_df: DataFrame, batch_id: int) -> None:
@@ -725,17 +691,11 @@ def curation_topology(
                 F.col("keep").alias("__keep"),
                 F.col("fail_reasons").alias("__reasons"),
             )
-            j = batch_df.join(verdict, gid == F.col("__gid"), "left")
-            probed = bloom_probe(
-                j,
-                bytes(state["bitmap"]),
-                text=text_of,
-                m=bloom_m,
-                n_hashes=bloom_hashes,
-                out_col="__maybe",
+            j = batch_df.join(
+                verdict, gid == F.col("__gid"), "left"
             ).withColumn("__h", content_hash(text_of))
 
-            # exact-confirm table: historical corpus + durable state.
+            # the dedup table: historical corpus + durable state.
             # A batch reads only strictly-prior segments: seeding from
             # a failed attempt's own segment would reclassify every doc
             # it accepted as a DuplicateRecord. A retried batch
@@ -748,14 +708,7 @@ def curation_topology(
             hist_hits = hist.select(
                 F.col("__h").alias("__hh"), F.lit(True).alias("__hit")
             )
-            # equi-join on the hash, gated on the bloom verdict — only
-            # probe-positive rows can match (bloom has no false
-            # negatives, so this is exact overall)
-            j2 = probed.join(
-                hist_hits,
-                (F.col("__h") == F.col("__hh")) & F.col("__maybe"),
-                "left",
-            )
+            j2 = j.join(hist_hits, F.col("__h") == F.col("__hh"), "left")
             elig = (
                 F.col(ERR).isNull()
                 & F.col(OK).isNotNull()
@@ -905,7 +858,7 @@ def curation_topology(
 
             accepted = (
                 out.filter(F.col(ERR).isNull() & F.col(OK).isNotNull())
-                .select("__gid", "__h", positions.alias("positions"))
+                .select("__gid", "__h")
                 .dropDuplicates(["__h"])
             )
             if neardup:
@@ -971,16 +924,6 @@ def curation_topology(
                     - counts["duplicate"]
                     - counts["near_duplicate"]
                 )
-            # accrete this batch's accepted positions into the probe
-            # bitmap — same distributed per-partition OR as the build
-            state["bitmap"] = state["bitmap"] | np.frombuffer(
-                fold_positions_bitmap(
-                    out.filter(F.col(ERR).isNull() & F.col(OK).isNotNull())
-                    .select(F.explode(positions).alias("pos")),
-                    bloom_m,
-                ),
-                dtype=np.uint8,
-            )
             if on_metrics is not None:
                 on_metrics(batch_id, counts)
         finally:

@@ -717,13 +717,17 @@ def test_tfidf_top_terms_golden(spark):
 def test_bloom_incremental_dedup_no_false_negatives(spark):
     from maston_spark.llm.dedup import bloom_incremental_dedup
 
-    ref = spark.createDataFrame(CORPUS)
+    schema = "doc_id long, text string"
+    # a NULL reference text is skipped by the build
+    ref = spark.createDataFrame(CORPUS + [Row(doc_id=4, text=None)], schema)
     new = spark.createDataFrame(
         [
             Row(doc_id=100, text=CORPUS[0].text),            # exact dup
             Row(doc_id=101, text="  THE quick   brown fox jumps over the lazy dog near the river bank "),  # dup after normalization
             Row(doc_id=102, text="entirely novel document text here"),
-        ]
+            Row(doc_id=103, text=None),
+        ],
+        schema,
     )
     out = {r.doc_id: r for r in bloom_incremental_dedup(new, ref, m=1 << 20).collect()}
     # zero false negatives: every exact dup is flagged by BOTH signals
@@ -731,6 +735,11 @@ def test_bloom_incremental_dedup_no_false_negatives(spark):
     assert out[101].maybe_dup and out[101].is_dup  # normalization applied
     # big m -> no false positives at this scale
     assert not out[102].maybe_dup and not out[102].is_dup
+    # a NULL new text is no duplicate of anything, the NULL reference
+    # text included
+    assert (out[103].maybe_dup, out[103].is_dup, out[103].false_positive) == (
+        False, False, False,
+    )
 
 
 def test_bloom_bitmap_matches_position_set_semantics(spark):

@@ -1354,6 +1354,26 @@ def test_bloom_pruned_join_coerces_divergent_key_types(spark):
     assert got == want and len(got) == 140
 
 
+@pytest.mark.parametrize("m", [1001, 0, ((4 << 20) + 1) * 8])
+def test_bloom_pruned_join_rejects_bad_filter_size_before_any_job(spark, m):
+    """The one Bloom bound: m must be a positive multiple of 8 with
+    m/8 at most 4 MiB. m=1001 used to index past the 125-byte bitmap
+    inside a Python worker; now every bad size raises ValueError on
+    the driver and no Spark job runs."""
+    from maston_spark.relational import bloom_pruned_join
+
+    fact = spark.createDataFrame([(i, i) for i in range(10)], "k int, v int")
+    dim = spark.createDataFrame([(1, "a")], "dk int, dname string")
+    sc = spark.sparkContext
+    sc.setJobGroup("bloom-bad-m", "bloom bound check")
+    try:
+        with pytest.raises(ValueError, match="multiple of 8"):
+            bloom_pruned_join(fact, dim, "k", "dk", m=m)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("bloom-bad-m")) == []
+
+
 def test_q244_revenue_with_trailing_zero_matches_oracle(spark, tmp_path):
     """q244's revenue ends in 0 at the 4th decimal (101.1200 = 2 x
     50.56): the DuckDB oracle's DECIMAL reaches pandas as the double

@@ -316,7 +316,7 @@ def test_curation_topology_multi_batch_golden(spark, cleanup):
     """The full curation stream through 4 micro-batches: parse
     failures, quality-gate rejects, historical duplicates,
     CROSS-BATCH duplicates (doc accepted in batch 0 suppresses its
-    copy arriving in batch 2 — the durable bloom+state path), and
+    copy arriving in batch 2 — the durable state path), and
     within-batch first-copy-wins — every reject on the one error
     channel with provenance headers, survivors on the valid sink.
     Golden style mirrors VavrKStreamWithDeltaTopologyTest.java:263-331."""
@@ -439,8 +439,8 @@ def test_curation_topology_duplicate_ids_within_batch(spark, cleanup):
 def test_curation_topology_state_survives_restart(spark, cleanup):
     """Stop the stream after batch 0, start a NEW query on the same
     checkpoint: a copy of the batch-0-accepted doc arriving after the
-    restart is still suppressed — the bitmap is replayed from the
-    durable state table, not just driver memory."""
+    restart is still suppressed — the durable segment log, not driver
+    memory, holds the dedup state."""
     from maston_spark.streaming.topology import curation_topology
 
     a_text = "the quick brown fox jumps over the lazy dog"
@@ -480,8 +480,8 @@ def test_curation_topology_state_survives_restart(spark, cleanup):
     assert [r.ok.doc_id for r in sunk["valid"]] == [0]
 
     # second file lands while the stream is DOWN; a fresh query (new
-    # curation_topology instance → fresh driver bitmap) must rebuild
-    # suppression state from the parquet state table
+    # curation_topology instance) must read suppression state from
+    # the parquet state table
     spark.createDataFrame([Row(value=_doc(9, a_text))]).coalesce(1).write.mode(
         "overwrite"
     ).parquet(src + "/b1")
@@ -1680,6 +1680,71 @@ def test_curation_state_write_is_o_batch_and_compacts(spark, cleanup):
     # the union of live segments is the full accepted set, exactly once
     st = _read_curation_state(spark, sdir, 10**9, None)
     assert st.count() == len(texts)
+
+
+def test_curation_restart_over_legacy_positions_segments(spark, cleanup):
+    """Segments written by older versions carry a Bloom ``positions``
+    column next to ``__h`` and ``b``. A restart over them still
+    rejects a copy of a previously accepted doc, and the first
+    compacted run drops the legacy column: ``c<B>`` holds only
+    ``__h`` and ``b``."""
+    from pyspark.sql import functions as F
+
+    from maston_spark.streaming.topology import curation_topology
+
+    a_text = "the quick brown fox jumps over the lazy dog"
+    b_text = "sphinx of black quartz judge my vow"
+    chk = _tmp()
+    src = tempfile.mkdtemp(prefix="replay_src_")
+    cleanup.extend([src, chk])
+    sdir = chk + "/curation_state"
+    ref = spark.createDataFrame([], DOC_SCHEMA)
+    sunk: dict[str, list] = {"valid": [], "error": []}
+
+    def start():
+        stream = (
+            spark.readStream.schema("value string")
+            .option("maxFilesPerTrigger", "1")
+            .parquet(src + "/b*")
+        )
+        return curation_topology(
+            stream,
+            DOC_SCHEMA,
+            ref,
+            app_id="t-curation-legacy",
+            checkpoint=chk,
+            write_valid=lambda df: sunk["valid"].extend(df.collect()),
+            write_error=lambda df: sunk["error"].extend(df.collect()),
+            gate_kwargs=GATE,
+            compact_every=2,
+        )
+
+    def run(name, docs):
+        spark.createDataFrame([Row(value=_doc(i, t)) for i, t in docs]).coalesce(
+            1
+        ).write.mode("overwrite").parquet(f"{src}/{name}")
+        q = start()
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+    run("b0", [(0, a_text)])
+    assert _live_segments(spark, chk) == [("d", 0)]
+    # rewrite d0 in the older layout: (__h, positions, b)
+    rows = [(r["__h"], [7, 11], r["b"]) for r in spark.read.parquet(f"{sdir}/d0").collect()]
+    spark.createDataFrame(
+        rows, "__h string, positions array<bigint>, b bigint"
+    ).coalesce(1).write.mode("overwrite").parquet(f"{sdir}/d0")
+
+    run("b1", [(9, a_text), (10, b_text)])
+    assert sorted(r.ok.doc_id for r in sunk["valid"]) == [0, 10]
+    assert [r.ok.doc_id for r in sunk["error"]] == [9]
+    assert _hdr(sunk["error"][0], "maston.error.exception.class") == "DuplicateRecord"
+    assert _live_segments(spark, chk)[-1] == ("c", 1)
+    c1 = spark.read.parquet(f"{sdir}/c1")
+    assert sorted(c1.columns) == ["__h", "b"]
+    assert sorted(r.b for r in c1.select(F.col("b")).collect()) == [0, 1]
 
 
 def test_curation_state_retention_ages_out_old_content(spark, cleanup):

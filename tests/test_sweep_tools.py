@@ -151,3 +151,30 @@ class C:
     y = 1
 '''
     assert code_lines(src) == 8
+
+
+def test_stream_bench_merge_keeps_rows_a_partial_run_did_not_touch():
+    """A partial ``tools/bench_streaming.py`` run replaces only the rows
+    of the topologies it ran; the other rows keep their own batch
+    counts, and the record has no run-wide batch count to contradict
+    them."""
+    from tools.bench_streaming import merge_record
+
+    prior = {
+        "metric": "streaming_topology_bench",
+        "n_batches": 10,
+        "loadavg_start": [1.0, 1.0, 1.0],
+        "results": [
+            {"topology": "delta", "batches": 50, "wall_last_sec": 3.0},
+            {"topology": "curation", "batches": 10, "wall_last_sec": 7.0},
+        ],
+    }
+    run = [{"topology": "curation", "batches": 4, "wall_last_sec": 5.0}]
+    rec = merge_record(prior, run, [0.5, 0.5, 0.5])
+    assert rec["results"] == [
+        {"topology": "delta", "batches": 50, "wall_last_sec": 3.0},
+        {"topology": "curation", "batches": 4, "wall_last_sec": 5.0},
+    ]
+    assert "n_batches" not in rec
+    assert rec["loadavg_start"] == [0.5, 0.5, 0.5]
+    assert merge_record(None, run, None)["results"] == run

@@ -684,28 +684,33 @@ def main():
         )
     here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     out_path = os.path.join(here, "_stream_bench.json")
-    # merge with prior record (the scale_curve discipline): a
-    # partial re-run of named topologies must not clobber the rows
-    # of the ones it didn't run
-    merged: dict = {}
+    prior = None
     if os.path.exists(out_path):
         try:
             with open(out_path) as f:
-                for r in json.load(f).get("results", []):
-                    merged[r.get("topology")] = r
-        except Exception:
-            merged = {}
-    for r in results:
-        merged[r["topology"]] = r
-    record = {
-        "metric": "streaming_topology_bench",
-        "n_batches": n_batches,
-        "loadavg_start": load,
-        "results": list(merged.values()),
-    }
+                prior = json.load(f)
+        except ValueError:
+            prior = None
+    record = merge_record(prior, results, load)
     with open(out_path, "w") as f:
         json.dump(record, f, indent=1)
     print(json.dumps(record))
+
+
+def merge_record(prior: dict | None, results: list[dict], load) -> dict:
+    """The ``_stream_bench.json`` record after a run: ``results`` replace
+    the prior rows of the same topology and every other prior row stays
+    (a partial re-run of named topologies must not clobber the rest).
+    Each row carries its own ``batches``, so the record has no run-wide
+    batch count; ``loadavg_start`` is the load when this run started."""
+    merged = {r.get("topology"): r for r in (prior or {}).get("results", [])}
+    for r in results:
+        merged[r["topology"]] = r
+    return {
+        "metric": "streaming_topology_bench",
+        "loadavg_start": load,
+        "results": list(merged.values()),
+    }
 
 
 if __name__ == "__main__":
