@@ -199,54 +199,56 @@ def assortativity(
     :func:`triangle_stats`' transitivity before trusting
     connected-component clusters.
 
-    Exact shape: one degree aggregation (|V| rows), two broadcast-
-    free equi-joins of the edge list against it, and one
-    combiner-reduced moment fold over the SYMMETRIZED endpoint pairs
-    (each undirected edge contributes both orientations, the
-    standard convention) — Σxy, Σx, Σx² all integer in
-    decimal(38,0), then
-    ``r = (nΣxy − ΣxΣy) / sqrt((nΣx²−(Σx)²)(nΣy²−(Σy)²))`` closes
-    with one correctly-rounded sqrt (round 6; NULL when a factor is
-    0 — a degree-regular graph has undefined assortativity)."""
-    from maston_spark.caching import scoped_persist
-
-    e = scoped_persist(
+    Exact shape: over the SYMMETRIZED endpoint pairs (each undirected
+    edge contributes both orientations, the standard convention) the
+    pair count is Σd, Σx = Σd² and Σx² = Σd³, so all three fold from
+    the |V|-row degree table alone. Only Σxy = 2·Σ₍ᵤ,ᵥ₎∈E dᵤdᵥ needs
+    the edge list joined to the degrees, once per endpoint. Every
+    moment is an exact integer in decimal(38,0) (``d`` is cast before
+    it is multiplied: d³ overflows bigint past d ≈ 2.1M); then
+    ``r = (nΣxy − ΣxΣy) / sqrt((nΣx²−(Σx)²)(nΣy²−(Σy)²))`` with
+    Σy = Σx and Σy² = Σx² closes as one quotient with no sqrt
+    (round 6; NULL when the variance is 0 — a degree-regular graph has
+    undefined assortativity). Duplicate edges in either orientation,
+    self-loops and NULL endpoints are dropped by the one least/greatest
+    ``distinct``, so callers need no dedupe of their own."""
+    # A NULL endpoint fails `u != v`. The not-null filters after it
+    # restate what the joins below infer, for every consumer alike, so
+    # all consumers plan the same exchanges: the edge list is read and
+    # de-duplicated once, and the degree table aggregated once.
+    e = (
         edges.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
-        .filter(F.col("u").isNotNull() & F.col("v").isNotNull())
         .filter(F.col("u") != F.col("v"))
-        .select(
-            F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
-        )
+        .select(F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v"))
         .distinct()
+        .filter(F.col("u").isNotNull() & F.col("v").isNotNull())
     )
     deg = (
-        e.select(F.col("u").alias("n"))
-        .unionAll(e.select(F.col("v").alias("n")))
+        e.select(F.explode(F.array("u", "v")).alias("n"))
+        .filter(F.col("n").isNotNull())
         .groupBy("n")
-        .agg(F.count(F.lit(1)).cast("long").alias("d"))
+        .agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("d"))
     )
-    sym = e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    du = deg.select(F.col("n").alias("u"), F.col("d").alias("__dx"))
-    dv = deg.select(F.col("n").alias("v"), F.col("d").alias("__dy"))
-    pairs = sym.join(du, "u").join(dv, "v")
-    dec = "decimal(38,0)"
-    agg = pairs.agg(
-        F.count(F.lit(1)).cast("long").alias("__m2"),
-        F.sum(F.col("__dx").cast(dec)).alias("__sx"),
-        F.sum((F.col("__dx") * F.col("__dy")).cast(dec)).alias("__sxy"),
-        F.sum((F.col("__dx") * F.col("__dx")).cast(dec)).alias("__sxx"),
+    node = deg.agg(
+        F.count(F.lit(1)).cast("long").alias("__nv"),
+        F.sum(F.col("d") * F.col("d")).alias("__sx"),
+        F.sum(F.col("d") * F.col("d") * F.col("d")).alias("__sxx"),
     )
-    nodes = deg.agg(F.count(F.lit(1)).cast("long").alias("__nv"))
-    n = F.col("__m2").cast("double")
+    du = deg.select(F.col("n").alias("u"), F.col("d").alias("__du"))
+    dv = deg.select(F.col("n").alias("v"), F.col("d").alias("__dv"))
+    edge = e.join(du, "u").join(dv, "v").agg(
+        F.count(F.lit(1)).cast("long").alias("__ne"),
+        F.sum(F.col("__du") * F.col("__dv")).alias("__suv"),
+    )
+    n = (F.col("__ne") * 2).cast("double")
     sx = F.col("__sx").cast("double")
-    sxy = F.col("__sxy").cast("double")
+    sxy = (F.col("__suv") * 2).cast("double")
     sxx = F.col("__sxx").cast("double")
-    # symmetrized: Σy = Σx and Σy² = Σx² by construction
     num = n * sxy - sx * sx
     den = n * sxx - sx * sx
-    return agg.join(F.broadcast(nodes)).select(
+    return edge.join(F.broadcast(node)).select(
         F.col("__nv").alias("n_nodes"),
-        (F.col("__m2") / F.lit(2)).cast("long").alias("n_edges"),
+        F.col("__ne").alias("n_edges"),
         F.when(den > 0, F.round(num / den, 6)).alias("r"),
     )
 

@@ -4600,20 +4600,22 @@ def q273_assortativity(spark, sf_dir):
     """Degree assortativity of the part↔supplier supply graph
     (disjoint id spaces; Newman 2002 Pearson-over-edges): do
     high-degree parts source from high-degree suppliers? The
-    structural fingerprint beside q172's transitivity — symmetrized
-    integer moment folds, one exact-rational close (the symmetric
-    form needs NO sqrt). See
+    structural fingerprint beside q172's transitivity. The raw
+    lineitem pairs go in as they are: the operator's one least/greatest
+    ``distinct`` drops repeated pairs and NULL endpoints. The
+    symmetrized moments fold as exact integers, three from the degree
+    table alone and Σxy from one edge ⋈ degree join, and close as one
+    exact-rational quotient (the symmetric form needs NO sqrt). See
     :func:`maston_spark.graph.assortativity`."""
     from maston_spark.graph import assortativity
 
-    li = load_table(spark, sf_dir, "lineitem").filter(
-        F.col("l_partkey").isNotNull() & F.col("l_suppkey").isNotNull()
+    li = load_table(spark, sf_dir, "lineitem")
+    return assortativity(
+        li.select(
+            F.col("l_partkey").alias("id_a"),
+            (F.lit(1000000000) + F.col("l_suppkey")).alias("id_b"),
+        )
     )
-    edges = li.select(
-        F.col("l_partkey").alias("id_a"),
-        (F.lit(1000000000) + F.col("l_suppkey")).alias("id_b"),
-    ).distinct()
-    return assortativity(edges)
 
 
 @query(

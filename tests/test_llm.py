@@ -2477,6 +2477,16 @@ def test_assortativity_known_graphs(spark):
     sxx = sum(p[0] ** 2 for p in pts)
     want = (n * sxy - sx * sx) / (n * sxx - sx * sx)
     assert rp.r == round(want, 6)
+    # the same path with repeated edges in both orientations, a
+    # self-loop and NULL endpoints: the operator's own dedupe gives
+    # the clean list's row
+    dirty = spark.createDataFrame(
+        [(0, 1), (1, 0), (1, 2), (2, 1), (2, 1), (2, 3), (3, 2), (0, 1),
+         (2, 2), (None, 1), (3, None), (None, None)],
+        "id_a int, id_b int",
+    )
+    [rd] = assortativity(dirty).collect()
+    assert rd == rp
     # a clique is degree-regular -> zero variance -> NULL
     k4 = spark.createDataFrame(
         [(a, b) for a in range(4) for b in range(a + 1, 4)], "id_a int, id_b int"

@@ -525,3 +525,16 @@ def test_encoding_advisor_windows_are_pid_partitioned(spark, sf_dir):
     assert wins, "expected the run-count Window in the plan:\n" + p
     for spec in wins:
         assert "column" in spec and "__pid" in spec, (spec, p)
+
+
+def test_assortativity_folds_moments_from_one_edge_scan(spark, sf_dir, qs):
+    """q273 symmetrizes no edge list (no Union) and persists nothing
+    (no InMemoryRelation): three moments fold from the degree table
+    and Σxy from one edge ⋈ degree join. Every consumer of the edge
+    list reads one exchange, so lineitem is scanned once."""
+    df = qs["q273_assortativity"](spark, sf_dir)
+    p = optimized_of(df)
+    assert "Union" not in p and "InMemoryRelation" not in p, p
+    df.collect()
+    final = plan_of(df).split("== Initial Plan ==")[0]
+    assert final.count("FileScan parquet") == 1, final

@@ -105,3 +105,23 @@ def test_daemon_shim_keeps_stock_path_without_same_version_pyspark(
     monkeypatch.setattr(sys, "path_importer_cache", dict(sys.path_importer_cache))
     assert not strip_spark_archives()
     assert sys.path == path
+
+
+def test_codegen_cache_keeps_a_query_compiled_across_other_plans(spark):
+    """A query's generated classes survive ~150 other distinct plans
+    in between, so re-running it compiles nothing."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def first():
+        return spark.range(10).selectExpr("id * 7 AS x").filter("x % 2 = 0").collect()
+
+    first()
+    compiled = metrics.METRIC_COMPILATION_TIME().getCount()
+    first()
+    assert metrics.METRIC_COMPILATION_TIME().getCount() == compiled, "a warm re-run compiled"
+    for i in range(150):
+        spark.range(2).selectExpr(f"id + {i + 1000}").collect()
+    assert metrics.METRIC_COMPILATION_TIME().getCount() > compiled, "the other plans compiled"
+    compiled = metrics.METRIC_COMPILATION_TIME().getCount()
+    first()
+    assert metrics.METRIC_COMPILATION_TIME().getCount() == compiled
